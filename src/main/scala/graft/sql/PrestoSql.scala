@@ -681,21 +681,46 @@ object PrestoSql {
   // contract over the one shared SparkSession.
   //
   // Concurrency model (one SQLConf per SparkSession, many protocol
-  // clients): the overlay -> execute-synchronous-part -> compute-headers
-  // span holds `clientStateLock`, so two statements never interleave
-  // their overlay windows; the response headers come from the
-  // statement's own RECORDED effects (the SET/RESET/PREPARE/DEALLOCATE
-  // handlers report what they did via a thread-local recorder), never
-  // from diffing the shared maps — so one client's headers can never
-  // carry another client's state. `restore()` runs after the result
-  // drain (session props span execution, like the reference's session
-  // lifetime) and is TARGETED: it reverts only the keys THIS statement
-  // touched, and only if they still hold the value this statement left
-  // (a later writer wins). Same-key overlays with overlapping drain
-  // windows ride per-key value stacks (`overlayStacks`): a restorer
-  // reinstates the most recent still-live overlay — or, last one out,
-  // the true pre-overlay server default — never another client's
-  // transient.
+  // clients). `clientStateLock` is a shared/exclusive lock over the
+  // statement's synchronous part (overlay -> analysis and eager
+  // execution -> response headers); the reference builds a fresh Session
+  // per request (QuerySessionSupplier), so only statements that touch
+  // the shared session state need the exclusive side:
+  //
+  //  - EXCLUSIVE: every statement that carries client state (an
+  //    X-Presto-Session / Prepared-Statement / Transaction-Id / Catalog /
+  //    Schema / Time-Zone / Language header), that has per-user
+  //    SessionDefaults (applied to the shared conf), or that runs while a
+  //    transaction is active; and every SET, RESET, PREPARE, DEALLOCATE,
+  //    USE, START TRANSACTION, COMMIT, ROLLBACK, EXECUTE, CTAS, other
+  //    DDL, DELETE, EXPLAIN, system-table read, or unclassifiable text.
+  //    Two such statements never interleave their overlay windows; the
+  //    response headers come from the statement's own RECORDED effects
+  //    (the SET/RESET/PREPARE/DEALLOCATE handlers report what they did
+  //    via a thread-local recorder), never from diffing the shared maps,
+  //    so one client's headers can never carry another client's state.
+  //    `restore()` runs after the result drain (session props span
+  //    execution, like the reference's session lifetime) and is
+  //    TARGETED: it reverts only the keys THIS statement touched, and
+  //    only if they still hold the value this statement left (a later
+  //    writer wins). Same-key overlays with overlapping drain windows
+  //    ride per-key value stacks (`overlayStacks`): a restorer
+  //    reinstates the most recent still-live overlay, or, last one out,
+  //    the true pre-overlay server default, never another client's
+  //    transient.
+  //  - SHARED, plain reads: SELECT / WITH / VALUES / SHOW / DESCRIBE with
+  //    none of the above. They touch no client state, so their
+  //    `restore()` only ends the statement (`finish`), without the lock.
+  //  - SHARED, appends (INSERT INTO t ...): they also hold `appendLock`
+  //    exclusively across their whole eager execution (analysis, commit,
+  //    refreshTable), so commits stay one at a time.
+  //
+  // A plain read holds `appendLock` shared during its analysis unless
+  // every relation its parsed plan names is a temp view over files only
+  // (the fixture tables). A catalog table's relation is cached at
+  // analysis, and Spark's relation cache drops an invalidate that
+  // arrives while a load is running: a read analyzing mid-commit could
+  // list half a batch or cache the pre-commit file list for good.
 
   final case class ClientStatementResult(
       df: DataFrame,
@@ -709,7 +734,66 @@ object PrestoSql {
       setSchema: Option[String],
       restore: () => Unit)
 
-  private val clientStateLock = new java.util.concurrent.locks.ReentrantLock()
+  private val clientStateLock = new java.util.concurrent.locks.ReentrantReadWriteLock()
+  private val appendLock = new java.util.concurrent.locks.ReentrantReadWriteLock()
+
+  /** How a statement shares the client-state window (see above). */
+  private sealed trait Window
+  private case object Exclusive extends Window
+  private final case class Read(appendShared: Boolean) extends Window
+  private case object Append extends Window
+
+  private val insertIntoRe = """(?is)\s*INSERT\s+INTO\s.*""".r
+
+  /** The window of a statement that carries no client-state header; run
+    * under the shared lock. */
+  private def windowOf(spark: SparkSession, text: String, user: String,
+      source: String): Window = {
+    val effectiveUser = Option(user).getOrElse(AccessControl.principal(spark))
+    if (SessionDefaults.defaultsFor(spark, effectiveUser, source).nonEmpty ||
+        graft.operators.TransactionOps.activeTransaction(spark).nonEmpty) Exclusive
+    else ResourceGroups.queryTypeOf(text) match {
+      case Some("INSERT") if insertIntoRe.matches(text) => Append
+      case Some(kind @ ("SELECT" | "DESCRIBE"))
+          if !SystemTables.referencesSystemTables(text) => readWindow(spark, text, kind)
+      case _ => Exclusive
+    }
+  }
+
+  /** A read needs the append lock unless every relation it names is a
+    * temp view over files; a read whose text hides a write is exclusive. */
+  private def readWindow(spark: SparkSession, text: String, kind: String): Window = text match {
+    case showTablesRe(_, _, _) | showSchemasRe(_, _) | showCatalogsRe(_) |
+        showFunctionsRe() | showSessionRe() => Read(appendShared = false)
+    case showColumnsRe(table) => Read(!filesOnlyTempView(spark, table))
+    case _ if kind == "DESCRIBE" => Read(appendShared = true)
+    case _ =>
+      import org.apache.spark.sql.catalyst.analysis.UnresolvedRelation
+      import org.apache.spark.sql.catalyst.plans.logical.{Command, InsertIntoStatement, UnresolvedWith}
+      scala.util.Try(spark.sessionState.sqlParser.parsePlan(rewriteFull(text))).toOption match {
+        case None => Read(appendShared = true)
+        case Some(plan) =>
+          val nodes = plan.collectWithSubqueries { case p => p }
+          if (nodes.exists { case _: Command | _: InsertIntoStatement => true; case _ => false })
+            Exclusive
+          else Read(nodes.exists {
+            case _: UnresolvedWith => true
+            case r: UnresolvedRelation =>
+              r.multipartIdentifier.length != 1 ||
+                !filesOnlyTempView(spark, r.multipartIdentifier.head)
+            case _ => false
+          })
+      }
+  }
+
+  /** A temp view whose plan reads only files (no catalog table). */
+  private def filesOnlyTempView(spark: SparkSession, name: String): Boolean = {
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+    spark.sessionState.catalog.getTempView(name).exists(_.child.collectLeaves().forall {
+      case l: LogicalRelation => l.catalogTable.isEmpty && l.relation.isInstanceOf[HadoopFsRelation]
+      case _ => false
+    })
+  }
 
   // Per-key overlay value stacks: when two clients overlay the SAME
   // session key with overlapping drain windows, the FIRST overlayer's
@@ -721,7 +805,7 @@ object PrestoSql {
   // closes the residue the pre-r12 comment documented, which a
   // zone-carrying header turns from cosmetic into wrong answers (a
   // polluted session zone changes every later client's renderings).
-  // Mutated only under clientStateLock.
+  // Mutated only under clientStateLock's exclusive side.
   private val overlayStacks =
     java.util.Collections.synchronizedMap(
       new java.util.WeakHashMap[SparkSession, scala.collection.mutable.Map[
@@ -776,9 +860,43 @@ object PrestoSql {
       user: String = null,
       headerCatalog: Option[String] = None,
       headerSchema: Option[String] = None): ClientStatementResult = {
+    val carriesState = headerProps.nonEmpty || headerStmts.nonEmpty ||
+      headerTxn.nonEmpty || headerCatalog.nonEmpty || headerSchema.nonEmpty
+    if (!carriesState) {
+      val shared = clientStateLock.readLock()
+      shared.lock()
+      try {
+        // classified under the shared lock: no exclusive statement can
+        // begin a transaction or redefine a temp view meanwhile
+        val window = windowOf(spark, text, user, source)
+        if (window != Exclusive) {
+          val append = window match {
+            case Append => Some(appendLock.writeLock())
+            case Read(true) => Some(appendLock.readLock())
+            case _ => None
+          }
+          append.foreach(_.lock())
+          try {
+            val (df, finish) = sqlWithIdDeferred(spark, text, queryId, created, source, user)
+            return ClientStatementResult(df, Nil, Nil, Nil, Nil, None,
+              clearTransactionId = false, None, None, restore = finish)
+          } finally append.foreach(_.unlock())
+        }
+      } finally shared.unlock()
+    }
+    exclusiveStatement(spark, text, queryId, created, headerProps, headerStmts,
+      headerTxn, source, user, headerCatalog, headerSchema)
+  }
+
+  private def exclusiveStatement(spark: SparkSession, text: String, queryId: String,
+      created: Long, headerProps: Seq[(String, String)],
+      headerStmts: Seq[(String, String)], headerTxn: Option[String], source: String,
+      user: String, headerCatalog: Option[String],
+      headerSchema: Option[String]): ClientStatementResult = {
     val props = propsOf(spark)
     val stmts = stmtsOf(spark)
-    clientStateLock.lock()
+    val exclusive = clientStateLock.writeLock()
+    exclusive.lock()
     try {
       val savedProps = props.toMap
       val savedStmts = stmts.toMap
@@ -884,7 +1002,7 @@ object PrestoSql {
       /** Revert exactly the keys this statement touched (header overlay
         * + recorded effects), each only if it still holds the value this
         * statement left — concurrent later writers win. Must run under
-        * clientStateLock. */
+        * clientStateLock's exclusive side. */
       def restoreLocked(): Unit = {
         val overlayMap = overlayProps.toMap
         val touchedProps =
@@ -954,14 +1072,14 @@ object PrestoSql {
           setCatalog = eff.useCatalog,
           setSchema = eff.useSchema,
           restore = () => {
-            clientStateLock.lock()
-            try restoreLocked() finally clientStateLock.unlock()
+            exclusive.lock()
+            try restoreLocked() finally exclusive.unlock()
             finish()
           })
       } catch {
         case t: Throwable => restoreLocked(); throw t
       } finally recording.remove()
-    } finally clientStateLock.unlock()
+    } finally exclusive.unlock()
   }
 
   /** Run Presto-dialect SQL on the graft engine (including the prepared-

@@ -47,7 +47,20 @@ import org.apache.spark.sql.types._
   * memory for a 100 TB result drain is O(pageSize x 16). GET handlers
   * never touch Spark: they only poll the queue, so the job-group
   * thread-local stays on the worker and DELETE's cancelJobGroup
-  * interrupts the real execution.
+  * interrupts the real execution. A GET parks on the queue holding only
+  * the query's poll lock (one GET of a query at a time), never the query
+  * monitor, so DELETE and the kill verbs never wait behind a parked poll.
+  * A page with the end marker already queued behind it is the last one:
+  * it goes out without a nextUri, saving the client a round trip.
+  *
+  * Concurrency between workers: the statement's synchronous part
+  * (analysis, and eager execution of INSERT / SHOW / DESCRIBE / DDL)
+  * runs in [[PrestoSql.clientStatement]]'s client-state window.
+  * Headerless reads and INSERT INTO appends share it, so a point lookup
+  * never queues behind another client's INSERT; appends commit one at a
+  * time, and a read of a catalog table waits out a commit in progress.
+  * Statements that carry or change client state hold it exclusively.
+  * The drain (`toLocalIterator`) runs outside the window.
   *
   * JSON is hand-rendered: the envelope is small and flat, and keeping
   * the server dependency-free matters more than a mapper.
@@ -120,6 +133,10 @@ object StatementServer {
     @volatile var clearTxn: Boolean = false
     @volatile var setCatalog: Option[String] = None
     @volatile var setSchema: Option[String] = None
+    // Held by a GET across its queue poll instead of the query monitor:
+    // it keeps two GETs of one token from both taking a page, and leaves
+    // the monitor free for doCancel.
+    val pollLock = new Object
   }
 
   final class Server private[StatementServer] (
@@ -203,6 +220,11 @@ object StatementServer {
     * query.client.timeout, default 5 min). */
   def start(spark: SparkSession, port: Int = 0,
       clientTimeoutMs: Long = 5 * 60 * 1000L): Server = {
+    // TCP_NODELAY on accepted sockets: the JDK server writes the headers
+    // and the body as two segments, and without it every response waits
+    // ~40 ms for the client's delayed ACK (Nagle). The JDK reads this
+    // property once, when the first server is created.
+    System.setProperty("sun.net.httpserver.nodelay", "true")
     val http = HttpServer.create(new InetSocketAddress("127.0.0.1", port), 0)
     val bound = new Server(spark, http, http.getAddress.getPort, clientTimeoutMs)
     http.createContext("/v1/statement", (ex: HttpExchange) => handle(bound, ex))
@@ -518,9 +540,9 @@ object StatementServer {
         q.pages.clear()
         while (!q.cancelled && !q.pages.offer(EndSlot)) q.pages.clear()
     } finally {
-      // release the slot BEFORE restore(): restore takes the shared
-      // client-state lock, and a statement waiting on our slot must
-      // never be gated on that
+      // release the slot BEFORE restore(): restore may take the
+      // exclusive client-state lock, and a statement waiting on our slot
+      // must never be gated on that
       permit.foreach(_.release())
       restore()
       q.synchronized {
@@ -538,33 +560,38 @@ object StatementServer {
     val q = server.queries.get(id)
     if (q == null) { respond(ex, 404, """{"error":"unknown query"}"""); return }
     q.lastHeartbeat = System.currentTimeMillis()
-    q.synchronized {
-      stateHeaders(ex, q)
+    val (code, body) = q.pollLock.synchronized {
       q.lastServed match {
-        case Some((t, body)) if t == token => respond(ex, 200, body); return
+        case Some((t, body)) if t == token => (200, body)
+        case _ if token != q.nextToken =>
+          (410, """{"error":"token is gone (sequential access only)"}""")
         case _ =>
-      }
-      if (token != q.nextToken) {
-        respond(ex, 410, """{"error":"token is gone (sequential access only)"}""")
-        return
-      }
-      // Poll briefly; an empty page with the SAME nextUri token tells
-      // the client to come back (reference: partial results + nextUri).
-      val slot =
-        if (q.done) EndSlot
-        else Option(q.pages.poll(100, TimeUnit.MILLISECONDS)).getOrElse(PageSlot(Seq.empty))
-      slot match {
-        case EndSlot =>
-          q.done = true
-          respond(ex, 200, envelope(server, q, Seq.empty, includeNext = false))
-        case PageSlot(rows) =>
-          val advance = rows.nonEmpty
-          if (advance) q.nextToken = token + 1
-          val body = envelope(server, q, rows, includeNext = true)
-          if (advance) q.lastServed = Some((token, body))
-          respond(ex, 200, body)
+          // Poll briefly; an empty page with the SAME nextUri token tells
+          // the client to come back (reference: partial results + nextUri).
+          val slot =
+            if (q.done) EndSlot
+            else Option(q.pages.poll(100, TimeUnit.MILLISECONDS)).getOrElse(PageSlot(Seq.empty))
+          slot match {
+            case EndSlot =>
+              q.done = true
+              (200, envelope(server, q, Seq.empty, includeNext = false))
+            case PageSlot(rows) if rows.isEmpty =>
+              (200, envelope(server, q, rows, includeNext = true))
+            case PageSlot(rows) =>
+              // the end marker already queued behind this page: fold it in
+              val last = q.pages.peek() == EndSlot && q.pages.poll() == EndSlot
+              if (last) q.done = true
+              q.nextToken = token + 1
+              val body = envelope(server, q, rows, includeNext = !last)
+              q.lastServed = Some((token, body))
+              (200, body)
+          }
       }
     }
+    // after the poll: the worker sets the statement's effects before it
+    // queues the first page, so the page that ends the results has them
+    stateHeaders(ex, q)
+    respond(ex, code, body)
   }
 
   private def cancel(server: Server, ex: HttpExchange, id: String): Unit = {

@@ -1294,4 +1294,210 @@ class LifecycleSpecs extends AnyFunSuite with BeforeAndAfterAll {
       java.nio.file.Files.deleteIfExists(pwFile)
     }
   }
+
+  // ---- the shared client-state window: reads beside appends ----
+
+  /** Registers `park_gate(x)`: counts `entered` down, then waits on
+    * `gate` — a task that stays running until the spec opens the gate. */
+  private def installGate(): Unit = {
+    LifecycleSpecs.gate = new java.util.concurrent.CountDownLatch(1)
+    LifecycleSpecs.entered = new java.util.concurrent.CountDownLatch(1)
+    spark.udf.register("park_gate", (x: Long) => {
+      LifecycleSpecs.entered.countDown()
+      LifecycleSpecs.gate.await()
+      x
+    })
+  }
+
+  /** Follow a POSTed statement's pages from token 0 to the end. */
+  private def drain(base: String, id: String): Seq[com.fasterxml.jackson.databind.JsonNode] = {
+    val rows = scala.collection.mutable.ArrayBuffer.empty[com.fasterxml.jackson.databind.JsonNode]
+    var uri = s"$base/v1/statement/$id/0"
+    while (uri != null) {
+      val node = json(httpSend("GET", uri)._2)
+      if (node.has("error"))
+        throw new RuntimeException(node.get("error").get("message").asText())
+      if (node.has("data")) node.get("data").forEach(r => rows += r)
+      uri = if (node.has("nextUri")) node.get("nextUri").asText() else null
+    }
+    rows.toSeq
+  }
+
+  test("shared window: reads do not queue behind an INSERT; client state and appends do") {
+    val server = graft.sql.StatementServer.start(spark)
+    val root = java.nio.file.Files.createTempDirectory("fx_rows").toFile
+    val dir = new java.io.File(root, "p").toString
+    installGate()
+    try {
+      spark.range(50).selectExpr("id AS k").write.parquet(dir)
+      spark.read.parquet(dir).createOrReplaceTempView("fx_rows")
+      PrestoSql.sql(spark, "DROP TABLE IF EXISTS append_t")
+      PrestoSql.sql(spark, "CREATE TABLE append_t (x BIGINT) USING parquet")
+      def post(sql: String, headers: Seq[(String, String)] = Seq.empty): String =
+        json(httpSend("POST", s"${server.baseUri}/v1/statement", Some(sql), headers)._2)
+          .get("id").asText()
+      // the INSERT parks inside its write job, holding the append lock
+      val insert = post("INSERT INTO append_t SELECT park_gate(id) FROM range(0, 3, 1, 1)")
+      assert(LifecycleSpecs.entered.await(60, java.util.concurrent.TimeUnit.SECONDS),
+        "the INSERT's task must start")
+      // a headerless read of a fixture view completes while the INSERT is
+      // parked (sent first: a waiting exclusive statement holds back new
+      // shared ones, so that writers are not starved)
+      @volatile var fixtureRows: Seq[Long] = Seq.empty
+      val reader = new Thread(() =>
+        fixtureRows = httpQuery(server.baseUri, "SELECT count(*) AS n FROM fx_rows")
+          .map(_.get(0).asLong()))
+      reader.start(); reader.join(60000)
+      assert(fixtureRows == Seq(50L), "a fixture read must not wait on the parked INSERT")
+      val readT = post("SELECT count(*) AS n FROM append_t")
+      val insert2 = post("INSERT INTO append_t SELECT id FROM range(0, 2, 1, 1)")
+      val withHeader = post("SELECT 1 AS one", Seq("X-Presto-Session" -> "hash_partition_count=4"))
+      Thread.sleep(1000)
+      Seq(insert, readT, withHeader, insert2).foreach { id =>
+        assert(!server.workerFinished(id) && logState(id) != "FINISHED",
+          s"$id must stay blocked while the INSERT is parked")
+      }
+      LifecycleSpecs.gate.countDown()
+      drain(server.baseUri, insert)
+      val n = drain(server.baseUri, readT).head.get(0).asLong()
+      assert(n == 3 || n == 5, s"a read of the target sees whole batches only: $n")
+      assert(drain(server.baseUri, withHeader).head.get(0).asInt() == 1)
+      drain(server.baseUri, insert2)
+      assert(httpQuery(server.baseUri, "SELECT count(*) FROM append_t").head.get(0).asLong() == 5)
+    } finally {
+      LifecycleSpecs.gate.countDown()
+      server.stop()
+      PrestoSql.sql(spark, "DROP TABLE IF EXISTS append_t")
+      org.apache.commons.io.FileUtils.deleteQuietly(root)
+    }
+  }
+
+  test("shared window: INSERT batches are atomic under concurrent count(*) reads") {
+    val server = graft.sql.StatementServer.start(spark)
+    try {
+      PrestoSql.sql(spark, "DROP TABLE IF EXISTS atomic_t")
+      PrestoSql.sql(spark, "CREATE TABLE atomic_t (x BIGINT) USING parquet")
+      // batch b holds 1000 + b rows over 4 files; a partial batch is no prefix sum
+      val k = 8
+      val prefix = (0 to k).map(b => (1 to b).map(1000L + _).sum)
+      val committed = new java.util.concurrent.atomic.AtomicInteger(0)
+      val started = new java.util.concurrent.atomic.AtomicInteger(0)
+      val seen = new java.util.concurrent.ConcurrentLinkedQueue[(Int, Long, Int)]()
+      @volatile var writing = true
+      val readers = (1 to 2).map { _ =>
+        val t = new Thread(() =>
+          while (writing) {
+            val lo = committed.get()
+            val n = httpQuery(server.baseUri, "SELECT count(*) AS n FROM atomic_t")
+              .head.get(0).asLong()
+            seen.add((lo, n, started.get()))
+          })
+        t.start(); t
+      }
+      try (1 to k).foreach { b =>
+        started.set(b)
+        httpQuery(server.baseUri,
+          s"INSERT INTO atomic_t SELECT id FROM range(0, ${1000 + b}, 1, 4)")
+        committed.set(b)
+      } finally {
+        writing = false
+        readers.foreach(_.join(60000))
+      }
+      import scala.jdk.CollectionConverters._
+      val reads = seen.asScala.toSeq
+      assert(reads.nonEmpty)
+      reads.foreach { case (lo, n, hi) =>
+        assert(prefix.contains(n), s"count $n is not a prefix sum of whole batches")
+        assert(n >= prefix(lo), s"a read sent after batch $lo committed saw only $n rows")
+        assert(n <= prefix(hi), s"a read saw $n rows before batch ${hi + 1} was sent")
+      }
+      assert(httpQuery(server.baseUri, "SELECT count(*) FROM atomic_t")
+        .head.get(0).asLong() == prefix(k))
+    } finally {
+      server.stop()
+      PrestoSql.sql(spark, "DROP TABLE IF EXISTS atomic_t")
+    }
+  }
+
+  // ---- protocol latency: the GET poll, the last page, Nagle ----
+
+  test("HTTP cancel: a DELETE returns before another connection's parked GET does") {
+    val server = graft.sql.StatementServer.start(spark)
+    installGate()
+    try {
+      // the GET parks up to 100 ms on an empty page queue; an attempt
+      // counts when the GET really parked through a whole poll
+      var checked = 0
+      var attempt = 0
+      while (checked == 0 && attempt < 8) {
+        attempt += 1
+        val id = json(httpSend("POST", s"${server.baseUri}/v1/statement",
+          Some("SELECT park_gate(id) AS x FROM range(0, 1, 1, 1)"))._2).get("id").asText()
+        @volatile var getStart = 0L
+        @volatile var getEnd = 0L
+        val getter = new Thread(() => {
+          getStart = System.nanoTime()
+          httpSend("GET", s"${server.baseUri}/v1/statement/$id/0")
+          getEnd = System.nanoTime()
+        })
+        getter.start()
+        Thread.sleep(40)
+        val (code, _) = httpSend("DELETE", s"${server.baseUri}/v1/statement/$id/0")
+        val deleteEnd = System.nanoTime()
+        getter.join(10000)
+        assert(code == 204)
+        if (getEnd - getStart >= 90L * 1000 * 1000) {
+          // sent ~40 ms into the ~100 ms poll: done well before it ends
+          assert(getEnd - deleteEnd > 20L * 1000 * 1000,
+            s"DELETE must not wait behind the parked GET (attempt $attempt)")
+          checked += 1
+        }
+      }
+      assert(checked == 1, "no attempt parked a GET before its DELETE")
+    } finally {
+      LifecycleSpecs.gate.countDown()
+      server.stop()
+    }
+  }
+
+  test("HTTP last page carries the end of results; its re-GET is identical") {
+    val server = graft.sql.StatementServer.start(spark)
+    try {
+      spark.range(10).selectExpr("id AS k").createOrReplaceTempView("fold_rows")
+      val id = json(httpSend("POST", s"${server.baseUri}/v1/statement",
+        Some("SELECT k FROM fold_rows ORDER BY k"))._2).get("id").asText()
+      val deadline = System.currentTimeMillis() + 30000
+      while (!server.workerFinished(id) && System.currentTimeMillis() < deadline)
+        Thread.sleep(20)
+      val (_, body) = httpSend("GET", s"${server.baseUri}/v1/statement/$id/0")
+      val node = json(body)
+      assert(node.get("data").size() == 10 && !node.has("nextUri"),
+        s"the only page must end the results: $body")
+      assert(httpSend("GET", s"${server.baseUri}/v1/statement/$id/0")._2 == body,
+        "a re-GET of the last token must return the identical body")
+    } finally server.stop()
+  }
+
+  test("HTTP responses do not stall on Nagle: sequential GET /v1/info on loopback") {
+    val server = graft.sql.StatementServer.start(spark)
+    try {
+      val client = java.net.http.HttpClient.newBuilder()
+        .version(java.net.http.HttpClient.Version.HTTP_1_1).build()
+      val req = java.net.http.HttpRequest.newBuilder(
+        java.net.URI.create(s"${server.baseUri}/v1/info")).GET().build()
+      val ms = (1 to 21).map { _ =>
+        val t0 = System.nanoTime()
+        val resp = client.send(req, java.net.http.HttpResponse.BodyHandlers.ofString())
+        assert(resp.statusCode() == 200)
+        (System.nanoTime() - t0) / 1e6
+      }.sorted
+      assert(ms(10) < 20.0, s"median round trip ${ms(10)} ms (a Nagle stall is >= 40 ms): $ms")
+    } finally server.stop()
+  }
+}
+
+object LifecycleSpecs {
+  // read by the park_gate UDF inside executor tasks (same JVM in local mode)
+  @volatile var gate = new java.util.concurrent.CountDownLatch(0)
+  @volatile var entered = new java.util.concurrent.CountDownLatch(0)
 }
