@@ -22,10 +22,10 @@ import org.apache.spark.sql.SparkSession
   * (Earlier rounds retried only the >3s tail; totals are therefore not
   * directly comparable to r5-and-before single-pass numbers.)
   *
-  * Round 16: isolated retimes run in a FORKED fresh JVM with a pinned
-  * bounded heap (default 16g, override GRAFT_ISOLATED_XMX). A same-JVM
-  * retime after 343 queries of heap churn at a large SPARK_DRIVER_MEM
-  * manufactured phantom regressions (r15: kn_trigram "isolated"
+  * Round 16: isolated retimes run in a FORKED fresh JVM started with this
+  * JVM's own flags (heap included). A same-JVM retime after 343 queries
+  * of heap churn at a large SPARK_DRIVER_MEM manufactured phantom
+  * regressions (r15: kn_trigram "isolated"
   * 37.96 s/521.5 CPU in-JVM vs 4.66 s/13.2 CPU fresh-JVM) — the child's
   * -Xmx and per-retime driver GC time are published in the artifact so
   * heap-state artifacts are visible rather than inferred.
@@ -54,40 +54,14 @@ object Bench {
       .map(_.getCollectionTime).filter(_ >= 0).sum
   }
 
-  private def buildSession(cpus: String): SparkSession = {
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      // Keep compute-dense but byte-light shuffles parallel: the default
-      // 1MB floor coalesces a 3MB candidate-pair exchange to 3 tasks and
-      // serializes the (expensive) downstream verify on a 32-core box.
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64kb")
-      // One merged shuffle file per map task instead of one per reduce
-      // partition — see Engine.session for the measurement; matches the
-      // writer path a >200-reducer cluster job takes anyway.
-      .config("spark.shuffle.sort.bypassMergeThreshold", "1")
-      // See Engine.session: lets the 64-function MinHash aggregate (and any
-      // other wide kernel) stay inside whole-stage codegen (89 -> ~6 CPU-s).
-      .config("spark.sql.codegen.maxFields", "256")
-      .config("spark.sql.autoBroadcastJoinThreshold", (32L * 1024 * 1024).toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // Dev knob: GRAFT_SESSION_CONF=k=v,k=v applies session confs (e.g.
-    // graft.checkpoint.reliable=true) — lets an isolated-child run
-    // profile a query under a non-default engine mode. Driver never
-    // sets it.
-    sys.env.get("GRAFT_SESSION_CONF").foreach(_.split(",").foreach { kv =>
-      kv.split("=", 2) match {
-        case Array(k, v) if k.nonEmpty => spark.conf.set(k, v)
-        case _ => ()
-      }
-    })
-    spark
+  /** Session on the benchmark agent's exact configuration, fixtures
+    * registered and the lineitem footers/pages warmed (untimed). */
+  private[graft] def start(sfDir: String): (SparkSession, AtomicLong) = {
+    val spark = graft.engine.Engine.session(s"local[${graft.engine.Engine.cores}]")
+    val cpuNs = installCpuListener(spark)
+    graft.engine.Engine.registerTables(spark, sfDir)
+    spark.table("lineitem").write.format("noop").mode("overwrite").save()
+    (spark, cpuNs)
   }
 
   /** Always-on CPU accounting: per-stage executorCpuTime accumulated into a
@@ -97,21 +71,9 @@ object Bench {
     */
   private def installCpuListener(spark: SparkSession): AtomicLong = {
     val cpuNs = new AtomicLong(0L)
-    val stageDebug = sys.env.contains("GRAFT_STAGE_DEBUG")
     spark.sparkContext.addSparkListener(new SparkListener {
-      override def onStageCompleted(ev: SparkListenerStageCompleted): Unit = {
-        val si = ev.stageInfo
-        cpuNs.addAndGet(si.taskMetrics.executorCpuTime)
-        if (stageDebug) {
-          val thresholdMs = sys.env.get("GRAFT_STAGE_DEBUG").flatMap(_.toLongOption).getOrElse(3000L)
-          val dur = for { s <- si.submissionTime; c <- si.completionTime } yield c - s
-          if (dur.exists(_ > thresholdMs))
-            System.err.println(s"[stage] id=${si.stageId} tasks=${si.numTasks} ms=${dur.get} " +
-              s"cpuMs=${si.taskMetrics.executorCpuTime / 1000000} " +
-              s"runMs=${si.taskMetrics.executorRunTime} gcMs=${si.taskMetrics.jvmGCTime} " +
-              s"name=${si.name.take(60)}")
-        }
-      }
+      override def onStageCompleted(ev: SparkListenerStageCompleted): Unit =
+        cpuNs.addAndGet(ev.stageInfo.taskMetrics.executorCpuTime)
     })
     cpuNs
   }
@@ -122,7 +84,7 @@ object Bench {
     * events land in the right query. gcMs = driver-JVM stop-the-world GC
     * time inside the window (heap-state attribution, r15 verdict #1).
     */
-  private def once(spark: SparkSession, cpuNs: AtomicLong, sfDir: String)(
+  private[graft] def once(spark: SparkSession, cpuNs: AtomicLong, sfDir: String)(
       fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Run = {
     org.apache.spark.sql.graft.ListenerBusFlush.drain(spark.sparkContext)
     val c0 = cpuNs.get()
@@ -149,17 +111,13 @@ object Bench {
 
   // ---------------------------------------------------------------------
   // Child mode: fresh-JVM isolated retimes. Invoked by the parent suite in
-  // a forked process with a pinned bounded heap; runs ONLY the named
+  // a forked process with the parent's JVM flags; runs ONLY the named
   // queries (one untimed warm pass + two measured, min-of-2 — measuring
   // the code, not cold JIT) and prints one JSON line the parent parses.
   // ---------------------------------------------------------------------
   private def isolatedChild(names: Seq[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = buildSession(cpus)
-    val cpuNs = installCpuListener(spark)
-    graft.engine.Engine.registerTables(spark, sfDir)
-    spark.table("lineitem").write.format("noop").mode("overwrite").save()
+    val (spark, cpuNs) = start(sfDir)
     val xmxMb = Runtime.getRuntime.maxMemory() / (1024 * 1024)
     val out = names.flatMap { name =>
       SparkEntry.benchQueries.get(name).map { fn =>
@@ -182,36 +140,27 @@ object Bench {
     System.out.flush()
   }
 
-  /** Fork a fresh bounded-heap JVM running `isolatedChild` over `names`.
+  /** Fork a fresh JVM with this JVM's flags (heap, code cache,
+    * --add-opens) running `isolatedChild` over `names`; the child
+    * inherits the environment, so it sizes its master by the same cores.
     * Returns per-query runs plus the child's -Xmx (MB), or None if the
     * fork could not run (parent then publishes isolated_forked=false and
     * no isolated numbers — a missing number is honest; a same-JVM number
     * after a 343-query heap can be a 20x phantom, r15 verdict).
     */
-  private def forkIsolated(names: Seq[String], sfDir: String, cpus: String)
+  private def forkIsolated(names: Seq[String], sfDir: String)
       : Option[(Long, Map[String, Run])] =
     try {
+      import scala.jdk.CollectionConverters._
       val javaBin = java.nio.file.Paths.get(
         System.getProperty("java.home"), "bin", "java").toString
-      val xmx = sys.env.getOrElse("GRAFT_ISOLATED_XMX", "16g")
-      val addOpens = Seq(
-        "java.base/java.lang", "java.base/java.lang.invoke",
-        "java.base/java.lang.reflect", "java.base/java.io",
-        "java.base/java.net", "java.base/java.nio",
-        "java.base/java.util", "java.base/java.util.concurrent",
-        "java.base/java.util.concurrent.atomic",
-        "java.base/sun.nio.ch", "java.base/sun.nio.cs",
-        "java.base/sun.security.action", "java.base/sun.util.calendar",
-      ).flatMap(p => Seq("--add-opens", s"$p=ALL-UNNAMED"))
-      val cmd = (Seq(javaBin) ++ addOpens ++ Seq(
-        s"-Xmx$xmx", "-XX:MaxGCPauseMillis=300", "-XX:ReservedCodeCacheSize=512m",
-        "-Dspark.ui.enabled=false", "-Dspark.sql.session.timeZone=UTC",
-        "-cp", System.getProperty("java.class.path"),
-        "graft.Bench")).toList
+      val jvmFlags = java.lang.management.ManagementFactory.getRuntimeMXBean
+        .getInputArguments.asScala.toSeq
+      val cmd = (Seq(javaBin) ++ jvmFlags ++ Seq(
+        "-cp", System.getProperty("java.class.path"), "graft.Bench")).toList
       val pb = new ProcessBuilder(cmd: _*)
       pb.environment().put("SPARK_GRAFT_BENCH_ISOLATED", names.mkString(","))
       pb.environment().put("SPARK_GRAFT_SF_DIR", sfDir)
-      pb.environment().put("SPARK_GRAFT_CPUS", cpus)
       pb.redirectErrorStream(false)
       pb.redirectError(ProcessBuilder.Redirect.INHERIT)
       val p = pb.start()
@@ -224,7 +173,6 @@ object Bench {
           .find(_.startsWith("{\"isolated_child\""))
         line.map { l =>
           val node = new com.fasterxml.jackson.databind.ObjectMapper().readTree(l)
-          import scala.jdk.CollectionConverters._
           val xmxMb = node.path("xmx_mb").asLong(-1L)
           val qs = node.path("queries").fields().asScala.map { e =>
             val v = e.getValue
@@ -242,9 +190,6 @@ object Bench {
   // ---------------------------------------------------------------------
   private def suiteMain(): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = buildSession(cpus)
-    val cpuNs = installCpuListener(spark)
 
     // Prewarm: session + parquet footers + function registry (excluded
     // from measured time, like the reference's prewarm runs in
@@ -256,8 +201,7 @@ object Bench {
     // times only matching queries (the driver never sets it).
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(_.split(",").toSeq)
 
-    graft.engine.Engine.registerTables(spark, sfDir)
-    spark.table("lineitem").write.format("noop").mode("overwrite").save()
+    val (spark, cpuNs) = start(sfDir)
     // Sketch prewarm only when a sketch query will actually be timed:
     // on a filtered probe run (e.g. the ×100 scale probes) these four
     // unmeasured passes were the dominant UNTIMED cost — minutes of
@@ -301,7 +245,7 @@ object Bench {
       (name, fn, best, r1.wall)
     }
     // Third, ISOLATED re-time of the slowest tail — in a FRESH FORKED JVM
-    // with a pinned bounded heap (r16; see forkIsolated). The in-suite
+    // (r16; see forkIsolated). The in-suite
     // numbers for cheap queries read 4-15x inflated under code-cache
     // pressure + steal, and r15 proved the former same-JVM retime can
     // itself be poisoned by post-suite heap state at a large
@@ -360,13 +304,13 @@ object Bench {
       }
 
     // Stop the parent's Spark BEFORE forking the isolated child: one
-    // Spark JVM at a time on this box (the parent's 32 local threads
+    // Spark JVM at a time on this box (the parent's local threads
     // would contend with — and so contaminate — the child's retimes).
     spark.stop()
     System.gc()
     val retimeNames = results.collect {
       case (name, _, r, _) if r.wall >= 0 && slowest.contains(name) => name }
-    val forked = forkIsolated(retimeNames.sorted, sfDir, cpus)
+    val forked = forkIsolated(retimeNames.sorted, sfDir)
     val isolated: Map[String, Run] = forked.map(_._2).getOrElse(Map.empty)
     val isolatedXmxMb = forked.map(_._1).getOrElse(-1L)
 

@@ -12,8 +12,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * Scale notes (100 TB discipline): nothing here caches or collects; table
   * registration is metadata-only (parquet footer reads). Shuffle
-  * partitioning is left to the session builder (32 on local[32]; a real
-  * cluster would size it to cores × executors with AQE coalescing).
+  * partitioning defaults to 32 with AQE coalescing (a real cluster would
+  * size it to cores × executors).
   */
 object Engine {
 
@@ -92,9 +92,20 @@ object Engine {
       |      FROM lineitem) ps
       |JOIN part ON p_partkey = ps_partkey""".stripMargin
 
-  /** Build a tuned local session (tests / standalone use). */
-  def session(master: String = "local[*]", shufflePartitions: Int = 32): SparkSession = {
-    val spark = SparkSession.builder()
+  /** Local cores every entry point sizes its master by: `SPARK_GRAFT_CPUS`
+    * if set, else the JVM's available processors. */
+  def cores: Int =
+    sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+      .getOrElse(Runtime.getRuntime.availableProcessors)
+
+  /** The one session builder in the engine: every main and the benchmark
+    * agent get their session here. `overrides` apply last, so a test
+    * configuration (forced spill, AQE off) is this configuration with
+    * exactly the named changes. Core SparkConf keys in `overrides` take
+    * effect only when no SparkContext is running yet (getOrCreate). */
+  def session(master: String, shufflePartitions: Int = 32,
+      overrides: Map[String, String] = Map.empty): SparkSession = {
+    val builder = SparkSession.builder()
       .master(master)
       .appName("graft")
       .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
@@ -102,7 +113,9 @@ object Engine {
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      // See Bench: keep compute-dense, byte-light shuffles parallel.
+      // Keep compute-dense but byte-light shuffles parallel: the default
+      // 1MB floor coalesces a 3MB candidate-pair exchange to 3 tasks and
+      // serializes the (expensive) downstream verify.
       .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64kb")
       // The bypass-merge shuffle writer opens one file PER REDUCE
       // PARTITION per map task whenever reducers <= 200; the sort path
@@ -124,7 +137,8 @@ object Engine {
       .config("spark.sql.cbo.enabled", "true")
       .config("spark.sql.autoBroadcastJoinThreshold", (32L * 1024 * 1024).toString)
       .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    overrides.foreach { case (k, v) => builder.config(k, v) }
+    val spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // zero-cost in-flow counters (observe API) -> bench artifact
     graft.tools.QueryStats.installListener(spark)
@@ -139,19 +153,19 @@ object Engine {
     java.util.Collections.synchronizedMap(
       new java.util.WeakHashMap[SparkSession, String]())
 
-  /** Register every fixture table under `dir` as a temp view. Idempotent
-    * per (session, dir). Also installs the graft function extensions.
-    */
   /** Install the graft optimizer rules once per session (idempotent).
-    * extraOptimizations rather than injectOptimizerRule so sessions
-    * built by ANY builder (Bench constructs its own) get the rules the
-    * moment they register the catalog. */
+    * extraOptimizations rather than injectOptimizerRule so a session
+    * built outside [[session]] (the GraftExtensions spec builds its own)
+    * gets the rules the moment it registers the catalog. */
   def installOptimizerRules(spark: SparkSession): Unit =
     if (!spark.experimental.extraOptimizations.contains(graft.plans.KeyPredicatePropagation)) {
       spark.experimental.extraOptimizations =
         spark.experimental.extraOptimizations :+ graft.plans.KeyPredicatePropagation
     }
 
+  /** Register every fixture table under `dir` as a temp view. Idempotent
+    * per (session, dir). Also installs the graft function extensions.
+    */
   def registerTables(spark: SparkSession, dir: String): Unit = {
     installOptimizerRules(spark)
     graft.tools.QueryStats.installListener(spark)

@@ -8,8 +8,8 @@ import org.apache.spark.sql.{functions => F, Encoders, Row}
 
 /** Presto-name parity wave (round 8): every remaining SQL name from the
   * reference's `@ScalarFunction`/`@AggregationFunction` surface that the
-  * session registry did not yet resolve (audited with tools/FnAudit
-  * against the annotation sweep of presto-main + plugins).
+  * session registry did not yet resolve (audited against the annotation
+  * sweep of presto-main + plugins).
   *
   * Installation preference order follows the project stance: a Catalyst
   * alias onto a Spark built-in expression (codegen'd, zero overhead)

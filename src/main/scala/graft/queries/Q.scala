@@ -26,6 +26,12 @@ final case class Q(
     */
   def withBench(f: (SparkSession, String) => DataFrame): Q = copy(benchBuild = Some(f))
 
+  /** A Spark plan that is not the literal oracle SQL runs somewhere: the
+    * build is a hand translation, or the bench path swaps in its own
+    * build. The strictcheck gate (`SparkEntry.handPlanQueries`) covers
+    * exactly these. */
+  def isHandPlan: Boolean = oracle.isDefined && (!isSameSql || benchBuild.isDefined)
+
   def runBench(spark: SparkSession, dir: String): DataFrame = {
     graft.engine.Engine.registerTables(spark, dir)
     benchBuild.getOrElse(build)(spark, dir)

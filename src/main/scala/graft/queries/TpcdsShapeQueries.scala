@@ -901,9 +901,11 @@ object TpcdsShapeQueries extends QueryModule {
     // computes it in ONE fact pass: join once, aggregate per (cust,
     // item) with two boolean channel flags (partial agg below the
     // exchange — the distinct pass collapsed into it), then one global
-    // flag-count row. Identical partition of the pair set (keys are
-    // NOT NULL in this fixture, so FULL JOIN matching == flag
-    // conjunction); strictcheck-pinned like every hand plan. The oracle
+    // flag-count row. Identical partition of the pair set only while
+    // o_custkey and l_partkey are NOT NULL (groupBy equates NULL keys,
+    // the FULL JOIN never matches them) — asserted over every fixture
+    // by the EngineSpecs "ds_channel_overlap keys are NOT NULL" spec;
+    // strictcheck-pinned like every hand plan. The oracle
     // replays the literal two-CTE text — same counts.
     Q("ds_channel_overlap",
       """WITH ssci AS (

@@ -43,7 +43,7 @@ object PlanDump {
       "llm_pmi_collocations", "llm_pca_power",
       "llm_dedup_sorted_neighborhood", "llm_knn_ivfpq",
       "llm_train_val_split")
-    val spark = graft.engine.Engine.session("local[4]", shufflePartitions = 8)
+    val spark = graft.engine.Engine.session(s"local[${graft.engine.Engine.cores}]")
     graft.engine.Engine.registerTables(spark, sfDir)
     val sb = new StringBuilder
     sb.append("# PLANS — formatted physical plans of headline queries\n\n")

@@ -41,8 +41,7 @@ object ScaleUp {
     val src = args.headOption.getOrElse("/root/testdata/sf0.1")
     val dst = if (args.length > 1) args(1) else "tmp/sf1"
     val copies = sys.env.getOrElse("GRAFT_SCALE_COPIES", "10").toInt
-    val spark = graft.engine.Engine.session(
-      s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
+    val spark = graft.engine.Engine.session(s"local[${graft.engine.Engine.cores}]")
     // Keep events.ts as raw nanos (long) — same representation the fixture
     // uses; Engine.registerTables restores a timestamp view over it.
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")

@@ -16,7 +16,7 @@ object Sql {
     require(args.length >= 2, "usage: Sql <sfDir> <sql...>")
     val sfDir = args.head
     val sqlText = args.tail.mkString(" ")
-    val spark = graft.engine.Engine.session("local[*]")
+    val spark = graft.engine.Engine.session(s"local[${graft.engine.Engine.cores}]")
     graft.engine.Engine.registerTables(spark, sfDir)
     graft.sql.PrestoSql.sql(spark, sqlText).show(100, truncate = false)
     spark.stop()

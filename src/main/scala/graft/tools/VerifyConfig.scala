@@ -8,9 +8,10 @@ import org.apache.spark.sql.{Row, SparkSession}
   * counts, emit a per-query verdict) applied to the WHOLE oracle corpus
   * rather than a hand-picked subset.
   *
-  * Control = the ordinary session. Test = the forced-spill
-  * configuration from SpillSpecs (every blocking operator pushed to
-  * disk: sorter force-spill thresholds, operator buffer spill
+  * Control = the engine session the benchmark times. Each test
+  * configuration is that same session plus its overrides, e.g. the
+  * forced-spill configuration from SpillSpecs (every blocking operator
+  * pushed to disk: sorter force-spill thresholds, operator buffer spill
   * thresholds, object-agg sort fallback, broadcast disabled so joins
   * take the spilling sort-merge path). Same shuffle partition count on
   * both sides so partition-seeded operators (sampling) see identical
@@ -96,26 +97,16 @@ object VerifyConfig {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val out = args.lift(1).getOrElse("VERIFY_CONFIG.json")
 
-    // control configuration: the ordinary engine session
-    val control = graft.engine.Engine.session("local[8]", shufflePartitions = 8)
-    val controlResults = try runCorpus(control, sfDir) finally control.stop()
-
-    // each test configuration gets a fresh context (several knobs are
-    // core SparkConf settings, not session-level SQLConf)
+    // every configuration gets a fresh context (several knobs are core
+    // SparkConf settings, not session-level SQLConf)
+    def sweep(overrides: Map[String, String]) = {
+      val s = graft.engine.Engine.session(
+        s"local[${graft.engine.Engine.cores}]", overrides = overrides)
+      try runCorpus(s, sfDir) finally s.stop()
+    }
+    val controlResults = sweep(Map.empty)
     val testResults: Seq[(String, Map[String, Either[String, Array[Row]]])] =
-      testConfigs.map { case (label, confs) =>
-        val b = SparkSession.builder()
-          .master("local[8]")
-          .appName(s"graft-verify-$label")
-          .config("spark.sql.shuffle.partitions", "8")
-          .config("spark.sql.session.timeZone", "UTC")
-          .config("spark.ui.enabled", "false")
-        confs.foreach { case (k, v) => b.config(k, v) }
-        val s = b.getOrCreate()
-        s.sparkContext.setLogLevel("WARN")
-        val r = try runCorpus(s, sfDir) finally s.stop()
-        label -> r
-      }
+      testConfigs.map { case (label, confs) => label -> sweep(confs) }
 
     def js(s: String) = "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"")
       .replaceAll("[\\n\\r\\t]", " ") + "\""

@@ -51,6 +51,43 @@ class EngineSpecs extends AnyFunSuite with BeforeAndAfterAll {
     assert(SparkEntry.queries.keySet == names.toSet)
   }
 
+  test("hand-plan gate: a same-SQL query with a bench build is a hand plan") {
+    val literal = graft.queries.Q.sameSql("probe_same_sql", "SELECT 1 AS x")
+    assert(!literal.isHandPlan)
+    assert(literal.withBench((s, _) => s.range(1).toDF("x")).isHandPlan)
+    assert(!graft.queries.Q.noOracle("probe_no_oracle")((s, _) => s.range(1).toDF()).isHandPlan)
+    assert(SparkEntry.handPlanQueries ==
+      SparkEntry.modules.flatMap(_.queries).filter(_.isHandPlan).map(_.name).sorted)
+  }
+
+  test("ds_channel_overlap keys are NOT NULL in every fixture") {
+    // Its hand plan groups by (o_custkey, l_partkey) where the oracle FULL
+    // JOINs on them: the two agree only while neither key is ever NULL.
+    val dirs = Option(new java.io.File("/root/testdata").listFiles()).toSeq.flatten
+      .filter(d => d.getName.startsWith("sf") &&
+        Seq("orders", "lineitem").forall(t => new java.io.File(d, s"$t.parquet").exists()))
+    assert(dirs.nonEmpty, "no fixture dir with orders and lineitem")
+    dirs.foreach { d =>
+      Seq("orders" -> "o_custkey", "lineitem" -> "l_partkey").foreach { case (t, c) =>
+        val nulls = spark.read.parquet(s"$d/$t.parquet")
+          .where(org.apache.spark.sql.functions.col(c).isNull).count()
+        assert(nulls == 0, s"${d.getName}/$t.$c has $nulls NULLs")
+      }
+    }
+  }
+
+  test("one session factory: src/main builds sessions only in Engine.session") {
+    import scala.jdk.CollectionConverters._
+    val hits = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala"))
+      .iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq
+      .flatMap { p =>
+        java.nio.file.Files.readAllLines(p).asScala.zipWithIndex
+          .collect { case (line, i) if line.contains("SparkSession.builder()") => s"$p:${i + 1}" }
+      }
+    assert(hits.size == 1 && hits.head.contains("graft/engine/Engine.scala"),
+      s"expected one SparkSession.builder() (Engine.session), found: ${hits.mkString(", ")}")
+  }
+
   // ---- plan-shape assertions (scale discipline) ----
 
   private def executedPlan(df: org.apache.spark.sql.DataFrame): SparkPlan = {

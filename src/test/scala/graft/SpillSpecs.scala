@@ -85,21 +85,16 @@ class SpillSpecs extends AnyFunSuite {
     // (SparkConf) setting, not a session-level SQLConf
     SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
       .foreach(_.stop())
-    val constrained = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-spill")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.shuffle.spill.numElementsForceSpillThreshold", "500")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "2")
-      .config("spark.sql.windowExec.buffer.in.memory.threshold", "64")
-      .config("spark.sql.windowExec.buffer.spill.threshold", "128")
-      .config("spark.sql.sortMergeJoinExec.buffer.in.memory.threshold", "64")
-      .config("spark.sql.sortMergeJoinExec.buffer.spill.threshold", "128")
-      .config("spark.sql.autoBroadcastJoinThreshold", "-1")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    constrained.sparkContext.setLogLevel("WARN")
+    // the engine's own configuration plus only the spill-forcing knobs
+    val constrained = graft.engine.Engine.session("local[4]", shufflePartitions = 4,
+      overrides = Map(
+        "spark.shuffle.spill.numElementsForceSpillThreshold" -> "500",
+        "spark.sql.objectHashAggregate.sortBased.fallbackThreshold" -> "2",
+        "spark.sql.windowExec.buffer.in.memory.threshold" -> "64",
+        "spark.sql.windowExec.buffer.spill.threshold" -> "128",
+        "spark.sql.sortMergeJoinExec.buffer.in.memory.threshold" -> "64",
+        "spark.sql.sortMergeJoinExec.buffer.spill.threshold" -> "128",
+        "spark.sql.autoBroadcastJoinThreshold" -> "-1"))
     val spilledMem = new java.util.concurrent.atomic.AtomicLong(0)
     val spilledDisk = new java.util.concurrent.atomic.AtomicLong(0)
     val listener = new SparkListener {
