@@ -242,7 +242,7 @@ object Bench {
             catch { case _: Throwable => Run(Double.MaxValue, 0.0, 0.0, 0L) }
           if (r2.wall < r1.wall) r2 else r1
         }
-      (name, fn, best, r1.wall)
+      (name, best, r1.wall)
     }
     // Third, ISOLATED re-time of the slowest tail — in a FRESH FORKED JVM
     // (r16; see forkIsolated). The in-suite
@@ -280,28 +280,11 @@ object Bench {
         }
       } catch { case _: Throwable => Map.empty }
     val inflated = results.collect {
-      case (name, _, r, _) if r.wall >= 0 &&
+      case (name, r, _) if r.wall >= 0 &&
         prevWalls.get(name).exists(pw => r.wall > 2.0 * pw && r.wall - pw > 0.2) => name
     }.toSet
-    val slowest = results.filter(_._3.wall >= 0).sortBy(-_._3.wall).take(10).map(_._1).toSet +
+    val slowest = results.filter(_._2.wall >= 0).sortBy(-_._2.wall).take(10).map(_._1).toSet +
       "func_geometry_overlay" ++ inflated
-
-    // Output-row counts for queries whose cost is output-bound (the
-    // spatial polygon joins: sf1 packs x10 shapes into a fixed area so
-    // matched pairs grow x100 by construction — publishing the count
-    // makes per-pair cost auditable from the artifact). One extra
-    // untimed execution per matching query, so it's opt-in by prefix:
-    // GRAFT_COUNT_ROWS=join_spatial (set for the sf1 probe runs).
-    val countRows: Map[String, Long] =
-      sys.env.get("GRAFT_COUNT_ROWS").map(_.split(",").toSeq) match {
-        case None => Map.empty
-        case Some(prefixes) =>
-          results.collect {
-            case (k, fn, r, _) if r.wall >= 0 && prefixes.exists(k.startsWith) =>
-              k -> (try fn(spark, sfDir).count()
-              catch { case scala.util.control.NonFatal(_) => -1L })
-          }.toMap
-      }
 
     // Stop the parent's Spark BEFORE forking the isolated child: one
     // Spark JVM at a time on this box (the parent's local threads
@@ -309,7 +292,7 @@ object Bench {
     spark.stop()
     System.gc()
     val retimeNames = results.collect {
-      case (name, _, r, _) if r.wall >= 0 && slowest.contains(name) => name }
+      case (name, r, _) if r.wall >= 0 && slowest.contains(name) => name }
     val forked = forkIsolated(retimeNames.sorted, sfDir)
     val isolated: Map[String, Run] = forked.map(_._2).getOrElse(Map.empty)
     val isolatedXmxMb = forked.map(_._1).getOrElse(-1L)
@@ -317,15 +300,15 @@ object Bench {
     val (runSteal1, runTot1) = procStat()
     val runStealPct =
       if (runTot1 > runTot0) 100.0 * (runSteal1 - runSteal0) / (runTot1 - runTot0) else 0.0
-    val wallTotal = results.collect { case (_, _, r, _) if r.wall >= 0 => r.wall }.sum
-    val cpuTotal = results.collect { case (_, _, r, _) if r.wall >= 0 => r.cpu }.sum
-    val failures = results.collect { case (k, _, r, _) if r.wall < 0 => "\"" + k + "\"" }
+    val wallTotal = results.collect { case (_, r, _) if r.wall >= 0 => r.wall }.sum
+    val cpuTotal = results.collect { case (_, r, _) if r.wall >= 0 => r.cpu }.sum
+    val failures = results.collect { case (k, r, _) if r.wall < 0 => "\"" + k + "\"" }
       .mkString("[", ",", "]")
 
     // Full per-query detail goes to a file: the driver captures only the
     // last ~2000 chars of stdout, so the printed line must stay compact
     // (190+ timing objects would overflow and leave the line unparseable).
-    val fullQs = results.map { case (k, _, r, t1) =>
+    val fullQs = results.map { case (k, r, t1) =>
       val iso = isolated.get(k).map(i =>
         ",\"isolated\":" + r3(i.wall) + ",\"isolated_cpu\":" + r3(i.cpu) +
           ",\"isolated_steal_pct\":" + r3(i.stealPct) +
@@ -333,9 +316,9 @@ object Bench {
       // Algorithm-internal counters (LSH candidate counts, bucket
       // occupancies, ...) recorded by the query build via QueryStats:
       // the falsifiability channel for scale claims.
-      val extra = (graft.tools.QueryStats.snapshot(k).map { case (sk, sv) =>
+      val extra = graft.tools.QueryStats.snapshot(k).map { case (sk, sv) =>
         ",\"" + sk + "\":" + sv
-      } ++ countRows.get(k).map(c => ",\"out_rows\":" + c)).mkString
+      }.mkString
       "\"" + k + "\":{\"wall\":" + r3(r.wall) + ",\"cpu\":" + r3(r.cpu) +
         ",\"t1\":" + r3(t1) + ",\"steal_pct\":" + r3(r.stealPct) +
         ",\"gc_ms\":" + r.gcMs + iso + extra + "}"
@@ -348,11 +331,11 @@ object Bench {
 
     // Compact stdout line: headline TPC-H queries by name, everything else
     // rolled up into per-module prefixes sums.
-    val headline = results.filter { case (k, _, r, _) => r.wall >= 0 && k.matches("^q\\d+_.*") }
-      .map { case (k, _, r, _) => "\"" + k.split('_').head + "\":" + r3(r.wall) }
-    val groups = results.filter { case (k, _, r, _) => r.wall >= 0 && !k.matches("^q\\d+_.*") }
+    val headline = results.filter { case (k, r, _) => r.wall >= 0 && k.matches("^q\\d+_.*") }
+      .map { case (k, r, _) => "\"" + k.split('_').head + "\":" + r3(r.wall) }
+    val groups = results.filter { case (k, r, _) => r.wall >= 0 && !k.matches("^q\\d+_.*") }
       .groupBy(_._1.split('_').head).toSeq.sortBy(_._1)
-      .map { case (g, rs) => "\"" + g + "\":" + r3(rs.map(_._3.wall).sum) }
+      .map { case (g, rs) => "\"" + g + "\":" + r3(rs.map(_._2.wall).sum) }
     val qs = (headline ++ groups).mkString("{", ",", "}")
     // The driver parses the LAST line of captured stdout: Spark is already
     // stopped (before the fork), so nothing can log after the JSON. Print

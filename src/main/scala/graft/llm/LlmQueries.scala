@@ -893,14 +893,10 @@ object LlmQueries extends QueryModule {
 
     // ---- Deduplication ----
 
-    Q("llm_dedup_exact",
+    Q.sameSql("llm_dedup_exact",
       """SELECT md5(text) AS fp, CAST(count(*) AS BIGINT) AS copies,
         |  min(doc_id) AS keeper
-        |FROM documents GROUP BY md5(text)""".stripMargin) { (s, _) =>
-      s.table("documents")
-        .groupBy(md5(col("text").cast("binary")).as("fp"))
-        .agg(count(lit(1)).as("copies"), min("doc_id").as("keeper"))
-    },
+        |FROM documents GROUP BY md5(text)""".stripMargin),
 
     Q("llm_dedup_ngram_jaccard",
       s"""WITH $oracleShingleCtes,

@@ -19,7 +19,7 @@ object AggQueries extends QueryModule {
 
   def queries: Seq[Q] = Seq(
 
-    Q("agg_global",
+    Q.sameSql("agg_global",
       """SELECT CAST(count(*) AS BIGINT) AS n_rows,
         |  sum(l_quantity) AS sum_qty,
         |  min(l_extendedprice) AS min_price,
@@ -27,39 +27,21 @@ object AggQueries extends QueryModule {
         |  avg(l_extendedprice) AS avg_price,
         |  min(l_shipdate) AS min_ship,
         |  max(l_shipdate) AS max_ship
-        |FROM lineitem""".stripMargin) { (s, _) =>
-      s.table("lineitem").agg(
-        count(lit(1)).as("n_rows"),
-        sum("l_quantity").as("sum_qty"),
-        min("l_extendedprice").as("min_price"),
-        max("l_extendedprice").as("max_price"),
-        avg("l_extendedprice").as("avg_price"),
-        min("l_shipdate").as("min_ship"),
-        max("l_shipdate").as("max_ship"))
-    },
+        |FROM lineitem""".stripMargin),
 
-    Q("agg_distinct",
+    Q.sameSql("agg_distinct",
       """SELECT CAST(count(DISTINCT l_partkey) AS BIGINT) AS n_parts,
         |  CAST(count(DISTINCT l_suppkey) AS BIGINT) AS n_supps
-        |FROM lineitem""".stripMargin) { (s, _) =>
-      s.table("lineitem").agg(
-        countDistinct("l_partkey").as("n_parts"),
-        countDistinct("l_suppkey").as("n_supps"))
-    },
+        |FROM lineitem""".stripMargin),
 
     // Mixed distinct + plain aggregates per group — the reference's
     // OptimizeMixedDistinctAggregations path.
-    Q("agg_mixed_distinct",
+    Q.sameSql("agg_mixed_distinct",
       """SELECT l_returnflag,
         |  CAST(count(DISTINCT l_partkey) AS BIGINT) AS n_parts,
         |  CAST(count(DISTINCT l_orderkey) AS BIGINT) AS n_orders,
         |  sum(l_quantity) AS sum_qty
-        |FROM lineitem GROUP BY l_returnflag""".stripMargin) { (s, _) =>
-      s.table("lineitem").groupBy("l_returnflag").agg(
-        countDistinct("l_partkey").as("n_parts"),
-        countDistinct("l_orderkey").as("n_orders"),
-        sum("l_quantity").as("sum_qty"))
-    },
+        |FROM lineitem GROUP BY l_returnflag""".stripMargin),
 
     // FILTER clause on aggregate arguments — ImplementFilteredAggregations.
     Q("agg_filter_clause",
@@ -74,47 +56,29 @@ object AggQueries extends QueryModule {
         count(when(col("l_discount") > 0.05, lit(1))).as("n_discounted"))
     },
 
-    Q("agg_having",
+    Q.sameSql("agg_having",
       """SELECT l_partkey, sum(l_quantity) AS total_qty
-        |FROM lineitem GROUP BY l_partkey HAVING sum(l_quantity) > 100""".stripMargin) { (s, _) =>
-      s.table("lineitem").groupBy("l_partkey")
-        .agg(sum("l_quantity").as("total_qty"))
-        .filter(col("total_qty") > 100)
-    },
+        |FROM lineitem GROUP BY l_partkey HAVING sum(l_quantity) > 100""".stripMargin),
 
-    Q("agg_rollup",
+    Q.sameSql("agg_rollup",
       """SELECT l_returnflag, l_linestatus, sum(l_quantity) AS sum_qty,
         |  CAST(count(*) AS BIGINT) AS cnt
-        |FROM lineitem GROUP BY ROLLUP(l_returnflag, l_linestatus)""".stripMargin) { (s, _) =>
-      s.table("lineitem").rollup("l_returnflag", "l_linestatus")
-        .agg(sum("l_quantity").as("sum_qty"), count(lit(1)).as("cnt"))
-    },
+        |FROM lineitem GROUP BY ROLLUP(l_returnflag, l_linestatus)""".stripMargin),
 
-    Q("agg_cube",
+    Q.sameSql("agg_cube",
       """SELECT o_orderstatus, o_orderpriority, sum(o_totalprice) AS total,
         |  CAST(count(*) AS BIGINT) AS cnt
-        |FROM orders GROUP BY CUBE(o_orderstatus, o_orderpriority)""".stripMargin) { (s, _) =>
-      s.table("orders").cube("o_orderstatus", "o_orderpriority")
-        .agg(sum("o_totalprice").as("total"), count(lit(1)).as("cnt"))
-    },
+        |FROM orders GROUP BY CUBE(o_orderstatus, o_orderpriority)""".stripMargin),
 
     // GROUPING SETS + grouping() marker — GroupIdOperator.java:32,
     // GroupingOperationRewriter.java.
-    Q("agg_grouping_sets",
+    Q.sameSql("agg_grouping_sets",
       """SELECT l_returnflag, l_linestatus,
         |  CAST(grouping(l_returnflag) AS INT) AS g_flag,
         |  CAST(grouping(l_linestatus) AS INT) AS g_status,
         |  sum(l_quantity) AS sum_qty
         |FROM lineitem
-        |GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), (l_returnflag, l_linestatus))""".stripMargin) { (s, _) =>
-      s.sql(
-        """SELECT l_returnflag, l_linestatus,
-          |  CAST(grouping(l_returnflag) AS INT) AS g_flag,
-          |  CAST(grouping(l_linestatus) AS INT) AS g_status,
-          |  sum(l_quantity) AS sum_qty
-          |FROM lineitem
-          |GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), (l_returnflag, l_linestatus))""".stripMargin)
-    },
+        |GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), (l_returnflag, l_linestatus))""".stripMargin),
 
     // min_by / max_by — minmaxby/ MaxByAggregationFunction (DuckDB:
     // arg_*). The ordering key embeds c_custkey so ties on the 2-decimal
@@ -135,34 +99,23 @@ object AggQueries extends QueryModule {
 
     // Statistics aggregates — VarianceAggregation.java,
     // DoubleCovarianceAggregation.java, DoubleCorrelationAggregation.java.
-    Q("agg_stats",
+    Q.sameSql("agg_stats",
       """SELECT var_samp(l_quantity) AS vs, var_pop(l_quantity) AS vp,
         |  stddev_samp(l_quantity) AS ss, stddev_pop(l_quantity) AS sp,
         |  corr(l_quantity, l_extendedprice) AS c,
         |  covar_samp(l_quantity, l_extendedprice) AS cvs,
         |  covar_pop(l_quantity, l_extendedprice) AS cvp
-        |FROM lineitem""".stripMargin) { (s, _) =>
-      s.table("lineitem").agg(
-        var_samp("l_quantity").as("vs"), var_pop("l_quantity").as("vp"),
-        stddev_samp("l_quantity").as("ss"), stddev_pop("l_quantity").as("sp"),
-        corr("l_quantity", "l_extendedprice").as("c"),
-        covar_samp("l_quantity", "l_extendedprice").as("cvs"),
-        covar_pop("l_quantity", "l_extendedprice").as("cvp"))
-    },
+        |FROM lineitem""".stripMargin),
 
     // Linear regression aggregates — DoubleRegressionAggregation.java
     // (regr_slope/regr_intercept); per-group over the returnflag split.
     // Rounded to 6 decimals on both sides: the two engines' summation
     // orders differ at ~1e-13 relative, past the comparator's tolerance.
-    Q("agg_regr",
+    Q.sameSql("agg_regr",
       """SELECT l_returnflag,
         |  round(regr_slope(l_extendedprice, l_quantity), 6) AS slope,
         |  round(regr_intercept(l_extendedprice, l_quantity), 6) AS icept
-        |FROM lineitem GROUP BY l_returnflag""".stripMargin) { (s, _) =>
-      s.table("lineitem").groupBy("l_returnflag").agg(
-        round(regr_slope(col("l_extendedprice"), col("l_quantity")), 6).as("slope"),
-        round(regr_intercept(col("l_extendedprice"), col("l_quantity")), 6).as("icept"))
-    },
+        |FROM lineitem GROUP BY l_returnflag""".stripMargin),
 
     // Interval aggregation — IntervalYearToMonthSum/AverageAggregation,
     // IntervalDayToSecondSum/AverageAggregation. Real ANSI interval
@@ -208,24 +161,17 @@ object AggQueries extends QueryModule {
         round(kurtosis(col("l_quantity")), 6).as("kurt"))
     },
 
-    Q("agg_bool",
+    Q.sameSql("agg_bool",
       """SELECT l_returnflag,
         |  bool_and(l_discount <= 0.1) AS all_small_disc,
         |  bool_or(l_quantity >= 49) AS any_big_qty
-        |FROM lineitem GROUP BY l_returnflag""".stripMargin) { (s, _) =>
-      s.table("lineitem").groupBy("l_returnflag").agg(
-        bool_and(col("l_discount") <= 0.1).as("all_small_disc"),
-        bool_or(col("l_quantity") >= 49).as("any_big_qty"))
-    },
+        |FROM lineitem GROUP BY l_returnflag""".stripMargin),
 
     // count_if — CountIfAggregation.java.
-    Q("agg_count_if",
+    Q.sameSql("agg_count_if",
       """SELECT o_orderstatus,
         |  CAST(count_if(o_totalprice > 200000) AS BIGINT) AS n_big
-        |FROM orders GROUP BY o_orderstatus""".stripMargin) { (s, _) =>
-      s.table("orders").groupBy("o_orderstatus")
-        .agg(count_if(col("o_totalprice") > 200000).as("n_big"))
-    },
+        |FROM orders GROUP BY o_orderstatus""".stripMargin),
 
     // Sorted array_agg — arrayagg/ + PruneOrderByInAggregation; Spark
     // expresses ORDER BY inside agg as sort_array(collect_list(...)).
@@ -366,29 +312,20 @@ object AggQueries extends QueryModule {
     },
 
     // geometric_mean — reference aggregation/GeometricMeanAggregations.
-    Q("agg_geometric_mean",
+    Q.sameSql("agg_geometric_mean",
       """SELECT l_returnflag, exp(avg(ln(l_quantity))) AS geo_mean_qty
-        |FROM lineitem GROUP BY l_returnflag""".stripMargin) { (s, _) =>
-      s.table("lineitem").groupBy("l_returnflag")
-        .agg(exp(avg(log(col("l_quantity")))).as("geo_mean_qty"))
-    },
+        |FROM lineitem GROUP BY l_returnflag""".stripMargin),
 
-    // bitwise_and_agg / bitwise_or_agg — BitwiseAndAggregation.java:38,
-    // BitwiseOrAggregation.java:38 — aliased onto Spark's native
-    // bit_and/bit_or (partial/final, constant buffers); bit_xor rides
-    // along (Spark-native, same family as the checksum path).
-    Q("agg_bitwise",
+    // bit_and / bit_or — Spark's native aggregates (partial/final,
+    // constant buffers) behind the reference's bitwise_and_agg /
+    // bitwise_or_agg (BitwiseAndAggregation.java:38,
+    // BitwiseOrAggregation.java:38), which FunctionRegistry aliases onto
+    // them (EngineSpecs pins the alias); bit_xor rides along (same family
+    // as the checksum path).
+    Q.sameSql("agg_bitwise",
       """SELECT n_regionkey,
         |  bit_and(n_nationkey) AS band,
         |  bit_or(n_nationkey) AS bor,
         |  bit_xor(n_nationkey) AS bxor
-        |FROM nation GROUP BY n_regionkey""".stripMargin) { (s, _) =>
-      graft.functions.FunctionRegistry.installAll(s)
-      s.sql(
-        """SELECT n_regionkey,
-          |  bitwise_and_agg(n_nationkey) AS band,
-          |  bitwise_or_agg(n_nationkey) AS bor,
-          |  bit_xor(n_nationkey) AS bxor
-          |FROM nation GROUP BY n_regionkey""".stripMargin)
-    })
+        |FROM nation GROUP BY n_regionkey""".stripMargin))
 }

@@ -33,7 +33,7 @@ object EventQueries extends QueryModule {
     // Gap-based sessionization (30-min inactivity) via lag + running sum —
     // the classic window-function sessionization; identical SQL runs on
     // both engines.
-    Q("ev_sessionize",
+    Q.sameSql("ev_sessionize",
       """WITH flags AS (
         |  SELECT user_id, ts, event_id,
         |    CASE WHEN lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) IS NULL
@@ -48,24 +48,7 @@ object EventQueries extends QueryModule {
         |SELECT user_id, CAST(session_id AS BIGINT) AS session_id,
         |  CAST(count(*) AS BIGINT) AS n_events,
         |  min(ts) AS session_start, max(ts) AS session_end
-        |FROM sessions GROUP BY user_id, session_id""".stripMargin) { (s, _) =>
-      s.sql(
-        """WITH flags AS (
-          |  SELECT user_id, ts, event_id,
-          |    CASE WHEN lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) IS NULL
-          |           OR ts - lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) > INTERVAL 30 MINUTE
-          |         THEN 1 ELSE 0 END AS is_new
-          |  FROM events),
-          |sessions AS (
-          |  SELECT user_id, ts, event_id,
-          |    sum(is_new) OVER (PARTITION BY user_id ORDER BY ts, event_id
-          |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_id
-          |  FROM flags)
-          |SELECT user_id, CAST(session_id AS BIGINT) AS session_id,
-          |  CAST(count(*) AS BIGINT) AS n_events,
-          |  min(ts) AS session_start, max(ts) AS session_end
-          |FROM sessions GROUP BY user_id, session_id""".stripMargin)
-    },
+        |FROM sessions GROUP BY user_id, session_id""".stripMargin),
 
     Q("ev_json_payload",
       """SELECT event_type,
@@ -97,7 +80,7 @@ object EventQueries extends QueryModule {
     // Multi-step funnel: signup -> first click after signup -> first
     // purchase after that click; per-stage user counts. Identical SQL
     // runs on both engines (FILTER + correlated stage joins).
-    Q("ev_funnel",
+    Q.sameSql("ev_funnel",
       """WITH s AS (
         |  SELECT user_id, min(ts) FILTER (WHERE event_type = 'signup') AS signup_ts
         |  FROM events GROUP BY user_id),
@@ -114,30 +97,11 @@ object EventQueries extends QueryModule {
         |SELECT
         |  CAST((SELECT count(*) FROM s WHERE signup_ts IS NOT NULL) AS BIGINT) AS n_signup,
         |  CAST((SELECT count(*) FROM c) AS BIGINT) AS n_click_after,
-        |  CAST((SELECT count(*) FROM p) AS BIGINT) AS n_purchase_after""".stripMargin) { (s, _) =>
-      s.sql(
-        """WITH s AS (
-          |  SELECT user_id, min(ts) FILTER (WHERE event_type = 'signup') AS signup_ts
-          |  FROM events GROUP BY user_id),
-          |c AS (
-          |  SELECT e.user_id, min(e.ts) AS click_ts
-          |  FROM events e JOIN s ON e.user_id = s.user_id
-          |  WHERE e.event_type = 'click' AND e.ts > s.signup_ts
-          |  GROUP BY e.user_id),
-          |p AS (
-          |  SELECT e.user_id, min(e.ts) AS purchase_ts
-          |  FROM events e JOIN c ON e.user_id = c.user_id
-          |  WHERE e.event_type = 'purchase' AND e.ts > c.click_ts
-          |  GROUP BY e.user_id)
-          |SELECT
-          |  CAST((SELECT count(*) FROM s WHERE signup_ts IS NOT NULL) AS BIGINT) AS n_signup,
-          |  CAST((SELECT count(*) FROM c) AS BIGINT) AS n_click_after,
-          |  CAST((SELECT count(*) FROM p) AS BIGINT) AS n_purchase_after""".stripMargin)
-    },
+        |  CAST((SELECT count(*) FROM p) AS BIGINT) AS n_purchase_after""".stripMargin),
 
     // Cohort retention: users grouped by first-seen day; how many were
     // active again 1-7 days later. Pure relational (two aggs + join).
-    Q("ev_retention",
+    Q.sameSql("ev_retention",
       """WITH first_seen AS (
         |  SELECT user_id, CAST(date_trunc('day', min(ts)) AS TIMESTAMP) AS cohort_day
         |  FROM events GROUP BY user_id),
@@ -148,36 +112,16 @@ object EventQueries extends QueryModule {
         |  CAST(count(DISTINCT CASE WHEN a.day > f.cohort_day
         |       AND a.day <= f.cohort_day + INTERVAL 7 DAY THEN a.user_id END) AS BIGINT) AS retained_7d
         |FROM first_seen f LEFT JOIN activity a ON f.user_id = a.user_id
-        |GROUP BY cohort_day""".stripMargin) { (s, _) =>
-      s.sql(
-        """WITH first_seen AS (
-          |  SELECT user_id, CAST(date_trunc('day', min(ts)) AS TIMESTAMP) AS cohort_day
-          |  FROM events GROUP BY user_id),
-          |activity AS (
-          |  SELECT DISTINCT user_id, CAST(date_trunc('day', ts) AS TIMESTAMP) AS day FROM events)
-          |SELECT cohort_day,
-          |  CAST(count(DISTINCT f.user_id) AS BIGINT) AS cohort_size,
-          |  CAST(count(DISTINCT CASE WHEN a.day > f.cohort_day
-          |       AND a.day <= f.cohort_day + INTERVAL 7 DAY THEN a.user_id END) AS BIGINT) AS retained_7d
-          |FROM first_seen f LEFT JOIN activity a ON f.user_id = a.user_id
-          |GROUP BY cohort_day""".stripMargin)
-    },
+        |GROUP BY cohort_day""".stripMargin),
 
     // Daily active users + value stats — the dashboard-style rollup.
-    Q("ev_daily_stats",
+    Q.sameSql("ev_daily_stats",
       """SELECT CAST(date_trunc('day', ts) AS TIMESTAMP) AS day,
         |  CAST(count(DISTINCT user_id) AS BIGINT) AS dau,
         |  CAST(count(*) AS BIGINT) AS n_events,
         |  avg(value) AS avg_value,
         |  max(value) AS max_value
-        |FROM events GROUP BY 1""".stripMargin) { (s, _) =>
-      s.table("events")
-        .groupBy(date_trunc("day", col("ts")).as("day"))
-        .agg(countDistinct("user_id").as("dau"),
-          count(lit(1)).as("n_events"),
-          avg("value").as("avg_value"),
-          max("value").as("max_value"))
-    },
+        |FROM events GROUP BY 1""".stripMargin),
 
     // Batch twin of StreamingOps.viewClickAttribution (the watermarked
     // stream-stream interval join): every click attributed to same-user

@@ -54,7 +54,7 @@ object FuncQueries extends QueryModule {
         col("p_name").like("%a%").as("has_a"))
     },
 
-    Q("func_math",
+    Q.sameSql("func_math",
       """SELECT l_orderkey, l_linenumber, l_quantity,
         |  abs(l_discount - 0.05) AS abs_d,
         |  CAST(ceil(l_extendedprice) AS BIGINT) AS ceil_p,
@@ -74,28 +74,7 @@ object FuncQueries extends QueryModule {
         |  radians(l_quantity) AS rad,
         |  greatest(l_quantity, l_discount * 300) AS gr,
         |  least(l_quantity, l_discount * 300) AS ls
-        |FROM lineitem WHERE l_orderkey <= 300""".stripMargin) { (s, _) =>
-      s.table("lineitem").filter(col("l_orderkey") <= 300).select(
-        col("l_orderkey"), col("l_linenumber"), col("l_quantity"),
-        abs(col("l_discount") - 0.05).as("abs_d"),
-        ceil(col("l_extendedprice")).as("ceil_p"),
-        floor(col("l_extendedprice")).as("floor_p"),
-        round(col("l_extendedprice") / 7.0, 3).as("round_q"),
-        sqrt(col("l_quantity")).as("sqrt_q"),
-        exp(col("l_discount")).as("exp_d"),
-        round(log(col("l_extendedprice")), 12).as("ln_p"),
-        round(log10(col("l_extendedprice")), 12).as("log10_p"),
-        pow(col("l_quantity"), 2).as("qty_sq"),
-        (col("l_orderkey") % 7).as("mod7"),
-        signum(col("l_discount") - 0.05).as("sgn"),
-        sin(col("l_discount")).as("sin_d"),
-        cos(col("l_discount")).as("cos_d"),
-        round(atan2(col("l_quantity"), lit(3.0)), 12).as("at2"),
-        degrees(col("l_discount")).as("deg"),
-        radians(col("l_quantity")).as("rad"),
-        greatest(col("l_quantity"), col("l_discount") * 300).as("gr"),
-        least(col("l_quantity"), col("l_discount") * 300).as("ls"))
-    },
+        |FROM lineitem WHERE l_orderkey <= 300""".stripMargin),
 
     Q("func_datetime",
       """SELECT o_orderkey,

@@ -19,50 +19,27 @@ object JoinQueries extends QueryModule {
 
   def queries: Seq[Q] = Seq(
 
-    Q("join_inner_dims",
+    Q.sameSql("join_inner_dims",
       """SELECT s_name, n_name, r_name
         |FROM supplier
         |JOIN nation ON s_nationkey = n_nationkey
-        |JOIN region ON n_regionkey = r_regionkey""".stripMargin) { (s, _) =>
-      s.table("supplier")
-        .join(broadcast(s.table("nation")), col("s_nationkey") === col("n_nationkey"))
-        .join(broadcast(s.table("region")), col("n_regionkey") === col("r_regionkey"))
-        .select("s_name", "n_name", "r_name")
-    },
+        |JOIN region ON n_regionkey = r_regionkey""".stripMargin),
 
-    Q("join_left_outer",
+    Q.sameSql("join_left_outer",
       """SELECT c_custkey, CAST(count(o_orderkey) AS BIGINT) AS order_cnt
         |FROM customer LEFT JOIN orders ON c_custkey = o_custkey
-        |GROUP BY c_custkey""".stripMargin) { (s, _) =>
-      s.table("customer")
-        .join(s.table("orders"), col("c_custkey") === col("o_custkey"), "left")
-        .groupBy("c_custkey")
-        .agg(count("o_orderkey").as("order_cnt"))
-    },
+        |GROUP BY c_custkey""".stripMargin),
 
-    Q("join_right_outer",
+    Q.sameSql("join_right_outer",
       """SELECT p_partkey, CAST(count(l_orderkey) AS BIGINT) AS li_cnt
         |FROM lineitem RIGHT JOIN part ON l_partkey = p_partkey
-        |GROUP BY p_partkey""".stripMargin) { (s, _) =>
-      s.table("lineitem")
-        .join(s.table("part"), col("l_partkey") === col("p_partkey"), "right")
-        .groupBy("p_partkey")
-        .agg(count("l_orderkey").as("li_cnt"))
-    },
+        |GROUP BY p_partkey""".stripMargin),
 
-    Q("join_full_outer",
+    Q.sameSql("join_full_outer",
       """SELECT coalesce(c.nk, s.nk) AS nationkey, c.customers AS customers, s.suppliers AS suppliers
         |FROM (SELECT c_nationkey AS nk, CAST(count(*) AS BIGINT) AS customers FROM customer GROUP BY 1) c
         |FULL JOIN (SELECT s_nationkey AS nk, CAST(count(*) AS BIGINT) AS suppliers FROM supplier GROUP BY 1) s
-        |  ON c.nk = s.nk""".stripMargin) { (s, _) =>
-      val cn = s.table("customer").groupBy(col("c_nationkey").as("nk_c"))
-        .agg(count(lit(1)).as("customers"))
-      val sn = s.table("supplier").groupBy(col("s_nationkey").as("nk_s"))
-        .agg(count(lit(1)).as("suppliers"))
-      cn.join(sn, col("nk_c") === col("nk_s"), "full_outer")
-        .select(coalesce(col("nk_c"), col("nk_s")).as("nationkey"),
-          col("customers"), col("suppliers"))
-    },
+        |  ON c.nk = s.nk""".stripMargin),
 
     Q("join_semi",
       """SELECT c_custkey, c_name FROM customer
@@ -81,21 +58,14 @@ object JoinQueries extends QueryModule {
         .select("c_custkey", "c_name")
     },
 
-    Q("join_cross",
-      """SELECT r_name, n_name FROM region CROSS JOIN nation""".stripMargin) { (s, _) =>
-      s.table("region").crossJoin(s.table("nation")).select("r_name", "n_name")
-    },
+    Q.sameSql("join_cross",
+      """SELECT r_name, n_name FROM region CROSS JOIN nation""".stripMargin),
 
     // Theta (non-equi) band join — nested-loop in the reference; Spark
     // broadcasts the 10-row supplier side (BroadcastNestedLoopJoin).
-    Q("join_theta_band",
+    Q.sameSql("join_theta_band",
       """SELECT s_suppkey, c_custkey FROM supplier JOIN customer
-        |ON c_acctbal BETWEEN s_acctbal - 50 AND s_acctbal + 50""".stripMargin) { (s, _) =>
-      broadcast(s.table("supplier"))
-        .join(s.table("customer"),
-          col("c_acctbal").between(col("s_acctbal") - 50, col("s_acctbal") + 50))
-        .select("s_suppkey", "c_custkey")
-    },
+        |ON c_acctbal BETWEEN s_acctbal - 50 AND s_acctbal + 50""".stripMargin),
 
     // The same band join decomposed to an EQUI-join on width-sized bins
     // (RangeJoinOps) — the scale path: Spark plans the bare predicate

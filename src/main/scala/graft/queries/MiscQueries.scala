@@ -16,39 +16,25 @@ object MiscQueries extends QueryModule {
   def queries: Seq[Q] = Seq(
 
     // NULLS FIRST / NULLS LAST with a computed nullable key.
-    Q("misc_orderby_nulls",
+    Q.sameSql("misc_orderby_nulls",
       """SELECT o_orderkey, nullif(o_orderstatus, 'O') AS nullable_status
         |FROM orders
         |ORDER BY nullable_status NULLS FIRST, o_orderkey
-        |LIMIT 100""".stripMargin) { (s, _) =>
-      s.table("orders")
-        .select(col("o_orderkey"), nullif(col("o_orderstatus"), lit("O")).as("nullable_status"))
-        .orderBy(col("nullable_status").asc_nulls_first, col("o_orderkey"))
-        .limit(100)
-    },
+        |LIMIT 100""".stripMargin),
 
     // IS [NOT] DISTINCT FROM — null-safe comparison (Spark <=>).
-    Q("misc_is_distinct",
+    Q.sameSql("misc_is_distinct",
       """SELECT o_orderkey,
         |  nullif(o_orderstatus, 'O') IS DISTINCT FROM 'F' AS d1,
         |  nullif(o_orderstatus, 'O') IS NOT DISTINCT FROM NULL AS d2
-        |FROM orders WHERE o_orderkey <= 1000""".stripMargin) { (s, _) =>
-      val ns = nullif(col("o_orderstatus"), lit("O"))
-      s.table("orders").filter(col("o_orderkey") <= 1000).select(col("o_orderkey"),
-        (!(ns <=> lit("F"))).as("d1"),
-        (ns <=> lit(null).cast("string")).as("d2"))
-    },
+        |FROM orders WHERE o_orderkey <= 1000""".stripMargin),
 
     // LIKE with ESCAPE — LikeFunctions.java compiled LIKE.
-    Q("misc_like_escape",
+    Q.sameSql("misc_like_escape",
       """SELECT p_partkey, p_type,
         |  p_type LIKE '%MEDIUM%' AS has_medium,
         |  concat(p_brand, '%') LIKE 'Brand#1!%' ESCAPE '!' AS ends_pct_after_1
-        |FROM part""".stripMargin) { (s, _) =>
-      s.table("part").select(col("p_partkey"), col("p_type"),
-        col("p_type").like("%MEDIUM%").as("has_medium"),
-        expr("concat(p_brand, '%') LIKE 'Brand#1!%' ESCAPE '!'").as("ends_pct_after_1"))
-    },
+        |FROM part""".stripMargin),
 
     // Row/struct comparison — RowComparisonOperator.java.
     Q("misc_struct_compare",
@@ -69,18 +55,12 @@ object MiscQueries extends QueryModule {
     // cast to double because the verifier's pandas bridge renders DuckDB
     // decimals as float64 (Decimal "x.9310" vs float "x.931" never hashes
     // equal with trailing zeros).
-    Q("misc_decimal",
+    Q.sameSql("misc_decimal",
       """SELECT l_returnflag,
         |  CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS exact_sum,
         |  CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2)) * CAST(l_discount AS DECIMAL(5,2))) AS DOUBLE) AS exact_disc,
         |  CAST(CAST(avg(CAST(l_quantity AS DECIMAL(10,2))) AS DECIMAL(16,6)) AS DOUBLE) AS avg_qty
-        |FROM lineitem GROUP BY l_returnflag""".stripMargin) { (s, _) =>
-      s.table("lineitem").groupBy("l_returnflag").agg(
-        sum(col("l_extendedprice").cast("decimal(18,2)")).cast("double").as("exact_sum"),
-        sum(col("l_extendedprice").cast("decimal(18,2)") * col("l_discount").cast("decimal(5,2)"))
-          .cast("double").as("exact_disc"),
-        avg(col("l_quantity").cast("decimal(10,2)")).cast("decimal(16,6)").cast("double").as("avg_qty"))
-    },
+        |FROM lineitem GROUP BY l_returnflag""".stripMargin),
 
     // char(n) fixed-length semantics — presto-spi Chars.java / CharType
     // .java: cast truncates to n and pads with spaces, length() of a
@@ -148,13 +128,9 @@ object MiscQueries extends QueryModule {
     },
 
     // Year-month interval arithmetic — DateTimeOperators.java.
-    Q("misc_interval_ym",
+    Q.sameSql("misc_interval_ym",
       """SELECT o_orderkey,
         |  o_orderdate + INTERVAL 3 MONTH AS plus_3m,
         |  o_orderdate - INTERVAL 1 YEAR AS minus_1y
-        |FROM orders WHERE o_orderkey <= 1000""".stripMargin) { (s, _) =>
-      s.table("orders").filter(col("o_orderkey") <= 1000).select(col("o_orderkey"),
-        (col("o_orderdate") + expr("INTERVAL 3 MONTH")).as("plus_3m"),
-        (col("o_orderdate") - expr("INTERVAL 1 YEAR")).as("minus_1y"))
-    })
+        |FROM orders WHERE o_orderkey <= 1000""".stripMargin))
 }

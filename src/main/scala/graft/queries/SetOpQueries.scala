@@ -1,7 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.functions._
-
 /** Set operations (SURVEY §2.7). The reference lowers INTERSECT/EXCEPT to
   * union + marker aggregation (ImplementIntersectAndExceptAsUnion.java:105,
   * DISTINCT semantics only — INTERSECT ALL / EXCEPT ALL are rejected by
@@ -12,46 +10,30 @@ object SetOpQueries extends QueryModule {
 
   def queries: Seq[Q] = Seq(
 
-    Q("setop_union_all",
+    Q.sameSql("setop_union_all",
       """SELECT c_custkey AS key, 'customer' AS src FROM customer
         |UNION ALL
-        |SELECT o_custkey AS key, 'order' AS src FROM orders""".stripMargin) { (s, _) =>
-      s.table("customer").select(col("c_custkey").as("key"), lit("customer").as("src"))
-        .union(s.table("orders").select(col("o_custkey").as("key"), lit("order").as("src")))
-    },
+        |SELECT o_custkey AS key, 'order' AS src FROM orders""".stripMargin),
 
-    Q("setop_union_distinct",
+    Q.sameSql("setop_union_distinct",
       """SELECT c_nationkey AS nk FROM customer
         |UNION
-        |SELECT s_nationkey AS nk FROM supplier""".stripMargin) { (s, _) =>
-      s.table("customer").select(col("c_nationkey").as("nk"))
-        .union(s.table("supplier").select(col("s_nationkey").as("nk")))
-        .distinct()
-    },
+        |SELECT s_nationkey AS nk FROM supplier""".stripMargin),
 
-    Q("setop_intersect",
+    Q.sameSql("setop_intersect",
       """SELECT c_custkey AS key FROM customer
         |INTERSECT
-        |SELECT o_custkey AS key FROM orders""".stripMargin) { (s, _) =>
-      s.table("customer").select(col("c_custkey").as("key"))
-        .intersect(s.table("orders").select(col("o_custkey").as("key")))
-    },
+        |SELECT o_custkey AS key FROM orders""".stripMargin),
 
-    Q("setop_except",
+    Q.sameSql("setop_except",
       """SELECT c_custkey AS key FROM customer
         |EXCEPT
-        |SELECT o_custkey AS key FROM orders""".stripMargin) { (s, _) =>
-      s.table("customer").select(col("c_custkey").as("key"))
-        .except(s.table("orders").select(col("o_custkey").as("key")))
-    },
+        |SELECT o_custkey AS key FROM orders""".stripMargin),
 
     // Spark extension beyond the reference (which rejects INTERSECT ALL /
     // EXCEPT ALL): multiset semantics, free via Catalyst.
-    Q("setop_except_all",
+    Q.sameSql("setop_except_all",
       """SELECT l_partkey AS key FROM lineitem WHERE l_quantity > 10
         |EXCEPT ALL
-        |SELECT l_partkey AS key FROM lineitem WHERE l_quantity > 40""".stripMargin) { (s, _) =>
-      s.table("lineitem").filter(col("l_quantity") > 10).select(col("l_partkey").as("key"))
-        .exceptAll(s.table("lineitem").filter(col("l_quantity") > 40).select(col("l_partkey").as("key")))
-    })
+        |SELECT l_partkey AS key FROM lineitem WHERE l_quantity > 40""".stripMargin))
 }

@@ -14,13 +14,9 @@ object ShapeQueries extends QueryModule {
 
   def queries: Seq[Q] = Seq(
 
-    Q("shape_values",
+    Q.sameSql("shape_values",
       """SELECT id, name, CAST(val AS DOUBLE) AS val
-        |FROM (VALUES (1, 'alpha', 1.5), (2, 'beta', 2.5), (3, NULL, NULL)) AS t(id, name, val)""".stripMargin) { (s, _) =>
-      s.sql(
-        """SELECT id, name, CAST(val AS DOUBLE) AS val
-          |FROM VALUES (1, 'alpha', 1.5D), (2, 'beta', 2.5D), (3, NULL, NULL) AS t(id, name, val)""".stripMargin)
-    },
+        |FROM (VALUES (1, 'alpha', 1.5), (2, 'beta', 2.5), (3, NULL, NULL)) AS t(id, name, val)""".stripMargin),
 
     // UNNEST: explode the split word array — UnnestOperator/ArrayUnnester.
     Q("shape_unnest_wordcount",
@@ -67,99 +63,57 @@ object ShapeQueries extends QueryModule {
     },
 
     // Scalar subquery (EnforceSingleRow) in SELECT and WHERE.
-    Q("shape_scalar_subquery",
+    Q.sameSql("shape_scalar_subquery",
       """SELECT o_orderkey, o_totalprice,
         |  o_totalprice - (SELECT avg(o_totalprice) FROM orders) AS delta_from_avg
         |FROM orders
-        |WHERE o_totalprice > (SELECT avg(o_totalprice) FROM orders) * 1.5""".stripMargin) { (s, _) =>
-      s.sql(
-        """SELECT o_orderkey, o_totalprice,
-          |  o_totalprice - (SELECT avg(o_totalprice) FROM orders) AS delta_from_avg
-          |FROM orders
-          |WHERE o_totalprice > (SELECT avg(o_totalprice) FROM orders) * 1.5""".stripMargin)
-    },
+        |WHERE o_totalprice > (SELECT avg(o_totalprice) FROM orders) * 1.5""".stripMargin),
 
     // Correlated EXISTS — decorrelated to a semi join by Catalyst exactly
     // like the reference's TransformExistsApplyToLateralNode chain.
-    Q("shape_exists_correlated",
+    Q.sameSql("shape_exists_correlated",
       """SELECT c_custkey, c_name FROM customer c
         |WHERE EXISTS (SELECT 1 FROM orders o
-        |              WHERE o.o_custkey = c.c_custkey AND o.o_totalprice > 300000)""".stripMargin) { (s, _) =>
-      s.sql(
-        """SELECT c_custkey, c_name FROM customer c
-          |WHERE EXISTS (SELECT 1 FROM orders o
-          |              WHERE o.o_custkey = c.c_custkey AND o.o_totalprice > 300000)""".stripMargin)
-    },
+        |              WHERE o.o_custkey = c.c_custkey AND o.o_totalprice > 300000)""".stripMargin),
 
     // Correlated scalar-aggregate subquery.
-    Q("shape_correlated_scalar",
+    Q.sameSql("shape_correlated_scalar",
       """SELECT o_orderkey FROM orders o
         |WHERE o_totalprice > (SELECT 2 * avg(o2.o_totalprice) FROM orders o2
-        |                      WHERE o2.o_custkey = o.o_custkey)""".stripMargin) { (s, _) =>
-      s.sql(
-        """SELECT o_orderkey FROM orders o
-          |WHERE o_totalprice > (SELECT 2 * avg(o2.o_totalprice) FROM orders o2
-          |                      WHERE o2.o_custkey = o.o_custkey)""".stripMargin)
-    },
+        |                      WHERE o2.o_custkey = o.o_custkey)""".stripMargin),
 
     // Explicit SQL LATERAL join — plan/LateralJoinNode.java (Spark >=3.2
     // LATERAL subquery; identical text on both engines).
-    Q("shape_lateral_join",
+    Q.sameSql("shape_lateral_join",
       """SELECT o.o_orderkey, t.mq, t.lines
         |FROM orders o,
         |LATERAL (SELECT max(l_quantity) AS mq, CAST(count(*) AS BIGINT) AS lines
         |         FROM lineitem WHERE l_orderkey = o.o_orderkey) t
-        |WHERE o.o_orderkey <= 2000""".stripMargin) { (s, _) =>
-      s.sql(
-        """SELECT o.o_orderkey, t.mq, t.lines
-          |FROM orders o,
-          |LATERAL (SELECT max(l_quantity) AS mq, CAST(count(*) AS BIGINT) AS lines
-          |         FROM lineitem WHERE l_orderkey = o.o_orderkey) t
-          |WHERE o.o_orderkey <= 2000""".stripMargin)
-    },
+        |WHERE o.o_orderkey <= 2000""".stripMargin),
 
-    Q("shape_cte",
+    Q.sameSql("shape_cte",
       """WITH nation_avg AS (
         |  SELECT c_nationkey AS nk, avg(c_acctbal) AS avg_bal FROM customer GROUP BY c_nationkey)
         |SELECT c_custkey, c_acctbal, avg_bal
         |FROM customer JOIN nation_avg ON c_nationkey = nk
-        |WHERE c_acctbal > avg_bal * 1.8""".stripMargin) { (s, _) =>
-      s.sql(
-        """WITH nation_avg AS (
-          |  SELECT c_nationkey AS nk, avg(c_acctbal) AS avg_bal FROM customer GROUP BY c_nationkey)
-          |SELECT c_custkey, c_acctbal, avg_bal
-          |FROM customer JOIN nation_avg ON c_nationkey = nk
-          |WHERE c_acctbal > avg_bal * 1.8""".stripMargin)
-    },
+        |WHERE c_acctbal > avg_bal * 1.8""".stripMargin),
 
     // CASE / COALESCE / NULLIF / TRY_CAST — conditional surface.
-    Q("shape_conditionals",
+    Q.sameSql("shape_conditionals",
       """SELECT o_orderkey,
         |  CASE WHEN o_totalprice > 300000 THEN 'large'
         |       WHEN o_totalprice > 100000 THEN 'medium'
         |       ELSE 'small' END AS size_class,
         |  coalesce(nullif(o_orderstatus, 'O'), 'open') AS status_label,
         |  try_cast(o_orderpriority AS INT) AS prio_as_int
-        |FROM orders WHERE o_orderkey <= 30000""".stripMargin) { (s, _) =>
-      s.table("orders").filter(col("o_orderkey") <= 30000).select(col("o_orderkey"),
-        when(col("o_totalprice") > 300000, "large")
-          .when(col("o_totalprice") > 100000, "medium")
-          .otherwise("small").as("size_class"),
-        coalesce(nullif(col("o_orderstatus"), lit("O")), lit("open")).as("status_label"),
-        expr("try_cast(o_orderpriority AS INT)").as("prio_as_int"))
-    },
+        |FROM orders WHERE o_orderkey <= 30000""".stripMargin),
 
-    Q("shape_distinct",
-      """SELECT DISTINCT o_orderstatus, o_orderpriority FROM orders""".stripMargin) { (s, _) =>
-      s.table("orders").select("o_orderstatus", "o_orderpriority").distinct()
-    },
+    Q.sameSql("shape_distinct",
+      """SELECT DISTINCT o_orderstatus, o_orderpriority FROM orders""".stripMargin),
 
     // DistinctLimit — deterministic form (distinct -> order -> limit).
-    Q("shape_distinct_limit",
-      """SELECT l_partkey FROM lineitem GROUP BY l_partkey ORDER BY l_partkey LIMIT 50""".stripMargin) { (s, _) =>
-      s.table("lineitem").select("l_partkey").distinct()
-        .orderBy("l_partkey").limit(50)
-    },
+    Q.sameSql("shape_distinct_limit",
+      """SELECT l_partkey FROM lineitem GROUP BY l_partkey ORDER BY l_partkey LIMIT 50""".stripMargin),
 
     // TABLESAMPLE BERNOULLI (SampleNode) — cross-engine nondeterministic,
     // so the oracle checks the statistical property instead of rows.

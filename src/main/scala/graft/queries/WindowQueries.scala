@@ -76,74 +76,43 @@ object WindowQueries extends QueryModule {
 
   def queries: Seq[Q] = Seq(
 
-    Q("win_ranking",
+    Q.sameSql("win_ranking",
       """SELECT l_orderkey, l_linenumber, l_quantity,
         |  CAST(row_number() OVER (PARTITION BY l_returnflag ORDER BY l_orderkey, l_linenumber, l_quantity) AS BIGINT) AS rn,
         |  CAST(rank() OVER (PARTITION BY l_returnflag ORDER BY l_quantity) AS BIGINT) AS rnk,
         |  CAST(dense_rank() OVER (PARTITION BY l_returnflag ORDER BY l_quantity) AS BIGINT) AS drnk
-        |FROM lineitem WHERE l_orderkey <= 500""".stripMargin) { (s, _) =>
-      val byKey = Window.partitionBy("l_returnflag").orderBy("l_orderkey", "l_linenumber", "l_quantity")
-      val byQty = Window.partitionBy("l_returnflag").orderBy("l_quantity")
-      s.table("lineitem").filter(col("l_orderkey") <= 500)
-        .select(col("l_orderkey"), col("l_linenumber"), col("l_quantity"),
-          row_number().over(byKey).cast("long").as("rn"),
-          rank().over(byQty).cast("long").as("rnk"),
-          dense_rank().over(byQty).cast("long").as("drnk"))
-    },
+        |FROM lineitem WHERE l_orderkey <= 500""".stripMargin),
 
-    Q("win_running_sum",
+    Q.sameSql("win_running_sum",
       """SELECT l_orderkey, l_linenumber,
         |  sum(l_quantity) OVER (PARTITION BY l_orderkey ORDER BY l_linenumber, l_quantity
         |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS running_qty
-        |FROM lineitem WHERE l_orderkey <= 500""".stripMargin) { (s, _) =>
-      val w = Window.partitionBy("l_orderkey").orderBy("l_linenumber", "l_quantity")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      s.table("lineitem").filter(col("l_orderkey") <= 500)
-        .select(col("l_orderkey"), col("l_linenumber"),
-          sum("l_quantity").over(w).as("running_qty"))
-    },
+        |FROM lineitem WHERE l_orderkey <= 500""".stripMargin),
 
     // RANGE frame over a timestamp with an interval bound — FrameInfo
     // RANGE + bounded PRECEDING. Value-based frame => deterministic
     // under date ties.
-    Q("win_range_interval",
+    Q.sameSql("win_range_interval",
       """SELECT o_orderkey,
         |  sum(o_totalprice) OVER (PARTITION BY o_custkey ORDER BY o_orderdate
         |    RANGE BETWEEN INTERVAL 90 DAY PRECEDING AND CURRENT ROW) AS rolling_90d
-        |FROM orders""".stripMargin) { (s, _) =>
-      s.sql(
-        """SELECT o_orderkey,
-          |  sum(o_totalprice) OVER (PARTITION BY o_custkey ORDER BY o_orderdate
-          |    RANGE BETWEEN INTERVAL 90 DAY PRECEDING AND CURRENT ROW) AS rolling_90d
-          |FROM orders""".stripMargin)
-    },
+        |FROM orders""".stripMargin),
 
     // Numeric RANGE frame (value-based bounds on a numeric sort key) —
     // the other FrameInfo RANGE variant beside the interval one. The
     // partition key is o_custkey (high cardinality): a 3-value key like
     // o_orderstatus funnels the whole table through 3 tasks at scale.
-    Q("win_range_numeric",
+    Q.sameSql("win_range_numeric",
       """SELECT o_orderkey,
         |  sum(o_totalprice) OVER (PARTITION BY o_custkey ORDER BY o_totalprice
         |    RANGE BETWEEN 10000.0 PRECEDING AND CURRENT ROW) AS near_total
-        |FROM orders""".stripMargin) { (s, _) =>
-      s.sql(
-        """SELECT o_orderkey,
-          |  sum(o_totalprice) OVER (PARTITION BY o_custkey ORDER BY o_totalprice
-          |    RANGE BETWEEN 10000.0 PRECEDING AND CURRENT ROW) AS near_total
-          |FROM orders""".stripMargin)
-    },
+        |FROM orders""".stripMargin),
 
-    Q("win_lead_lag",
+    Q.sameSql("win_lead_lag",
       """SELECT o_orderkey,
         |  lag(o_totalprice, 1) OVER (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey) AS prev_price,
         |  lead(o_totalprice, 1, -1.0) OVER (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey) AS next_price
-        |FROM orders""".stripMargin) { (s, _) =>
-      val w = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
-      s.table("orders").select(col("o_orderkey"),
-        lag("o_totalprice", 1).over(w).as("prev_price"),
-        lead("o_totalprice", 1, -1.0).over(w).as("next_price"))
-    },
+        |FROM orders""".stripMargin),
 
     // Global ntile/percent_rank/cume_dist — served by the DISTRIBUTED
     // formulation (globalRankScalable below). The textbook
@@ -167,35 +136,22 @@ object WindowQueries extends QueryModule {
         |  cume_dist() OVER (ORDER BY c_acctbal, c_custkey) AS cd
         |FROM customer""".stripMargin) { (s, _) => globalRankScalable(s) },
 
-    Q("win_first_last_nth",
+    Q.sameSql("win_first_last_nth",
       """SELECT s_suppkey,
         |  first_value(s_name) OVER w AS first_name,
         |  last_value(s_name) OVER w AS last_name,
         |  nth_value(s_name, 2) OVER w AS second_name
         |FROM supplier
         |WINDOW w AS (PARTITION BY s_nationkey ORDER BY s_acctbal, s_suppkey
-        |  ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)""".stripMargin) { (s, _) =>
-      val w = Window.partitionBy("s_nationkey").orderBy("s_acctbal", "s_suppkey")
-        .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-      s.table("supplier").select(col("s_suppkey"),
-        first("s_name").over(w).as("first_name"),
-        last("s_name").over(w).as("last_name"),
-        nth_value(col("s_name"), 2).over(w).as("second_name"))
-    },
+        |  ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)""".stripMargin),
 
     // Top-k per group: row_number <= k filter — the reference's
     // TopNRowNumberOperator fast path; Spark's InferWindowGroupLimit.
-    Q("win_topk_per_group",
+    Q.sameSql("win_topk_per_group",
       """SELECT * FROM (
         |  SELECT o_custkey, o_orderkey, o_totalprice,
         |    CAST(row_number() OVER (PARTITION BY o_custkey ORDER BY o_totalprice DESC, o_orderkey) AS BIGINT) AS rn
-        |  FROM orders) WHERE rn <= 3""".stripMargin) { (s, _) =>
-      val w = Window.partitionBy("o_custkey").orderBy(col("o_totalprice").desc, col("o_orderkey"))
-      s.table("orders")
-        .select(col("o_custkey"), col("o_orderkey"), col("o_totalprice"),
-          row_number().over(w).cast("long").as("rn"))
-        .filter(col("rn") <= 3)
-    },
+        |  FROM orders) WHERE rn <= 3""".stripMargin),
 
     // Whole-partition aggregate window (no ORDER BY => full frame) and a
     // sliding ROWS frame — AggregateWindowFunction.java.

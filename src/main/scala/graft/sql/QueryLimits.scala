@@ -2,7 +2,7 @@ package graft.sql
 
 import java.util.concurrent.{ConcurrentHashMap, Executors, ScheduledFuture, TimeUnit}
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerTaskEnd}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerTaskEnd, SparkListenerTaskStart}
 import org.apache.spark.sql.SparkSession
 
 /** Per-query resource-limit enforcement — the reference's runaway-query
@@ -23,16 +23,20 @@ import org.apache.spark.sql.SparkSession
   * is best-effort by Spark's nature — executors own their memory and
   * spill rather than fail — so `query_max_total_memory` is enforced
   * from task metrics at task completion (peak execution memory +
-  * spill), the closest driver-visible signal; it catches runaway
-  * aggregation state within one task generation rather than
-  * instantaneously.
+  * spill), the closest driver-visible signal, summed over the tasks
+  * that ran at the same moment; it catches runaway aggregation state
+  * within one task generation rather than instantaneously.
   */
 object QueryLimits {
 
   private final class Armed(
       val spark: SparkSession,
       val memLimit: Long) {
-    val memUsed = new java.util.concurrent.atomic.AtomicLong(0L)
+    // memory accounting, guarded by `this`: launch time of each running
+    // task, and (launch, end, bytes) of finished tasks that may still
+    // overlap one of them
+    val running = scala.collection.mutable.Map.empty[Long, Long]
+    val finished = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long)]
     // filled after registration; guarded by `this` (disarm may race arm)
     val timers = scala.collection.mutable.ArrayBuffer.empty[ScheduledFuture[_]]
   }
@@ -156,11 +160,12 @@ object QueryLimits {
       }
     }
 
-  /** Accumulates per-query (job group) execution memory from finished
-    * tasks: peak execution memory + bytes spilled, the two
-    * driver-visible components of what the reference's per-query memory
-    * pool would have charged. Fires the kill when the running total
-    * passes the armed ceiling. */
+  /** Charges each query (job group) the largest sum, over tasks that ran
+    * at the same moment, of peak execution memory + bytes spilled: the
+    * two driver-visible components of what the reference's per-query
+    * memory pool would have held. A long query of many small sequential
+    * tasks is charged what it held at once, not its running total. Fires
+    * the kill when that passes the armed ceiling. */
   private final class MemoryAccountant extends SparkListener {
     private val jobGroup = new ConcurrentHashMap[Integer, String]()
     private val stageJob = new ConcurrentHashMap[Integer, Integer]()
@@ -179,17 +184,53 @@ object QueryLimits {
       while (it.hasNext) if (it.next().getValue.intValue == je.jobId) it.remove()
     }
 
-    override def onTaskEnd(te: SparkListenerTaskEnd): Unit = {
-      val jobId = stageJob.get(Integer.valueOf(te.stageId))
-      val g = if (jobId == null) null else jobGroup.get(jobId)
+    private def queryOf(stageId: Int): String = {
+      val jobId = stageJob.get(Integer.valueOf(stageId))
+      if (jobId == null) null else jobGroup.get(jobId)
+    }
+
+    private def limited(g: String): Armed = {
       val a = if (g == null) null else armed.get(g)
+      if (a != null && a.memLimit < Long.MaxValue) a else null
+    }
+
+    override def onTaskStart(ts: SparkListenerTaskStart): Unit = {
+      val a = limited(queryOf(ts.stageId))
+      if (a != null) a.synchronized(a.running(ts.taskInfo.taskId) = ts.taskInfo.launchTime)
+    }
+
+    override def onTaskEnd(te: SparkListenerTaskEnd): Unit = {
+      val g = queryOf(te.stageId)
+      val a = limited(g)
+      if (a == null) return
+      val info = te.taskInfo
       val m = te.taskMetrics
-      if (a != null && m != null && a.memLimit < Long.MaxValue) {
-        val used = a.memUsed.addAndGet(m.peakExecutionMemory + m.memoryBytesSpilled)
-        if (used > a.memLimit)
-          // ExceededMemoryLimitException.java:34 shape
-          fail(g, a, s"Query exceeded distributed total memory limit of ${a.memLimit}B")
+      val used = a.synchronized {
+        a.running.remove(info.taskId)
+        if (m == null) 0L
+        else {
+          // alive over [launch, end), end from the executor's own span:
+          // the driver may launch a core's next task before it marks this
+          // one finished, and back-to-back tasks must not overlap
+          val launch = info.launchTime
+          val end = launch + math.max(1L,
+            m.executorDeserializeTime + m.executorRunTime + m.resultSerializationTime)
+          a.finished += ((launch, end, m.peakExecutionMemory + m.memoryBytesSpilled))
+          // the sum over tasks alive at t only rises at a launch, so the
+          // largest one this task shares in is at a launch inside its span
+          val peak = a.finished.iterator.map(_._1).filter(t => t >= launch && t < end)
+            .map(t => a.finished.iterator.collect { case (l, e, b) if l <= t && t < e => b }.sum)
+            .max
+          // a task that ended before every running task launched overlaps
+          // no task that ends later
+          val horizon = if (a.running.isEmpty) Long.MaxValue else a.running.values.min
+          a.finished.filterInPlace(_._2 > horizon)
+          peak
+        }
       }
+      if (used > a.memLimit)
+        // ExceededMemoryLimitException.java:34 shape
+        fail(g, a, s"Query exceeded distributed total memory limit of ${a.memLimit}B")
     }
   }
 }

@@ -60,6 +60,48 @@ class EngineSpecs extends AnyFunSuite with BeforeAndAfterAll {
       SparkEntry.modules.flatMap(_.queries).filter(_.isHandPlan).map(_.name).sorted)
   }
 
+  // Hand plans whose build Catalyst optimizes to the plan of their own
+  // oracle text, kept because the build exercises something that text
+  // does not.
+  private val samePlanKept = Map(
+    "sql_prepare_execute" -> "builds through PrestoSql PREPARE/EXECUTE/DEALLOCATE",
+    "sql_current_user" -> "builds through PrestoSql's current_user binding",
+    "func_json_casts" -> "constant-answer oracle; Spark folds the JSON functions under test",
+    "func_array_algebra" -> "constant-answer oracle; Spark folds the array functions under test",
+    "func_geometry3" -> "builds through SpatialJoinOps")
+
+  test("no hand plan optimizes to the plan of its own oracle SQL (Q.sameSql instead)") {
+    import graft.queries._
+    // LlmQueries is left out: its builders take about twice as long as
+    // all of these together.
+    val modules = Seq(TpchQueries, AggQueries, WindowQueries, JoinQueries, SetOpQueries,
+      ShapeQueries, EventQueries, MiscQueries, FuncQueries, GeoQueries, graft.sql.DdlQueries)
+    def shape(df: org.apache.spark.sql.DataFrame) = df.schema.fields.toSeq.map(f => f.name -> f.dataType)
+    val samePlan = modules.flatMap(_.queries).filter(q => q.oracle.isDefined && !q.isSameSql)
+      .filter { q =>
+        val built = q.run(spark, sfDir)
+        scala.util.Try {
+          val oracle = spark.sql(q.oracle.get)
+          shape(oracle) == shape(built) &&
+            oracle.queryExecution.optimizedPlan.sameResult(built.queryExecution.optimizedPlan)
+        }.getOrElse(false)
+      }.map(_.name).toSet
+    val duplicates = (samePlan -- samePlanKept.keySet).toSeq.sorted
+    assert(duplicates.isEmpty,
+      s"${duplicates.size} hand plans plan exactly like their oracle SQL: ${duplicates.mkString(", ")}")
+    val stale = (samePlanKept.keySet -- samePlan).toSeq.sorted
+    assert(stale.isEmpty, s"kept queries no longer plan like their oracle SQL: ${stale.mkString(", ")}")
+  }
+
+  test("bitwise_and_agg / bitwise_or_agg are Spark's bit_and / bit_or") {
+    def agg(and: String, or: String) = spark.sql(
+      s"SELECT n_regionkey, $and(n_nationkey) AS band, $or(n_nationkey) AS bor FROM nation GROUP BY n_regionkey")
+    val presto = agg("bitwise_and_agg", "bitwise_or_agg")
+    val native = agg("bit_and", "bit_or")
+    assert(presto.queryExecution.optimizedPlan.sameResult(native.queryExecution.optimizedPlan))
+    assert(presto.collect().toSet == native.collect().toSet)
+  }
+
   test("ds_channel_overlap keys are NOT NULL in every fixture") {
     // Its hand plan groups by (o_custkey, l_partkey) where the oracle FULL
     // JOINs on them: the two agree only while neither key is ever NULL.

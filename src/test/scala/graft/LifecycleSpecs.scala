@@ -558,6 +558,43 @@ class LifecycleSpecs extends AnyFunSuite with BeforeAndAfterAll {
     } finally server.stop()
   }
 
+  test("query_max_total_memory charges tasks running together, not the sum over all tasks") {
+    // 64 aggregation slices run at most `cores` at a time: the summed peak
+    // memory of all tasks passes a ceiling that no set of tasks running at
+    // one moment reaches, so the query must complete.
+    val sql = "SELECT id % 1000 AS g, count(*) AS n " +
+      "FROM range(0, 64000000, 1, 64) GROUP BY id % 1000"
+    val perTask = new java.util.concurrent.ConcurrentLinkedQueue[java.lang.Long]()
+    val probe = new org.apache.spark.scheduler.SparkListener {
+      override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+        Option(te.taskMetrics).foreach(m =>
+          perTask.add(m.peakExecutionMemory + m.memoryBytesSpilled))
+    }
+    spark.sparkContext.addSparkListener(probe)
+    try {
+      assert(spark.sql(sql).collect().length == 1000)
+      // the listener bus is asynchronous: wait until the last task lands
+      val deadline = System.currentTimeMillis() + 30000
+      var seen = -1
+      while (perTask.size != seen && System.currentTimeMillis() < deadline) {
+        seen = perTask.size
+        Thread.sleep(500)
+      }
+    } finally spark.sparkContext.removeSparkListener(probe)
+    import scala.jdk.CollectionConverters._
+    val bytes = perTask.asScala.map(_.longValue).toSeq
+    val cores = spark.sparkContext.defaultParallelism
+    val ceiling = 2L * cores * bytes.max
+    assert(bytes.sum > ceiling,
+      s"precondition: ${bytes.size} tasks sum to ${bytes.sum}B, not above the ${ceiling}B ceiling")
+    val server = graft.sql.StatementServer.start(spark)
+    try {
+      val rows = httpQuery(server.baseUri, sql,
+        Seq("X-Presto-Session" -> s"query_max_total_memory=${ceiling}B"))
+      assert(rows.length == 1000)
+    } finally server.stop()
+  }
+
   // ---- concurrent protocol clients: header/session-state isolation ----
 
   test("concurrent clients: one client's session state never leaks into another's headers") {
