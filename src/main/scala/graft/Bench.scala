@@ -78,11 +78,23 @@ object Bench {
     cpuNs
   }
 
-  final case class Run(wall: Double, cpu: Double, stealPct: Double, gcMs: Long)
+  final case class Run(wall: Double, cpu: Double, stealPct: Double, gcMs: Long,
+      compiles: Long, compileMs: Long)
+
+  private val failed = Run(-1.0, -1.0, 0.0, 0L, 0L, 0L)
+
+  /** Generated classes compiled by Janino in this JVM so far (driver and
+    * local tasks alike; a compiled-class cache hit does not count), and
+    * the time spent compiling them in ns. */
+  private def compilesNow(): (Long, Long) =
+    (org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount,
+      org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator.compileTime)
 
   /** One measured run. Bus drained on both sides of the window so stage
     * events land in the right query. gcMs = driver-JVM stop-the-world GC
-    * time inside the window (heap-state attribution, r15 verdict #1).
+    * time inside the window (heap-state attribution, r15 verdict #1);
+    * compiles/compileMs = generated classes compiled inside the window and
+    * the time that took.
     */
   private[graft] def once(spark: SparkSession, cpuNs: AtomicLong, sfDir: String)(
       fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Run = {
@@ -90,15 +102,17 @@ object Bench {
     val c0 = cpuNs.get()
     val (st0, tot0) = procStat()
     val g0 = gcNowMs()
+    val (k0, kNs0) = compilesNow()
     val t0 = System.nanoTime()
     fn(spark, sfDir).write.format("noop").mode("overwrite").save()
     val wall = (System.nanoTime() - t0) / 1e9
+    val (k1, kNs1) = compilesNow()
     val g1 = gcNowMs()
     val (st1, tot1) = procStat()
     org.apache.spark.sql.graft.ListenerBusFlush.drain(spark.sparkContext)
     val stealPct =
       if (tot1 > tot0) 100.0 * (st1 - st0) / (tot1 - tot0) else 0.0
-    Run(wall, (cpuNs.get() - c0) / 1e9, stealPct, g1 - g0)
+    Run(wall, (cpuNs.get() - c0) / 1e9, stealPct, g1 - g0, k1 - k0, (kNs1 - kNs0) / 1000000L)
   }
 
   private def r3(v: Double): String = "%.3f".formatLocal(java.util.Locale.ROOT, v)
@@ -129,10 +143,11 @@ object Bench {
             if (b.wall < a.wall) b else a
           } catch { case e: Throwable =>
             System.err.println(s"[bench-isolated] $name failed: ${e.getMessage}")
-            Run(-1.0, -1.0, 0.0, 0L)
+            failed
           }
         "\"" + name + "\":{\"wall\":" + r3(best.wall) + ",\"cpu\":" + r3(best.cpu) +
-          ",\"steal_pct\":" + r3(best.stealPct) + ",\"gc_ms\":" + best.gcMs + "}"
+          ",\"steal_pct\":" + r3(best.stealPct) + ",\"gc_ms\":" + best.gcMs +
+          ",\"compiles\":" + best.compiles + ",\"compile_ms\":" + best.compileMs + "}"
       }
     }.mkString("{", ",", "}")
     spark.stop()
@@ -177,7 +192,8 @@ object Bench {
           val qs = node.path("queries").fields().asScala.map { e =>
             val v = e.getValue
             e.getKey -> Run(v.path("wall").asDouble(-1.0), v.path("cpu").asDouble(-1.0),
-              v.path("steal_pct").asDouble(0.0), v.path("gc_ms").asLong(0L))
+              v.path("steal_pct").asDouble(0.0), v.path("gc_ms").asLong(0L),
+              v.path("compiles").asLong(0L), v.path("compile_ms").asLong(0L))
           }.toMap
           (xmxMb, qs)
         }
@@ -224,7 +240,7 @@ object Bench {
       // -1 and listed under "failures", excluded from totals.
       try once(spark, cpuNs, sfDir)(fn)
       catch { case e: Throwable =>
-        System.err.println(s"[bench] $name failed: ${e.getMessage}"); Run(-1.0, -1.0, 0.0, 0L) }
+        System.err.println(s"[bench] $name failed: ${e.getMessage}"); failed }
     }
     val queries = SparkEntry.benchQueries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.forall(_.exists(n.startsWith)) }
@@ -239,7 +255,7 @@ object Bench {
         if (r1.wall < 0) r1
         else {
           val r2 = try once(spark, cpuNs, sfDir)(fn)
-            catch { case _: Throwable => Run(Double.MaxValue, 0.0, 0.0, 0L) }
+            catch { case _: Throwable => failed.copy(wall = Double.MaxValue) }
           if (r2.wall < r1.wall) r2 else r1
         }
       (name, best, r1.wall)
@@ -312,7 +328,8 @@ object Bench {
       val iso = isolated.get(k).map(i =>
         ",\"isolated\":" + r3(i.wall) + ",\"isolated_cpu\":" + r3(i.cpu) +
           ",\"isolated_steal_pct\":" + r3(i.stealPct) +
-          ",\"isolated_gc_ms\":" + i.gcMs).getOrElse("")
+          ",\"isolated_gc_ms\":" + i.gcMs + ",\"isolated_compiles\":" + i.compiles +
+          ",\"isolated_compile_ms\":" + i.compileMs).getOrElse("")
       // Algorithm-internal counters (LSH candidate counts, bucket
       // occupancies, ...) recorded by the query build via QueryStats:
       // the falsifiability channel for scale claims.
@@ -321,11 +338,12 @@ object Bench {
       }.mkString
       "\"" + k + "\":{\"wall\":" + r3(r.wall) + ",\"cpu\":" + r3(r.cpu) +
         ",\"t1\":" + r3(t1) + ",\"steal_pct\":" + r3(r.stealPct) +
-        ",\"gc_ms\":" + r.gcMs + iso + extra + "}"
+        ",\"gc_ms\":" + r.gcMs + ",\"compiles\":" + r.compiles +
+        ",\"compile_ms\":" + r.compileMs + iso + extra + "}"
     }.mkString("{", ",", "}")
     val inflatedJson = inflated.toSeq.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")
     val full =
-      s"""{"metric":"total","value":${r3(wallTotal)},"cpu":${r3(cpuTotal)},"unit":"sec","n_queries":${results.size},"steal_pct":${r3(runStealPct)},"methodology":"min-of-2 wall per query, second pass after full suite; cpu = executorCpuTime of the min run; steal_pct = percent (0-100) of host /proc/stat jiffies stolen during the window, same unit per-query and total; gc_ms = driver-JVM STW GC ms inside the window; 10 slowest re-timed as isolated in a FORKED fresh JVM at isolated_xmx_mb (warm pass + min-of-2), plus every query whose wall is >2x its previous committed BENCH_FULL wall (listed in retimed_inflated)","isolated_forked":${forked.isDefined},"isolated_xmx_mb":$isolatedXmxMb,"retimed_inflated":$inflatedJson,"queries":$fullQs,"failures":$failures,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${r3(wallTotal)},"cpu":${r3(cpuTotal)},"unit":"sec","n_queries":${results.size},"steal_pct":${r3(runStealPct)},"methodology":"min-of-2 wall per query, second pass after full suite; cpu = executorCpuTime of the min run; steal_pct = percent (0-100) of host /proc/stat jiffies stolen during the window, same unit per-query and total; gc_ms = driver-JVM STW GC ms inside the window; compiles/compile_ms = generated classes Janino compiled inside the window and the ms it took (a compiled-class cache hit is not counted); 10 slowest re-timed as isolated in a FORKED fresh JVM at isolated_xmx_mb (warm pass + min-of-2), plus every query whose wall is >2x its previous committed BENCH_FULL wall (listed in retimed_inflated)","isolated_forked":${forked.isDefined},"isolated_xmx_mb":$isolatedXmxMb,"retimed_inflated":$inflatedJson,"queries":$fullQs,"failures":$failures,"sf":"$sfDir"}"""
     java.nio.file.Files.write(java.nio.file.Paths.get("BENCH_FULL.json"),
       full.getBytes(java.nio.charset.StandardCharsets.UTF_8))
 

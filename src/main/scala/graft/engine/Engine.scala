@@ -134,6 +134,16 @@ object Engine {
       // wide schemas while letting every kernel this engine plans stay
       // inside codegen.
       .config("spark.sql.codegen.maxFields", "256")
+      // Janino's compiled-class cache is one per JVM, sized by the first
+      // session that generates code (a static conf). The 22 TPC-H texts
+      // compile about 320 classes at sf0.1; the default 100 entries
+      // evicted all of them when the texts ran in rotation, so every warm
+      // pass recompiled 300-328 classes (12-20 ms each, about 14 per
+      // statement) and took 16.9-21.9 s against 11.5-13.2 s with 1000
+      // entries, which recompiled 0-7, all in q2, whose generated code
+      // varies with AQE's stage order (4 cores, 2g heap). Metaspace after
+      // GC read 164-166 MB either way.
+      .config("spark.sql.codegen.cache.maxEntries", "1000")
       .config("spark.sql.cbo.enabled", "true")
       .config("spark.sql.autoBroadcastJoinThreshold", (32L * 1024 * 1024).toString)
       .config("spark.ui.enabled", "false")

@@ -54,26 +54,89 @@ object PlanDeterminism {
     .replaceAll("cachedcolumnbuffers[^\\n]*", "cachedcolumnbuffers x")
     .replaceAll("Location: [^\\n]*", "Location: x")
 
-  /** Known, verified-benign variances (the reference checker's
-    * "expected differences" allowance): Spark's
-    * RewriteDistinctAggregates assigns the Expand's grouping ids by
-    * iterating a map keyed on expression-id hashes, so two plannings
-    * of a multi-column DISTINCT aggregate can swap gid 1/2 between the
-    * distinct groups — the FILTER (WHERE gid = n) predicates and the
-    * Expand projections swap CONSISTENTLY, so results are identical.
-    * Spark-internal rule behavior, not a graft rewrite. */
-  private val expectedVariance: Map[String, String] = Map(
-    "agg_distinct" -> ("RewriteDistinctAggregates gid assignment iterates an " +
-      "expr-id-keyed map (Spark-internal); gids swap consistently between " +
-      "Expand and FILTER, results unchanged"),
-    // Same Spark-internal gid lottery, surfaced by the r17 sf0.1 sweep
-    // (expr-id dependent, so which queries show it varies with session
-    // history): the two count-distinct branches swap gid 1<->2 between
-    // plannings, consistently across Expand and FILTER. Results proven
-    // identical by the VERIFY_CONFIG sf0.1 sweep + oracle hash.
-    "ev_retention" -> ("RewriteDistinctAggregates gid assignment iterates an " +
-      "expr-id-keyed map (Spark-internal); gids swap consistently between " +
-      "Expand and FILTER, results unchanged"))
+  /** Spark's RewriteDistinctAggregates numbers the distinct groups of a
+    * multi-DISTINCT aggregate (`gid`) by iterating a map keyed on
+    * expression-id hashes, so two plannings of the same statement can
+    * number the groups differently, depending on how many expression ids
+    * earlier queries used. The renumbering moves the gid values in the
+    * Expand rows and in each `FILTER (WHERE gid = n)`, and the order of
+    * the group columns in every list that carries `gid`. Two plans pass
+    * only if they are equal once each gid value is named by the Expand row
+    * it selects, so the FILTERs must follow the same renumbering as the
+    * Expand, and once the lists that carry `gid` are read as sets. */
+  private[graft] def sameModuloGid(a: String, b: String): Boolean = {
+    val na = gidNormalized(a)
+    na.isDefined && na == gidNormalized(b)
+  }
+
+  /** `plan` with every gid value replaced by the content of its Expand
+    * row, every Expand written as a set of rows of (column, value) pairs
+    * and every other list holding `gid#x` sorted; None if the plan has no
+    * gid, a gid value no Expand row defines, or one value naming two rows. */
+  private def gidNormalized(plan: String): Option[String] = {
+    val expands = "Expand \\[".r.findAllMatchIn(plan).toSeq.map { m =>
+      val (rows, afterRows) = listAt(plan, m.start + 7)
+      val (outs, end) = listAt(plan, afterRows + 2)
+      val outNames = outs.map(text(plan, _))
+      val canonRows = rows.map(r => listAt(plan, r._1)._1.map(text(plan, _)))
+        .map(vals => outNames.zip(vals).partition(_._1 == "gid#x"))
+        .collect { case (Seq((_, gid)), cols) =>
+          gid -> cols.map { case (o, v) => s"$o=$v" }.sorted.mkString("{", ", ", "}") }
+      (m.start, end, outNames, canonRows)
+    }.filter(_._3.contains("gid#x"))
+    val names = expands.flatMap(_._4).distinct
+    if (names.isEmpty || names.map(_._1).distinct.size != names.size) None
+    else {
+      val name = names.toMap
+      val expandText = expands.foldRight(plan) { case ((from, to, outs, rows), p) =>
+        p.substring(0, from) + "Expand " + rows.map(_._2).sorted.mkString("{", ", ", "}") +
+          " -> " + outs.sorted.mkString("{", ", ", "}") + p.substring(to)
+      }
+      val filters = "gid#x = (\\d+)".r
+      if (filters.findAllMatchIn(expandText).exists(m => !name.contains(m.group(1)))) None
+      else {
+        val named = filters.replaceAllIn(expandText,
+          m => scala.util.matching.Regex.quoteReplacement(s"gid#x = ${name(m.group(1))}"))
+        val lists = named.indices.filter(i => named(i) == '[' || named(i) == '(')
+          .map(i => (i, listAt(named, i)))
+          .collect { case (i, (elems, end)) if elems.exists(text(named, _) == "gid#x") =>
+            (i, end, elems.map(text(named, _)).sorted) }
+        Some(lists.foldRight(named) { case ((from, to, elems), p) =>
+          p.substring(0, from + 1) + elems.mkString(", ") + p.substring(to - 1)
+        })
+      }
+    }
+  }
+
+  private def text(s: String, span: (Int, Int)): String = s.substring(span._1, span._2)
+
+  /** The trimmed top-level elements of the comma-separated list whose
+    * `[` or `(` is at `open`, and the index just past its closing bracket
+    * (no elements if no list opens there). */
+  private def listAt(s: String, open: Int): (Seq[(Int, Int)], Int) =
+    if (open >= s.length || (s(open) != '[' && s(open) != '(')) (Nil, open)
+    else {
+      val out = Seq.newBuilder[(Int, Int)]
+      var (depth, from, i) = (0, open + 1, open)
+      def element(end: Int): Unit = {
+        var (a, b) = (from, end)
+        while (a < b && s(a) == ' ') a += 1
+        while (b > a && s(b - 1) == ' ') b -= 1
+        if (b > a) out += ((a, b))
+      }
+      while (i < s.length && (i == open || depth > 0)) {
+        s(i) match {
+          case '[' | '(' | '{' => depth += 1
+          case ']' | ')' | '}' =>
+            depth -= 1
+            if (depth == 0) element(i)
+          case ',' if depth == 1 => element(i); from = i + 1
+          case _ =>
+        }
+        i += 1
+      }
+      (out.result(), i)
+    }
 
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.01"
@@ -101,18 +164,16 @@ object PlanDeterminism {
             val (o2, e2) = planOnce(fn)
             val om = o1 == o2
             val em = e1 == e2
-            val expected = (!om || !em) && expectedVariance.contains(name)
-            if (!om || !em) {
-              if (expected)
-                System.err.println(s"[plandet] $name expected variance: ${expectedVariance(name)}")
-              else {
-                System.err.println(s"[plandet] $name MISMATCH (optimized=$om executed=$em)")
-                if (!om) System.err.println(firstDiff(o1, o2))
-                else System.err.println(firstDiff(e1, e2))
-              }
+            val renumbered = (!om || !em) && sameModuloGid(o1 + "\n" + e1, o2 + "\n" + e2)
+            if (renumbered)
+              System.err.println(s"[plandet] $name equal after one gid renumbering")
+            else if (!om || !em) {
+              System.err.println(s"[plandet] $name MISMATCH (optimized=$om executed=$em)")
+              if (!om) System.err.println(firstDiff(o1, o2))
+              else System.err.println(firstDiff(e1, e2))
             }
-            if (expected)
-              s"""{"optimized_match": $om, "executed_match": $em, "variance_expected": true, "note": "${expectedVariance(name)}", "err": null}"""
+            if (renumbered)
+              s"""{"optimized_match": $om, "executed_match": $em, "gid_renumbered": true, "err": null}"""
             else
               s"""{"optimized_match": $om, "executed_match": $em, "err": null}"""
           } catch {
@@ -126,12 +187,11 @@ object PlanDeterminism {
     val json = results.map { case (k, v) => s"""  "$k": $v""" }
       .mkString("{\n", ",\n", "\n}\n")
     java.nio.file.Files.writeString(java.nio.file.Paths.get(outPath), json)
+    val renumbered = results.count(_._2.contains("\"gid_renumbered\": true"))
     val bad = results.count(r =>
-      !r._2.contains("\"optimized_match\": true, \"executed_match\": true") &&
-        !r._2.contains("\"variance_expected\": true"))
-    val variances = results.count(_._2.contains("\"variance_expected\": true"))
-    println(s"[plandet] ${results.size - bad - variances}/${results.size} deterministic" +
-      s" + $variances documented variances; $bad mismatches -> $outPath")
+      !r._2.contains("\"optimized_match\": true, \"executed_match\": true")) - renumbered
+    println(s"[plandet] ${results.size - bad - renumbered}/${results.size} deterministic" +
+      s" + $renumbered equal after a gid renumbering; $bad mismatches -> $outPath")
     spark.stop()
   }
 

@@ -7,12 +7,16 @@ import graft.{Bench, SparkEntry}
 
 /** Dev probe: one warm session on the bench configuration (`Bench.start`)
   * and Bench's own measured run (`Bench.once`: wall, executor CPU, host
-  * steal, driver GC), in three modes.
+  * steal, driver GC, generated classes compiled), in three modes.
   *
   * Usage:
   *   sbt "runMain graft.tools.Probe time <sfDir> <n> <query...>"
-  *     times each named bench query n times; first-run codegen and job
-  *     launch show up as the gap between run 1 and the rest.
+  *     times each named bench query n times, back to back. Each run prints
+  *     the classes it compiled and the ms that took. A back-to-back repeat
+  *     always finds its classes in the compiled-class cache, so run 2 and
+  *     later say nothing about traffic that interleaves many statements:
+  *     to see codegen cost under rotation, time the texts in rotation
+  *     (`sql` mode with the statements repeated in another order).
   *   sbt "runMain graft.tools.Probe sql <sfDir> <n> <sqlFile>"
   *     times each `;;`-separated Spark SQL statement in the file n times.
   *   sbt "runMain graft.tools.Probe plan <sfDir> <outDir> <tag> <query...>"
@@ -28,8 +32,8 @@ object Probe {
     val (spark, cpuNs) = Bench.start(sfDir)
     def report(label: String, runs: Seq[Bench.Run]): Unit =
       println(s"[probe] $label " + runs.map(r =>
-        "%.3f/%.3f".formatLocal(java.util.Locale.ROOT, r.wall, r.cpu)).mkString(" ") +
-        " (wall/cpu s)")
+        "%.3f/%.3f/%d/%d".formatLocal(java.util.Locale.ROOT, r.wall, r.cpu, r.compiles, r.compileMs))
+        .mkString(" ") + " (wall s/cpu s/classes compiled/compile ms)")
     try mode match {
       case "time" =>
         for (name <- args.drop(3).toSeq) {

@@ -130,6 +130,59 @@ class EngineSpecs extends AnyFunSuite with BeforeAndAfterAll {
       s"expected one SparkSession.builder() (Engine.session), found: ${hits.mkString(", ")}")
   }
 
+  test("PlanDeterminism accepts a plan diff only as one consistent gid renumbering") {
+    import graft.tools.PlanDeterminism.sameModuloGid
+    // Two canonicalized plannings of agg_distinct that numbered its two
+    // distinct groups differently (taken from a real sweep): the gid
+    // values swap in Expand and FILTER, and the group columns swap order
+    // in every list that carries gid.
+    def plan(filters: (Int, Int), rows: String, cols: String, partitions: Int = 4,
+        top: String = "HashAggregate"): String =
+      s"""$top(keys=[], functions=[count(l_partkey#xL), count(l_suppkey#xL)], output=[n_parts#xL, n_supps#xL])
+         |+- Exchange SinglePartition, ENSURE_REQUIREMENTS, [plan_id=x]
+         |   +- HashAggregate(keys=[], functions=[partial_count(l_partkey#xL) FILTER (WHERE (gid#x = ${filters._1})), partial_count(l_suppkey#xL) FILTER (WHERE (gid#x = ${filters._2}))], output=[count#xL, count#xL])
+         |      +- HashAggregate(keys=[$cols, gid#x], functions=[], output=[$cols, gid#x])
+         |         +- Exchange hashpartitioning($cols, gid#x, $partitions), ENSURE_REQUIREMENTS, [plan_id=x]
+         |            +- Expand [$rows], [$cols, gid#x]
+         |               +- FileScan parquet [l_partkey#xL,l_suppkey#xL] Batched: true, DataFilters: [], Format: Parquet, Location: x""".stripMargin
+    val (pk, sk) = ("l_partkey#xL, l_suppkey#xL", "l_suppkey#xL, l_partkey#xL")
+    val a = plan((1, 2), "[l_partkey#xL, null, 1], [null, l_suppkey#xL, 2]", pk)
+    val b = plan((2, 1), "[l_suppkey#xL, null, 1], [null, l_partkey#xL, 2]", sk)
+    assert(sameModuloGid(a, b), "the two real plannings")
+    assert(!sameModuloGid(a, plan((2, 1), "[l_suppkey#xL, null, 1], [null, l_partkey#xL, 2]", sk, partitions = 8)),
+      "a changed literal beside the renumbering")
+    assert(!sameModuloGid(a, plan((2, 1), "[l_partkey#xL, null, 1], [null, l_suppkey#xL, 2]", pk)),
+      "renumbered in FILTER only")
+    assert(!sameModuloGid(a, plan((1, 2), "[l_suppkey#xL, null, 1], [null, l_partkey#xL, 2]", sk)),
+      "renumbered in Expand only")
+    assert(!sameModuloGid(a, plan((2, 1), "[l_suppkey#xL, null, 1], [null, l_partkey#xL, 2]", sk, top = "SortAggregate")),
+      "a changed operator beside the renumbering")
+    assert(!sameModuloGid(a, plan((1, 2), "[l_partkey#xL, null, 1], [null, l_suppkey#xL, 2]", pk, partitions = 8)),
+      "a changed literal alone")
+    assert(!sameModuloGid("Project [a#x]", "Project [b#x]"), "no gid at all")
+  }
+
+  test("a second pass over the 22 TPC-H texts reuses the first pass's generated classes") {
+    // The compiled-class cache is one per JVM and sized by the first
+    // session that generates code, so the passes run in a fresh JVM whose
+    // first session is Engine.session, whatever ran in this one before.
+    import scala.jdk.CollectionConverters._
+    val javaBin = java.nio.file.Paths.get(System.getProperty("java.home"), "bin", "java").toString
+    val flags = java.lang.management.ManagementFactory.getRuntimeMXBean.getInputArguments.asScala
+    val cmd = Seq(javaBin) ++ flags ++ Seq("-Xmx2g",
+      "-cp", System.getProperty("java.class.path"), "graft.CodegenPasses", sfDir)
+    val p = new ProcessBuilder(cmd: _*).redirectErrorStream(true).start()
+    val out = new String(p.getInputStream.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8)
+    assert(p.waitFor() == 0, s"child exited ${p.exitValue()}:\n${out.takeRight(4000)}")
+    val counts = out.linesIterator.collectFirst {
+      case l if l.startsWith("codegen-passes ") =>
+        l.stripPrefix("codegen-passes ").split(' ').map(_.split('=')).map(kv => kv(0) -> kv(1).toLong).toMap
+    }.getOrElse(fail(s"no codegen-passes line:\n${out.takeRight(4000)}"))
+    val (cold, warm) = (counts("cold"), counts("warm"))
+    assert(cold >= 100, s"the first pass compiled only $cold classes")
+    assert(warm * 20 <= cold, s"the second pass compiled $warm classes against $cold in the first")
+  }
+
   // ---- plan-shape assertions (scale discipline) ----
 
   private def executedPlan(df: org.apache.spark.sql.DataFrame): SparkPlan = {
@@ -2121,5 +2174,37 @@ class EngineSpecs extends AnyFunSuite with BeforeAndAfterAll {
     // rank merge (TopNRowNumberOperator analog)
     assert(s.contains("WindowGroupLimit"),
       "rank()<=20 should trigger WindowGroupLimit")
+  }
+}
+
+/** The two passes of the EngineSpecs codegen-cache spec, run in a fresh
+  * JVM: the 22 TPC-H statement texts as a client sends them (the oracle
+  * text with the partsupp CTE dropped, so it reads the registered
+  * `partsupp`) through PrestoSql, once in name order and once shuffled.
+  * Prints `codegen-passes cold=<classes compiled> warm=<classes compiled>`.
+  */
+object CodegenPasses {
+  def main(args: Array[String]): Unit = {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    val spark = graft.engine.Engine.session("local[4]", shufflePartitions = 4)
+    graft.engine.Engine.registerTables(spark, args(0))
+    val cte = "WITH partsupp AS (\n" +
+      graft.engine.Engine.partsuppSelect.linesIterator.map("  " + _).mkString("\n") + ")"
+    val texts = SparkEntry.oracleSql.filter(_._1.matches("q\\d+_.*")).toSeq.sortBy(_._1).map {
+      case (_, o) =>
+        if (o.startsWith(cte + ",\n")) "WITH " + o.stripPrefix(cte + ",\n")
+        else o.stripPrefix(cte + "\n")
+    }
+    require(texts.size == 22 && !texts.exists(_.contains("WITH partsupp AS")),
+      "expected 22 TPC-H texts, none defining partsupp")
+    def pass(order: Seq[String]): Long = {
+      val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      order.foreach(t => graft.sql.PrestoSql.sql(spark, t).toLocalIterator().forEachRemaining(_ => ()))
+      CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0
+    }
+    val cold = pass(texts)
+    val warm = pass(new scala.util.Random(5).shuffle(texts))
+    spark.stop()
+    println(s"codegen-passes cold=$cold warm=$warm")
   }
 }
