@@ -1,6 +1,6 @@
 package graft.engine
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 
 /** Session factory + catalog bootstrap for the graft engine.
   *
@@ -99,10 +99,13 @@ object Engine {
       .getOrElse(Runtime.getRuntime.availableProcessors)
 
   /** The one session builder in the engine: every main and the benchmark
-    * agent get their session here. `overrides` apply last, so a test
-    * configuration (forced spill, AQE off) is this configuration with
-    * exactly the named changes. Core SparkConf keys in `overrides` take
-    * effect only when no SparkContext is running yet (getOrCreate). */
+    * agent get their session here. It loads [[GraftExtensions]], which
+    * installs the graft functions and optimizer rule into this session and
+    * every `newSession()` made from it, and QueryStats' listener. `overrides`
+    * apply last, so a test configuration (forced spill, AQE off) is this
+    * configuration with exactly the named changes. Core SparkConf keys in
+    * `overrides` take effect only when no SparkContext is running yet
+    * (getOrCreate). */
   def session(master: String, shufflePartitions: Int = 32,
       overrides: Map[String, String] = Map.empty): SparkSession = {
     val builder = SparkSession.builder()
@@ -147,11 +150,12 @@ object Engine {
       .config("spark.sql.cbo.enabled", "true")
       .config("spark.sql.autoBroadcastJoinThreshold", (32L * 1024 * 1024).toString)
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.extensions", classOf[GraftExtensions].getName)
+      // zero-cost in-flow counters (observe API) -> bench artifact
+      .config("spark.sql.queryExecutionListeners", classOf[graft.tools.QueryStats.Listener].getName)
     overrides.foreach { case (k, v) => builder.config(k, v) }
     val spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // zero-cost in-flow counters (observe API) -> bench artifact
-    graft.tools.QueryStats.installListener(spark)
     spark
   }
 
@@ -163,22 +167,10 @@ object Engine {
     java.util.Collections.synchronizedMap(
       new java.util.WeakHashMap[SparkSession, String]())
 
-  /** Install the graft optimizer rules once per session (idempotent).
-    * extraOptimizations rather than injectOptimizerRule so a session
-    * built outside [[session]] (the GraftExtensions spec builds its own)
-    * gets the rules the moment it registers the catalog. */
-  def installOptimizerRules(spark: SparkSession): Unit =
-    if (!spark.experimental.extraOptimizations.contains(graft.plans.KeyPredicatePropagation)) {
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ graft.plans.KeyPredicatePropagation
-    }
-
   /** Register every fixture table under `dir` as a temp view. Idempotent
-    * per (session, dir). Also installs the graft function extensions.
+    * per (session, dir).
     */
   def registerTables(spark: SparkSession, dir: String): Unit = {
-    installOptimizerRules(spark)
-    graft.tools.QueryStats.installListener(spark)
     if (registered.get(spark) != dir) {
       // Fixture generations differ on events.ts: older drivers wrote
       // TIMESTAMP(NANOS) (which the vectorized reader rejects — read
@@ -198,7 +190,6 @@ object Engine {
           df.createOrReplaceTempView(t)
         }
       }
-      graft.functions.FunctionRegistry.installAll(spark)
       // Register the synthesized partsupp once per fixture dir — the
       // analog of the reference's CTAS for a base table it reads many
       // times. The cache is LAZY (no eager count): sessions that never
@@ -230,11 +221,5 @@ object Engine {
       }
       registered.put(spark, dir)
     }
-  }
-
-  /** Convenience: registered view as DataFrame. */
-  def table(spark: SparkSession, dir: String, name: String): DataFrame = {
-    registerTables(spark, dir)
-    spark.table(name)
   }
 }

@@ -2,39 +2,29 @@ package graft.engine
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, ExpressionInfo}
-import org.apache.spark.sql.types.{ArrayType, DoubleType}
-import graft.functions._
+import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
+import graft.functions.FunctionRegistry
 
-/** Library entry point for `spark.sql.extensions=graft.engine.GraftExtensions`:
-  * injects the graft function surface at session build time, the idiomatic
-  * Spark way to ship an engine extension (no imperative install call — the
-  * reference's analog is Plugin.getFunctions, presto-spi/.../Plugin.java:53).
-  *
-  * Only expression-backed functions can be injected here (UDF-backed ones
-  * still come from `FunctionRegistry.installAll`, which `Engine
-  * .registerTables` always runs); the two paths register the same names
-  * idempotently.
+/** The one place the graft engine installs into Spark, at session build
+  * time (`spark.sql.extensions=graft.engine.GraftExtensions`, which
+  * [[Engine.session]] sets): the `KeyPredicatePropagation` optimizer rule
+  * and every graft SQL function ([[FunctionRegistry.all]]). The
+  * reference's analog is Plugin.getFunctions, registered once at server
+  * start (presto-spi/.../Plugin.java:53). Sessions made with
+  * `newSession()` share the extensions, so they resolve the same
+  * functions and run the same rule with no install call.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
-  private def info(name: String): ExpressionInfo =
-    new ExpressionInfo(classOf[GraftExtensions].getName, name)
-
   override def apply(ext: SparkSessionExtensions): Unit = {
-    // Engine optimizer rules (Engine.installOptimizerRules adds the same
-    // via extraOptimizations for sessions built without the extension).
     ext.injectOptimizerRule(_ => graft.plans.KeyPredicatePropagation)
-    ext.injectFunction((FunctionIdentifier("cosine_similarity"), info("cosine_similarity"),
-      (args: Seq[Expression]) => ArrayCosineSimilarity(
-        Cast(args(0), ArrayType(DoubleType)), Cast(args(1), ArrayType(DoubleType)))))
-    ext.injectFunction((FunctionIdentifier("approx_set"), info("approx_set"),
-      (args: Seq[Expression]) => HllSketchAgg(args.head, mergeMode = false)))
-    ext.injectFunction((FunctionIdentifier("merge_hll"), info("merge_hll"),
-      (args: Seq[Expression]) => HllSketchAgg(args.head, mergeMode = true)))
-    ext.injectFunction((FunctionIdentifier("make_set_digest"), info("make_set_digest"),
-      (args: Seq[Expression]) => SetDigestAgg(args.head)))
-    ext.injectFunction((FunctionIdentifier("qdigest_agg"), info("qdigest_agg"),
-      (args: Seq[Expression]) => QuantileSketchAgg(args.head)))
+    FunctionRegistry.all.foreach { case (name, builder) =>
+      // the ExpressionInfo Spark builds for a temporary Scala function, so
+      // SHOW FUNCTIONS and DESCRIBE FUNCTION read as for one
+      val info = new ExpressionInfo(
+        Option(builder.getClass.getCanonicalName).getOrElse(builder.getClass.getName),
+        null, name, null, "", "", "", "", "", "", "scala_udf")
+      ext.injectFunction((FunctionIdentifier(name), info, builder))
+    }
   }
 }

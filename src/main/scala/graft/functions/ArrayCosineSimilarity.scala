@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Cast, Expression}
@@ -95,8 +94,9 @@ object ArrayCosineSimilarity {
   /** Builder widens float arrays (exact) so SQL callers can pass
     * array<float> embeddings directly.
     */
-  def install(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction("cosine_similarity",
-      args => ArrayCosineSimilarity(
-        Cast(args(0), ArrayType(DoubleType)), Cast(args(1), ArrayType(DoubleType))), "scala_udf")
+  def functions: Seq[FunctionRegistry.Fn] = Seq(
+    FunctionRegistry.fn("cosine_similarity") { args =>
+      ArrayCosineSimilarity(
+        Cast(args(0), ArrayType(DoubleType)), Cast(args(1), ArrayType(DoubleType)))
+    })
 }

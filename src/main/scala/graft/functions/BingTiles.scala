@@ -1,7 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import FunctionRegistry.scalaUdf
 
 /** Bing Maps tile system — the reference's BingTile plugin
   * (presto-geospatial/.../BingTileFunctions.java:86-347,
@@ -174,7 +175,7 @@ object BingTiles {
     * scripts; DataFrame pipelines should use the native combinators,
     * which stay inside whole-stage codegen.
     */
-  def install(spark: SparkSession): Unit = {
+  def functions: Seq[FunctionRegistry.Fn] = {
     def tx(lng: Double, z: Int): Int = {
       val ms = 256.0 * math.pow(2.0, z)
       (math.floor(math.min(math.max((lng + 180.0) / 360.0 * ms, 0.0), ms - 1.0) / 256.0)).toInt
@@ -185,21 +186,22 @@ object BingTiles {
       val ms = 256.0 * math.pow(2.0, z)
       (math.floor(math.min(math.max(y * ms, 0.0), ms - 1.0) / 256.0)).toInt
     }
-    spark.udf.register("bing_tile_x", (lng: Double, z: Int) => tx(lng, z))
-    spark.udf.register("bing_tile_y", (lat: Double, z: Int) => ty(lat, z))
-    spark.udf.register("bing_tile_quadkey", (x: Int, y: Int, z: Int) =>
-      (1 to z).map(i => ((x >> (z - i)) & 1) + 2 * ((y >> (z - i)) & 1)).mkString)
-    spark.udf.register("great_circle_distance",
-      (lat1: Double, lng1: Double, lat2: Double, lng2: Double) => {
-        val p1 = lat1 * Math.PI / 180.0; val p2 = lat2 * Math.PI / 180.0
-        val s1 = math.sin(p1); val c1 = math.cos(p1)
-        val s2 = math.sin(p2); val c2 = math.cos(p2)
-        val dL = lng1 * Math.PI / 180.0 - lng2 * Math.PI / 180.0
-        val cdL = math.cos(dL)
-        val t1 = c2 * math.sin(dL)
-        val t2 = c1 * s2 - s1 * c2 * cdL
-        val t3 = s1 * s2 + c1 * c2 * cdL
-        math.atan2(math.sqrt(t1 * t1 + t2 * t2), t3) * EarthRadiusKm
-      })
+    Seq(
+      scalaUdf("bing_tile_x", udf((lng: Double, z: Int) => tx(lng, z))),
+      scalaUdf("bing_tile_y", udf((lat: Double, z: Int) => ty(lat, z))),
+      scalaUdf("bing_tile_quadkey", udf((x: Int, y: Int, z: Int) =>
+        (1 to z).map(i => ((x >> (z - i)) & 1) + 2 * ((y >> (z - i)) & 1)).mkString)),
+      scalaUdf("great_circle_distance", udf(
+        (lat1: Double, lng1: Double, lat2: Double, lng2: Double) => {
+          val p1 = lat1 * Math.PI / 180.0; val p2 = lat2 * Math.PI / 180.0
+          val s1 = math.sin(p1); val c1 = math.cos(p1)
+          val s2 = math.sin(p2); val c2 = math.cos(p2)
+          val dL = lng1 * Math.PI / 180.0 - lng2 * Math.PI / 180.0
+          val cdL = math.cos(dL)
+          val t1 = c2 * math.sin(dL)
+          val t2 = c1 * s2 - s1 * c2 * cdL
+          val t3 = s1 * s2 + c1 * c2 * cdL
+          math.atan2(math.sqrt(t1 * t1 + t2 * t2), t3) * EarthRadiusKm
+        })))
   }
 }

@@ -1,7 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions.udf
+import FunctionRegistry.fn
 
 /** Color / rendering functions (SURVEY §2.9 "color plugin"): the
   * reference's terminal-visualization surface —
@@ -103,7 +104,7 @@ object ColorFunctions {
     sb.toString
   }
 
-  def install(spark: SparkSession): Unit = {
+  def functions: Seq[FunctionRegistry.Fn] = {
     val colorName = udf(colorOf _)
     val colorInterpUdf = udf(colorInterp _)
     val colorScaledUdf = udf(colorScaled _)
@@ -118,36 +119,32 @@ object ColorFunctions {
 
     // Overload dispatch by arity/type through the builder API — Presto
     // overloads `color`, `render`, and `bar` and so do we.
-    val reg = spark.sessionState.functionRegistry
-    def put(name: String)(b: Seq[org.apache.spark.sql.catalyst.expressions.Expression] =>
-        org.apache.spark.sql.catalyst.expressions.Expression): Unit =
-      reg.createOrReplaceTempFunction(name, b, "scala_udf")
-
     def ap(u: org.apache.spark.sql.expressions.UserDefinedFunction,
            args: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =
       org.apache.spark.sql.graft.ColumnBridge.applyUdf(u, args)
 
-    put("rgb")(args => ap(rgbUdf, args))
-    put("color") {
-      case Seq(one) => ap(colorName, Seq(one))
-      case args if args.size == 3 => ap(colorInterpUdf, args)
-      case args if args.size == 5 => ap(colorScaledUdf, args)
-      case args => throw new IllegalArgumentException(s"color: bad arity ${args.size}")
-    }
-    put("render") {
-      case Seq(one) => ap(renderBoolU, Seq(one))
-      case Seq(v, c) =>
-        v.dataType match {
-          case org.apache.spark.sql.types.StringType => ap(renderStr, Seq(v, c))
-          case org.apache.spark.sql.types.DoubleType => ap(renderDouble, Seq(v, c))
-          case _ => ap(renderLong, Seq(v, c))
-        }
-      case args => throw new IllegalArgumentException(s"render: bad arity ${args.size}")
-    }
-    put("bar") {
-      case Seq(p, w) => ap(barDefault, Seq(p, w))
-      case args if args.size == 4 => ap(barColored, args)
-      case args => throw new IllegalArgumentException(s"bar: bad arity ${args.size}")
-    }
+    Seq(
+      fn("rgb")(args => ap(rgbUdf, args)),
+      fn("color") {
+        case Seq(one) => ap(colorName, Seq(one))
+        case args if args.size == 3 => ap(colorInterpUdf, args)
+        case args if args.size == 5 => ap(colorScaledUdf, args)
+        case args => throw new IllegalArgumentException(s"color: bad arity ${args.size}")
+      },
+      fn("render") {
+        case Seq(one) => ap(renderBoolU, Seq(one))
+        case Seq(v, c) =>
+          v.dataType match {
+            case org.apache.spark.sql.types.StringType => ap(renderStr, Seq(v, c))
+            case org.apache.spark.sql.types.DoubleType => ap(renderDouble, Seq(v, c))
+            case _ => ap(renderLong, Seq(v, c))
+          }
+        case args => throw new IllegalArgumentException(s"render: bad arity ${args.size}")
+      },
+      fn("bar") {
+        case Seq(p, w) => ap(barDefault, Seq(p, w))
+        case args if args.size == 4 => ap(barColored, args)
+        case args => throw new IllegalArgumentException(s"bar: bad arity ${args.size}")
+      })
   }
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, GenericInternalRow}
@@ -136,7 +135,8 @@ object ConvexHullAgg {
     (lower.dropRight(1) ++ upper.dropRight(1)).toArray
   }
 
-  def install(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction("convex_hull_agg",
-      args => ConvexHullAgg(Cast(args(0), DoubleType), Cast(args(1), DoubleType)), "scala_udf")
+  def functions: Seq[FunctionRegistry.Fn] = Seq(
+    FunctionRegistry.fn("convex_hull_agg") { args =>
+      ConvexHullAgg(Cast(args(0), DoubleType), Cast(args(1), DoubleType))
+    })
 }

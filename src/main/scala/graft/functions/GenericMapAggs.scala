@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
@@ -214,13 +213,8 @@ object GenericMapAgg {
   case object MapFirst extends Mode
   case object Multi extends Mode
 
-  def install(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("histogram",
-      args => GenericMapAgg(args.head, None, Hist), "scala_udf")
-    reg.createOrReplaceTempFunction("map_agg",
-      args => GenericMapAgg(args(0), Some(args(1)), MapFirst), "scala_udf")
-    reg.createOrReplaceTempFunction("multimap_agg",
-      args => GenericMapAgg(args(0), Some(args(1)), Multi), "scala_udf")
-  }
+  def functions: Seq[FunctionRegistry.Fn] = Seq(
+    FunctionRegistry.fn("histogram")(args => GenericMapAgg(args.head, None, Hist)),
+    FunctionRegistry.fn("map_agg")(args => GenericMapAgg(args(0), Some(args(1)), MapFirst)),
+    FunctionRegistry.fn("multimap_agg")(args => GenericMapAgg(args(0), Some(args(1)), Multi)))
 }

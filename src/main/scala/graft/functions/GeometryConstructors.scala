@@ -1,6 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{functions => F}
+import FunctionRegistry.scalaUdf
 
 /** Geometry construction/editing scalars — the remaining high-frequency
   * slice of the reference's geometry plugin beyond accessors/predicates:
@@ -799,25 +800,24 @@ object GeometryConstructors {
 
   def stIsValid(wkt: String): Boolean = invalidReason(wkt) == null
 
-  def install(spark: SparkSession): Unit = {
-    spark.udf.register("st_is_valid", (w: String) => stIsValid(w))
-    spark.udf.register("geometry_invalid_reason",
-      (w: String) => if (w == null) null else invalidReason(w))
-    spark.udf.register("st_convex_hull", (w: String) => if (w == null) null else stConvexHull(w))
-    spark.udf.register("simplify_geometry",
-      (w: String, t: Double) => if (w == null) null else simplifyGeometry(w, t))
-    spark.udf.register("st_buffer",
-      (w: String, d: Double) => if (w == null) null else stBuffer(w, d))
-    spark.udf.register("st_intersection_convex",
-      (a: String, b: String) => if (a == null || b == null) null else stIntersectionConvex(a, b))
-    spark.udf.register("st_intersection",
-      (a: String, b: String) => if (a == null || b == null) null else stIntersection(a, b))
-    spark.udf.register("st_wkt_area", (w: String) => wktAreaMulti(w))
-    spark.udf.register("st_union",
-      (a: String, b: String) => if (a == null || b == null) null else stUnion(a, b))
-    spark.udf.register("st_difference",
-      (a: String, b: String) => if (a == null || b == null) null else stDifference(a, b))
-    spark.udf.register("st_sym_difference",
-      (a: String, b: String) => if (a == null || b == null) null else stSymDifference(a, b))
-  }
+  def functions: Seq[FunctionRegistry.Fn] = Seq(
+    scalaUdf("st_is_valid", F.udf((w: String) => stIsValid(w))),
+    scalaUdf("geometry_invalid_reason", F.udf(
+      (w: String) => if (w == null) null else invalidReason(w))),
+    scalaUdf("st_convex_hull", F.udf((w: String) => if (w == null) null else stConvexHull(w))),
+    scalaUdf("simplify_geometry", F.udf(
+      (w: String, t: Double) => if (w == null) null else simplifyGeometry(w, t))),
+    scalaUdf("st_buffer", F.udf(
+      (w: String, d: Double) => if (w == null) null else stBuffer(w, d))),
+    scalaUdf("st_intersection_convex", F.udf(
+      (a: String, b: String) => if (a == null || b == null) null else stIntersectionConvex(a, b))),
+    scalaUdf("st_intersection", F.udf(
+      (a: String, b: String) => if (a == null || b == null) null else stIntersection(a, b))),
+    scalaUdf("st_wkt_area", F.udf((w: String) => wktAreaMulti(w))),
+    scalaUdf("st_union", F.udf(
+      (a: String, b: String) => if (a == null || b == null) null else stUnion(a, b))),
+    scalaUdf("st_difference", F.udf(
+      (a: String, b: String) => if (a == null || b == null) null else stDifference(a, b))),
+    scalaUdf("st_sym_difference", F.udf(
+      (a: String, b: String) => if (a == null || b == null) null else stSymDifference(a, b))))
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
@@ -8,6 +7,7 @@ import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.catalyst.util.ArrayBasedMapData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
+import FunctionRegistry.fn
 
 /** Misra-Gries heavy hitters: approx_heavy_hitters(x, k) -> map of
   * candidate -> approximate count, holding at most k-1 counters.
@@ -113,13 +113,13 @@ case class HeavyHittersAgg(
 }
 
 object HeavyHitters {
-  def install(spark: SparkSession): Unit = {
+  def functions: Seq[FunctionRegistry.Fn] = Seq(
     // Presto's public name for the same Misra-Gries summary:
     // approx_most_frequent(buckets, value, capacity) — the summary is
     // sized by CAPACITY (count error <= N/capacity) and the reported
     // map truncated to the top `buckets` entries. Two-arg calls size by
     // buckets directly.
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction("approx_most_frequent",
+    fn("approx_most_frequent")(
       args => {
         val buckets = args(0).eval(null).asInstanceOf[Number].intValue()
         val capacity = if (args.length > 2)
@@ -127,9 +127,8 @@ object HeavyHitters {
         require(capacity >= buckets,
           s"approx_most_frequent: capacity ($capacity) must be >= buckets ($buckets)")
         HeavyHittersAgg(args(1), capacity, outputLimit = buckets)
-      }, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction("approx_heavy_hitters",
+      }),
+    fn("approx_heavy_hitters")(
       args => HeavyHittersAgg(args.head,
-        args(1).eval(null).asInstanceOf[Number].intValue()), "scala_udf")
-  }
+        args(1).eval(null).asInstanceOf[Number].intValue())))
 }

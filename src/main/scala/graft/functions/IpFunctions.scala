@@ -1,6 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{functions => F}
+import FunctionRegistry.scalaUdf
 
 /** ipaddress type + function slice.
   *
@@ -217,13 +218,12 @@ object IpFunctions {
       unsignedCompare(probe, withHostBits(base, eff, floor = false)) <= 0
   }
 
-  def install(spark: SparkSession): Unit = {
-    spark.udf.register("ip_to_bytes", (s: String) => if (s == null) null else ipToBytes(s))
-    spark.udf.register("ip_from_bytes", (b: Array[Byte]) => if (b == null) null else ipFromBytes(b))
-    spark.udf.register("ip_prefix", (s: String, bits: Int) => ipPrefix(s, bits))
-    spark.udf.register("ip_subnet_min", (s: String) => ipSubnetMin(s))
-    spark.udf.register("ip_subnet_max", (s: String) => ipSubnetMax(s))
-    spark.udf.register("ip_subnet_range", (s: String) => ipSubnetRange(s))
-    spark.udf.register("is_subnet_of", (c: String, ip: String) => isSubnetOf(c, ip))
-  }
+  def functions: Seq[FunctionRegistry.Fn] = Seq(
+    scalaUdf("ip_to_bytes", F.udf((s: String) => if (s == null) null else ipToBytes(s))),
+    scalaUdf("ip_from_bytes", F.udf((b: Array[Byte]) => if (b == null) null else ipFromBytes(b))),
+    scalaUdf("ip_prefix", F.udf((s: String, bits: Int) => ipPrefix(s, bits))),
+    scalaUdf("ip_subnet_min", F.udf((s: String) => ipSubnetMin(s))),
+    scalaUdf("ip_subnet_max", F.udf((s: String) => ipSubnetMax(s))),
+    scalaUdf("ip_subnet_range", F.udf((s: String) => ipSubnetRange(s))),
+    scalaUdf("is_subnet_of", F.udf((c: String, ip: String) => isSubnetOf(c, ip))))
 }

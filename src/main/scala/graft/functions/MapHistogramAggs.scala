@@ -1,12 +1,12 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, GenericArrayData, MapData}
 import org.apache.spark.sql.types._
+import FunctionRegistry.fn
 
 /** map_union(map<K,V>) — unions all input maps into one; on duplicate
   * keys the first-seen value wins (the reference leaves the winner
@@ -219,11 +219,9 @@ case class NumericHistogramAgg(
 }
 
 object MapHistogramAggs {
-  def install(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction("map_union",
-      args => MapUnionAgg(args.head).toAggregateExpression(), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction("numeric_histogram",
-      args => NumericHistogramAgg(args(0), args(1), args.lift(2)).toAggregateExpression(),
-      "scala_udf")
-  }
+  def functions: Seq[FunctionRegistry.Fn] = Seq(
+    fn("map_union")(
+      args => MapUnionAgg(args.head).toAggregateExpression()),
+    fn("numeric_histogram")(
+      args => NumericHistogramAgg(args(0), args(1), args.lift(2)).toAggregateExpression()))
 }

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{functions => F}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.expressions.{Cast, CreateMap, Expression, Literal}
@@ -8,6 +8,7 @@ import org.apache.spark.sql.catalyst.trees.BinaryLike
 import org.apache.spark.sql.catalyst.util.MapData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
+import FunctionRegistry.{fn, scalaUdf}
 
 /** ML plugin surface (presto-ml): features()/learn_classifier/classify/
   * learn_regressor/regress/evaluate_classifier_predictions —
@@ -261,12 +262,6 @@ object MlFunctions {
         if (settledSince < 0) settledSince = it
         if (it - settledSince >= 50) settled = true
       } else settledSince = -1
-      if (sys.env.contains("GRAFT_SVM_DEBUG") && (it % 100 == 0 || settled)) {
-        var mg = 0.0
-        var kk = 0
-        while (kk < d) { val s0 = math.abs(lr * gw(kk) / n); if (s0 > mg) mg = s0; kk += 1 }
-        System.err.println(s"[svm] n=$n d=$d it=$it errs=$errs maxStep=$mg settled=$settled")
-      }
     }
     // unscale: w'_j = w_j/std_j ; b' = b - sum w_j mean_j / std_j
     val wOut = Array.tabulate(d)(j => w(j) / std(j))
@@ -684,40 +679,38 @@ object MlFunctions {
       case None => dot(parseModel(model, "linreg"), features)
     }
 
-  def install(spark: SparkSession): Unit = {
+  // learn_libsvm_* take the libsvm param string as a literal third
+  // argument (the reference's Slice parameter is likewise a constant
+  // at the call site — LearnLibSvmClassifierAggregation.java:48-60).
+  private def paramText(e: Expression): String = {
+    val v = e.eval()
+    require(v != null, "libsvm parameter string must be a non-null literal")
+    v.toString
+  }
+
+  def functions: Seq[FunctionRegistry.Fn] = Seq(
     // features(v1, ..., vN) -> map<bigint,double> with keys 0..N-1 —
     // MLFeaturesFunctions.java; a native CreateMap, fully codegen'd.
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction("features",
+    fn("features")(
       args => CreateMap(args.zipWithIndex.flatMap { case (a, i) =>
         Seq(Literal(i.toLong), Cast(a, DoubleType))
-      }), "scala_udf")
-    spark.udf.register("classify",
-      (m: Map[Long, Double], model: String) => classify(m, model))
-    spark.udf.register("regress",
-      (m: Map[Long, Double], model: String) => regress(m, model))
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction("learn_classifier",
-      args => LearnModelAgg(Cast(args(0), DoubleType), args(1), classifier = true), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction("learn_regressor",
-      args => LearnModelAgg(Cast(args(0), DoubleType), args(1), classifier = false), "scala_udf")
-    // learn_libsvm_* take the libsvm param string as a literal third
-    // argument (the reference's Slice parameter is likewise a constant
-    // at the call site — LearnLibSvmClassifierAggregation.java:48-60).
-    def paramText(e: Expression): String = {
-      val v = e.eval()
-      require(v != null, "libsvm parameter string must be a non-null literal")
-      v.toString
-    }
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction("learn_libsvm_classifier",
+      })),
+    scalaUdf("classify", F.udf(
+      (m: Map[Long, Double], model: String) => classify(m, model))),
+    scalaUdf("regress", F.udf(
+      (m: Map[Long, Double], model: String) => regress(m, model))),
+    fn("learn_classifier")(
+      args => LearnModelAgg(Cast(args(0), DoubleType), args(1), classifier = true)),
+    fn("learn_regressor")(
+      args => LearnModelAgg(Cast(args(0), DoubleType), args(1), classifier = false)),
+    fn("learn_libsvm_classifier")(
       args => LearnModelAgg(Cast(args(0), DoubleType), args(1), classifier = true,
-        params = paramText(args(2))), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction("learn_libsvm_regressor",
+        params = paramText(args(2)))),
+    fn("learn_libsvm_regressor")(
       args => LearnModelAgg(Cast(args(0), DoubleType), args(1), classifier = false,
-        params = paramText(args(2))), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "evaluate_classifier_predictions",
-      args => EvaluatePredictionsAgg(Cast(args(0), LongType), Cast(args(1), LongType)),
-      "scala_udf")
-  }
+        params = paramText(args(2)))),
+    fn("evaluate_classifier_predictions")(
+      args => EvaluatePredictionsAgg(Cast(args(0), LongType), Cast(args(1), LongType))))
 }
 
 /** learn_classifier / learn_regressor aggregation — the reference's

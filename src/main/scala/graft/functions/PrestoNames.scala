@@ -1,10 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.analysis.FunctionRegistry.FunctionBuilder
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.{functions => F, Encoders, Row}
+import FunctionRegistry.{Fn, fn, scalaUdf}
 
 /** Presto-name parity wave (round 8): every remaining SQL name from the
   * reference's `@ScalarFunction`/`@AggregationFunction` surface that the
@@ -20,23 +20,6 @@ import org.apache.spark.sql.{functions => F, Encoders, Row}
   * Reference files are cited per registration below.
   */
 object PrestoNames {
-
-  private def register(spark: SparkSession, name: String)(
-      builder: Seq[Expression] => Expression): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, builder, "scala_udf")
-
-  /** Delegate to an already-registered function's builder — used to give
-    * a Presto name to a graft function registered under an internal name
-    * (e.g. value_at_quantile -> qdigest_value_at). Must run AFTER the
-    * target is installed (PrestoNames is last in installAll).
-    */
-  private def aliasTo(spark: SparkSession, name: String, target: String): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    val b = reg.lookupFunctionBuilder(FunctionIdentifier(target)).getOrElse(
-      throw new IllegalStateException(s"alias target not installed: $target"))
-    register(spark, name)(args => b(args))
-  }
 
   // ---- scalar helpers (executor-side) ----
 
@@ -239,203 +222,209 @@ object PrestoNames {
       copy(inputAggBufferOffset = offset)
   }
 
-  def install(spark: SparkSession): Unit = {
+  /** The Presto names, listed after every other graft function.
+    * `builderOf` gives the builder of a name listed before them (or of a
+    * Spark built-in): an alias gives a Presto name to a graft function
+    * listed under an internal name (e.g. value_at_quantile ->
+    * qdigest_value_at), and an arity dispatch reuses an earlier overload.
+    */
+  def functions(builderOf: String => FunctionBuilder): Seq[Fn] = {
     import org.apache.spark.sql.types._
 
-    // ---- bitwise functions (MathFunctions.java bitwiseAnd/Or/Xor/Not;
-    // all bigint in the reference) — native Catalyst, codegen'd.
     val toLong = (e: Expression) => Cast(e, LongType)
-    register(spark, "bitwise_and") { a => BitwiseAnd(toLong(a(0)), toLong(a(1))) }
-    register(spark, "bitwise_or") { a => BitwiseOr(toLong(a(0)), toLong(a(1))) }
-    register(spark, "bitwise_xor") { a => BitwiseXor(toLong(a(0)), toLong(a(1))) }
-    register(spark, "bitwise_not") { a => BitwiseNot(toLong(a(0))) }
-
-    // ---- varbinary codecs (VarbinaryFunctions.java) — native aliases.
-    register(spark, "to_base64") { a => Base64(a.head) }
-    register(spark, "from_base64") { a => UnBase64(a.head) }
-    register(spark, "to_utf8") { a => Encode(a.head, Literal("UTF-8")) }
-    register(spark, "from_utf8") { a => StringDecode(a.head, Literal("UTF-8")) }
-    // sha256/sha512 return VARBINARY in the reference; Spark's sha2
-    // renders hex, so unhex back to bytes — both steps codegen'd.
-    register(spark, "sha256") { a => Unhex(Sha2(a.head, Literal(256))) }
-    register(spark, "sha512") { a => Unhex(Sha2(a.head, Literal(512))) }
-
-    // ---- array/date aliases from the docs sweep (array.rst,
-    // datetime.rst, regexp.rst): regexp_split preserves trailing empties
-    // in both engines (split limit -1); zip is Spark's arrays_zip
-    // (anonymous row fields arrive named by position); day_of_month is
-    // the Presto spelling of dayofmonth.
-    register(spark, "regexp_split") { a => StringSplit(a(0), a(1), Literal(-1)) }
-    // ROW(a, b, ...) constructor (RowType / SqlBase.g4 #rowConstructor)
-    register(spark, "row") { a => CreateStruct(a) }
-    register(spark, "zip") { a => ArraysZip(a) }
-    register(spark, "day_of_month") { a => DayOfMonth(a.head) }
-
-    // ---- string distance (StringFunctions.java levenshteinDistance).
-    register(spark, "levenshtein_distance") { a =>
-      Cast(Levenshtein(a(0), a(1)), LongType)
-    }
-
     // ---- URL extraction (UrlFunctions.java) onto Hive's parse_url —
     // same part vocabulary except PORT (UDF below) and REF-vs-FRAGMENT.
-    def urlPart(part: String): Seq[Expression] => Expression =
+    def urlPart(part: String): FunctionBuilder =
       a => ParseUrl(Seq(a.head, Literal(part)))
-    register(spark, "url_extract_protocol")(urlPart("PROTOCOL"))
-    register(spark, "url_extract_host")(urlPart("HOST"))
-    register(spark, "url_extract_path")(urlPart("PATH"))
-    register(spark, "url_extract_query")(urlPart("QUERY"))
-    register(spark, "url_extract_fragment")(urlPart("REF"))
-    register(spark, "url_extract_parameter") { a =>
-      ParseUrl(Seq(a(0), Literal("QUERY"), a(1)))
-    }
-    spark.udf.register("url_extract_port", (s: String) => {
-      if (s == null) null
-      else {
-        val p = try new java.net.URI(s).getPort catch { case _: Exception => -1 }
-        if (p < 0) null else java.lang.Long.valueOf(p.toLong)
-      }
-    })
-
-    // ---- combine_hash (CombineHashFunction.java: 31 * h1 + h2).
-    register(spark, "combine_hash") { a =>
-      Add(Multiply(Literal(31L), toLong(a(0))), toLong(a(1)))
-    }
-
-    // ---- localtime (DateTimeFunctions.java) — Spark has no TIME type
-    // (SURVEY §1.2); render the session-zone time-of-day as varchar
-    // 'HH:mm:ss.SSS', the reference's cast-to-varchar form. Documented
-    // delta: value type is varchar, not time.
-    register(spark, "localtime") { _ =>
-      new DateFormatClass(CurrentTimestamp(), Literal("HH:mm:ss.SSS"))
-    }
-
-    // ---- MySQL-pattern date_parse under its own name (the _mysql
-    // suffix predates this wave; date_format keeps the suffix because
-    // Spark's native date_format uses Java patterns and must win).
-    aliasTo(spark, "date_parse", "date_parse_mysql")
-
-    // ---- qdigest scalar under the reference name
-    // (QuantileDigestFunctions.java valueAtQuantile).
-    aliasTo(spark, "value_at_quantile", "qdigest_value_at")
-
-    // ---- merge(sketch) — the reference overloads merge() on the sketch
-    // TYPE (HLL / qdigest / setdigest). All three are binary-backed here
-    // and indistinguishable at plan time, so the unqualified name merges
-    // HLLs (the overwhelmingly common call); qdigest_merge /
-    // merge_set_digest remain the typed spellings. Documented delta.
-    aliasTo(spark, "merge", "merge_hll")
+    def aliasTo(name: String, target: String): Fn = fn(name)(builderOf(target))
 
     // ---- normalize(s[, form]) — StringFunctions.java normalize. The
     // 1-arg default is NFC; the form is a keyword in Presto's grammar,
     // arriving here as a string literal (PrestoSql quotes it).
-    spark.udf.register("normalize_form", (s: String, form: String) =>
+    val normalizeForm = scalaUdf("normalize_form", F.udf((s: String, form: String) =>
       if (s == null) null
       else java.text.Normalizer.normalize(s,
-        java.text.Normalizer.Form.valueOf(form.toUpperCase(java.util.Locale.ROOT))))
-    val reg = spark.sessionState.functionRegistry
-    val nfc1 = reg.lookupFunctionBuilder(FunctionIdentifier("normalize_nfc")).get
-    val form2 = reg.lookupFunctionBuilder(FunctionIdentifier("normalize_form")).get
-    register(spark, "normalize") { a =>
-      if (a.size == 1) nfc1(a) else form2(a)
-    }
-
-    // ---- ngrams(array, n) — ArrayNgramsFunction.java. The Column
-    // combinator (Fns.ngrams) is the scale path; this SQL name covers
-    // dialect scripts. String arrays (the only fixture element type).
-    spark.udf.register("ngrams", (arr: scala.collection.Seq[String], n: Int) =>
-      if (arr == null) null
-      else if (arr.length < n) Seq.empty[scala.collection.Seq[String]]
-      else arr.sliding(n).toSeq)
-
-    // ---- json type operators.
-    spark.udf.register("json_parse", (s: String) => jsonParse(s))
-    // json_format renders a json value as text; our json values ARE
-    // canonical text (see jsonParse), so this validates + echoes.
-    spark.udf.register("json_format", (s: String) => jsonParse(s))
-
-    // ---- HMAC family (VarbinaryFunctions.java hmacMd5/Sha1/Sha256/Sha512;
-    // hmac_sha256 predates this wave in ScalarFunctions).
-    spark.udf.register("hmac_md5", (k: Array[Byte], d: Array[Byte]) => hmac("HmacMD5", k, d))
-    spark.udf.register("hmac_sha1", (k: Array[Byte], d: Array[Byte]) => hmac("HmacSHA1", k, d))
-    spark.udf.register("hmac_sha512", (k: Array[Byte], d: Array[Byte]) => hmac("HmacSHA512", k, d))
-
-    // ---- geometric_mean under its SQL name (the oracle query composes
-    // exp(avg(ln)) inline; this registers the aggregate for dialect SQL).
-    spark.udf.register("geometric_mean", F.udaf(new GeometricMean(), Encoders.DOUBLE))
-
-    // ---- line_locate_point(line, point) scalar (GeoFunctions.java).
-    spark.udf.register("line_locate_point",
-      (line: String, pt: String) => lineLocatePointScalar(line, pt))
-
-    // ---- geometry_union(array<Geometry>) (GeoFunctions.java:619
-    // geometryUnion): left fold of pairwise union.
-    spark.udf.register("geometry_union", (arr: scala.collection.Seq[String]) =>
-      if (arr == null) null
-      else arr.filter(_ != null).reduceOption(GeometryConstructors.stUnion).orNull)
-
-    register(spark, "geometry_union_agg") { a => GeometryUnionAggExpr(a.head) }
-
+        java.text.Normalizer.Form.valueOf(form.toUpperCase(java.util.Locale.ROOT)))))
+    val nfc1 = builderOf("normalize_nfc")
     // ---- Bing tiles under the reference signatures (struct carrier).
-    val tileType = StructType(Seq(
-      StructField("x", IntegerType), StructField("y", IntegerType),
-      StructField("zoom", IntegerType)))
     // bing_tile(x, y, zoom) | bing_tile(quadkey) — arity dispatch.
-    spark.udf.register("bing_tile_xyz", (x: Int, y: Int, z: Int) => {
+    val bingTileXyz = scalaUdf("bing_tile_xyz", F.udf((x: Int, y: Int, z: Int) => {
       checkTile(x, y, z); BingTile(x, y, z)
-    })
-    spark.udf.register("bing_tile_qk", (qk: String) =>
-      if (qk == null) null else tileFromQuadkey(qk))
-    val xyz = reg.lookupFunctionBuilder(FunctionIdentifier("bing_tile_xyz")).get
-    val qk1 = reg.lookupFunctionBuilder(FunctionIdentifier("bing_tile_qk")).get
-    register(spark, "bing_tile") { a => if (a.size == 3) xyz(a) else qk1(a) }
-    spark.udf.register("bing_tile_at", (lat: Double, lng: Double, z: Int) => {
-      require(z >= 0 && z <= BingTiles.MaxZoom, s"Zoom level must be <= 23: $z")
-      require(lat >= BingTiles.MinLatitude && lat <= BingTiles.MaxLatitude,
-        s"Latitude must be between -85.05112878 and 85.05112878: $lat")
-      BingTile(tileXOf(lng, z), tileYOf(lat, z), z)
-    })
-    spark.udf.register("bing_tiles_around", (lat: Double, lng: Double, z: Int) => {
-      val tx = tileXOf(lng, z); val ty = tileYOf(lat, z)
-      val max = (1 << z) - 1
-      for {
-        dy <- -1 to 1; dx <- -1 to 1
-        x = tx + dx; y = ty + dy
-        if x >= 0 && x <= max && y >= 0 && y <= max
-      } yield BingTile(x, y, z)
-    })
-    // struct-input accessors need the Java UDF API (Row input/output).
-    spark.udf.register("bing_tile_coordinates",
-      new org.apache.spark.sql.api.java.UDF1[Row, Row] {
-        override def call(t: Row): Row =
-          if (t == null) null else Row(t.getInt(0), t.getInt(1))
-      },
-      StructType(Seq(StructField("x", IntegerType), StructField("y", IntegerType))))
-    spark.udf.register("bing_tile_zoom_level",
-      new org.apache.spark.sql.api.java.UDF1[Row, java.lang.Integer] {
-        override def call(t: Row): java.lang.Integer =
-          if (t == null) null else java.lang.Integer.valueOf(t.getInt(2))
-      },
-      IntegerType)
-    spark.udf.register("bing_tile_polygon",
-      new org.apache.spark.sql.api.java.UDF1[Row, String] {
-        override def call(t: Row): String =
-          if (t == null) null
-          else tilePolygonWktOf(BingTile(t.getInt(0), t.getInt(1), t.getInt(2)))
-      },
-      StringType)
+    }))
+    val bingTileQk = scalaUdf("bing_tile_qk", F.udf((qk: String) =>
+      if (qk == null) null else tileFromQuadkey(qk)))
     // bing_tile_quadkey: reference signature takes a TILE; the (x,y,z)
     // 3-arg spelling predates this wave — dispatch on arity.
-    val qk3 = reg.lookupFunctionBuilder(FunctionIdentifier("bing_tile_quadkey")).get
-    spark.udf.register("bing_tile_quadkey_t",
+    val qk3 = builderOf("bing_tile_quadkey")
+    val bingTileQuadkeyT = scalaUdf("bing_tile_quadkey_t", F.udf(
       new org.apache.spark.sql.api.java.UDF1[Row, String] {
         override def call(t: Row): String =
           if (t == null) null
           else quadkeyOf(BingTile(t.getInt(0), t.getInt(1), t.getInt(2)))
       },
-      StringType)
-    val qkT = reg.lookupFunctionBuilder(FunctionIdentifier("bing_tile_quadkey_t")).get
-    register(spark, "bing_tile_quadkey") { a => if (a.size == 3) qk3(a) else qkT(a) }
-    spark.udf.register("geometry_to_bing_tiles",
-      (wkt: String, zoom: Int) => geometryToBingTiles(wkt, zoom))
+      StringType))
+
+    Seq(
+      // ---- bitwise functions (MathFunctions.java bitwiseAnd/Or/Xor/Not;
+      // all bigint in the reference) — native Catalyst, codegen'd.
+      fn("bitwise_and") { a => BitwiseAnd(toLong(a(0)), toLong(a(1))) },
+      fn("bitwise_or") { a => BitwiseOr(toLong(a(0)), toLong(a(1))) },
+      fn("bitwise_xor") { a => BitwiseXor(toLong(a(0)), toLong(a(1))) },
+      fn("bitwise_not") { a => BitwiseNot(toLong(a(0))) },
+
+      // ---- varbinary codecs (VarbinaryFunctions.java) — native aliases.
+      fn("to_base64") { a => Base64(a.head) },
+      fn("from_base64") { a => UnBase64(a.head) },
+      fn("to_utf8") { a => Encode(a.head, Literal("UTF-8")) },
+      fn("from_utf8") { a => StringDecode(a.head, Literal("UTF-8")) },
+      // sha256/sha512 return VARBINARY in the reference; Spark's sha2
+      // renders hex, so unhex back to bytes — both steps codegen'd.
+      fn("sha256") { a => Unhex(Sha2(a.head, Literal(256))) },
+      fn("sha512") { a => Unhex(Sha2(a.head, Literal(512))) },
+
+      // ---- array/date aliases from the docs sweep (array.rst,
+      // datetime.rst, regexp.rst): regexp_split preserves trailing empties
+      // in both engines (split limit -1); zip is Spark's arrays_zip
+      // (anonymous row fields arrive named by position); day_of_month is
+      // the Presto spelling of dayofmonth.
+      fn("regexp_split") { a => StringSplit(a(0), a(1), Literal(-1)) },
+      // ROW(a, b, ...) constructor (RowType / SqlBase.g4 #rowConstructor)
+      fn("row") { a => CreateStruct(a) },
+      fn("zip") { a => ArraysZip(a) },
+      fn("day_of_month") { a => DayOfMonth(a.head) },
+
+      // ---- string distance (StringFunctions.java levenshteinDistance).
+      fn("levenshtein_distance") { a =>
+        Cast(Levenshtein(a(0), a(1)), LongType)
+      },
+
+      fn("url_extract_protocol")(urlPart("PROTOCOL")),
+      fn("url_extract_host")(urlPart("HOST")),
+      fn("url_extract_path")(urlPart("PATH")),
+      fn("url_extract_query")(urlPart("QUERY")),
+      fn("url_extract_fragment")(urlPart("REF")),
+      fn("url_extract_parameter") { a =>
+        ParseUrl(Seq(a(0), Literal("QUERY"), a(1)))
+      },
+      scalaUdf("url_extract_port", F.udf((s: String) => {
+        if (s == null) null
+        else {
+          val p = try new java.net.URI(s).getPort catch { case _: Exception => -1 }
+          if (p < 0) null else java.lang.Long.valueOf(p.toLong)
+        }
+      })),
+
+      // ---- combine_hash (CombineHashFunction.java: 31 * h1 + h2).
+      fn("combine_hash") { a =>
+        Add(Multiply(Literal(31L), toLong(a(0))), toLong(a(1)))
+      },
+
+      // ---- localtime (DateTimeFunctions.java) — Spark has no TIME type
+      // (SURVEY §1.2); render the session-zone time-of-day as varchar
+      // 'HH:mm:ss.SSS', the reference's cast-to-varchar form. Documented
+      // delta: value type is varchar, not time.
+      fn("localtime") { _ =>
+        new DateFormatClass(CurrentTimestamp(), Literal("HH:mm:ss.SSS"))
+      },
+
+      // ---- MySQL-pattern date_parse under its own name (the _mysql
+      // suffix predates this wave; date_format keeps the suffix because
+      // Spark's native date_format uses Java patterns and must win).
+      aliasTo("date_parse", "date_parse_mysql"),
+
+      // ---- qdigest scalar under the reference name
+      // (QuantileDigestFunctions.java valueAtQuantile).
+      aliasTo("value_at_quantile", "qdigest_value_at"),
+
+      // ---- merge(sketch) — the reference overloads merge() on the sketch
+      // TYPE (HLL / qdigest / setdigest). All three are binary-backed here
+      // and indistinguishable at plan time, so the unqualified name merges
+      // HLLs (the overwhelmingly common call); qdigest_merge /
+      // merge_set_digest remain the typed spellings. Documented delta.
+      aliasTo("merge", "merge_hll"),
+
+      normalizeForm,
+      fn("normalize") { a =>
+        if (a.size == 1) nfc1(a) else normalizeForm._2(a)
+      },
+
+      // ---- ngrams(array, n) — ArrayNgramsFunction.java. The Column
+      // combinator (Fns.ngrams) is the scale path; this SQL name covers
+      // dialect scripts. String arrays (the only fixture element type).
+      scalaUdf("ngrams", F.udf((arr: scala.collection.Seq[String], n: Int) =>
+        if (arr == null) null
+        else if (arr.length < n) Seq.empty[scala.collection.Seq[String]]
+        else arr.sliding(n).toSeq)),
+
+      // ---- json type operators.
+      scalaUdf("json_parse", F.udf((s: String) => jsonParse(s))),
+      // json_format renders a json value as text; our json values ARE
+      // canonical text (see jsonParse), so this validates + echoes.
+      scalaUdf("json_format", F.udf((s: String) => jsonParse(s))),
+
+      // ---- HMAC family (VarbinaryFunctions.java hmacMd5/Sha1/Sha256/Sha512;
+      // hmac_sha256 predates this wave in ScalarFunctions).
+      scalaUdf("hmac_md5", F.udf((k: Array[Byte], d: Array[Byte]) => hmac("HmacMD5", k, d))),
+      scalaUdf("hmac_sha1", F.udf((k: Array[Byte], d: Array[Byte]) => hmac("HmacSHA1", k, d))),
+      scalaUdf("hmac_sha512", F.udf((k: Array[Byte], d: Array[Byte]) => hmac("HmacSHA512", k, d))),
+
+      // ---- geometric_mean under its SQL name (the oracle query composes
+      // exp(avg(ln)) inline; this registers the aggregate for dialect SQL).
+      scalaUdf("geometric_mean", F.udaf(new GeometricMean(), Encoders.DOUBLE)),
+
+      // ---- line_locate_point(line, point) scalar (GeoFunctions.java).
+      scalaUdf("line_locate_point", F.udf(
+        (line: String, pt: String) => lineLocatePointScalar(line, pt))),
+
+      // ---- geometry_union(array<Geometry>) (GeoFunctions.java:619
+      // geometryUnion): left fold of pairwise union.
+      scalaUdf("geometry_union", F.udf((arr: scala.collection.Seq[String]) =>
+        if (arr == null) null
+        else arr.filter(_ != null).reduceOption(GeometryConstructors.stUnion).orNull)),
+
+      fn("geometry_union_agg") { a => GeometryUnionAggExpr(a.head) },
+
+      bingTileXyz,
+      bingTileQk,
+      fn("bing_tile") { a => if (a.size == 3) bingTileXyz._2(a) else bingTileQk._2(a) },
+      scalaUdf("bing_tile_at", F.udf((lat: Double, lng: Double, z: Int) => {
+        require(z >= 0 && z <= BingTiles.MaxZoom, s"Zoom level must be <= 23: $z")
+        require(lat >= BingTiles.MinLatitude && lat <= BingTiles.MaxLatitude,
+          s"Latitude must be between -85.05112878 and 85.05112878: $lat")
+        BingTile(tileXOf(lng, z), tileYOf(lat, z), z)
+      })),
+      scalaUdf("bing_tiles_around", F.udf((lat: Double, lng: Double, z: Int) => {
+        val tx = tileXOf(lng, z); val ty = tileYOf(lat, z)
+        val max = (1 << z) - 1
+        for {
+          dy <- -1 to 1; dx <- -1 to 1
+          x = tx + dx; y = ty + dy
+          if x >= 0 && x <= max && y >= 0 && y <= max
+        } yield BingTile(x, y, z)
+      })),
+      // struct-input accessors need the Java UDF API (Row input/output).
+      scalaUdf("bing_tile_coordinates", F.udf(
+        new org.apache.spark.sql.api.java.UDF1[Row, Row] {
+          override def call(t: Row): Row =
+            if (t == null) null else Row(t.getInt(0), t.getInt(1))
+        },
+        StructType(Seq(StructField("x", IntegerType), StructField("y", IntegerType))))),
+      scalaUdf("bing_tile_zoom_level", F.udf(
+        new org.apache.spark.sql.api.java.UDF1[Row, java.lang.Integer] {
+          override def call(t: Row): java.lang.Integer =
+            if (t == null) null else java.lang.Integer.valueOf(t.getInt(2))
+        },
+        IntegerType)),
+      scalaUdf("bing_tile_polygon", F.udf(
+        new org.apache.spark.sql.api.java.UDF1[Row, String] {
+          override def call(t: Row): String =
+            if (t == null) null
+            else tilePolygonWktOf(BingTile(t.getInt(0), t.getInt(1), t.getInt(2)))
+        },
+        StringType)),
+      bingTileQuadkeyT,
+      fn("bing_tile_quadkey") { a => if (a.size == 3) qk3(a) else bingTileQuadkeyT._2(a) },
+      scalaUdf("geometry_to_bing_tiles", F.udf(
+        (wkt: String, zoom: Int) => geometryToBingTiles(wkt, zoom))))
   }
 }

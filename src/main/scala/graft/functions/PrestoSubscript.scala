@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
@@ -170,7 +169,6 @@ case class PrestoSubscript(left: Expression, right: Expression)
 }
 
 object PrestoSubscript {
-  def install(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction("presto_subscript",
-      args => PrestoSubscript(args(0), args(1)), "scala_udf")
+  def functions: Seq[FunctionRegistry.Fn] = Seq(
+    FunctionRegistry.fn("presto_subscript") { args => PrestoSubscript(args(0), args(1)) })
 }

@@ -1,11 +1,12 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{functions => F}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.types.{BinaryType, DataType}
+import FunctionRegistry.{fn, scalaUdf}
 
 /** Mergeable quantile sketch — the role of the reference's qdigest
   * (QuantileDigestType.java, QuantileDigestAggregationFunction.java:58,
@@ -186,24 +187,23 @@ case class QuantileSketchAgg(
 }
 
 object QuantileSketchFunctions {
-  def install(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction("qdigest_agg",
-      args => QuantileSketchAgg(args.head), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction("qdigest_merge",
-      args => QuantileSketchAgg(args.head, mergeMode = true), "scala_udf")
-    spark.udf.register("qdigest_value_at",
+  def functions: Seq[FunctionRegistry.Fn] = Seq(
+    fn("qdigest_agg")(
+      args => QuantileSketchAgg(args.head)),
+    fn("qdigest_merge")(
+      args => QuantileSketchAgg(args.head, mergeMode = true)),
+    scalaUdf("qdigest_value_at", F.udf(
       (b: Array[Byte], q: Double) =>
         if (b == null) null
         else java.lang.Double.valueOf(
-          QuantileSketch.valueAtQuantile(QuantileSketch.fromBytes(b), q)))
+          QuantileSketch.valueAtQuantile(QuantileSketch.fromBytes(b), q)))),
     // values_at_quantiles — QuantileDigestFunctions.java:99: one sketch
     // walk per batch of quantiles instead of a call per quantile.
-    spark.udf.register("values_at_quantiles",
+    scalaUdf("values_at_quantiles", F.udf(
       (b: Array[Byte], qs: scala.collection.Seq[Double]) =>
         if (b == null || qs == null) null
         else {
           val sk = QuantileSketch.fromBytes(b)
           qs.map(q => QuantileSketch.valueAtQuantile(sk, q))
-        })
-  }
+        })))
 }

@@ -1,7 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import FunctionRegistry.scalaUdf
 
 /** Custom scalar functions the reference has and Spark lacks.
   *
@@ -486,48 +487,49 @@ object ScalarFunctions {
       java.time.LocalDateTime.parse(s, f).toInstant(java.time.ZoneOffset.UTC))
   }
 
-  def install(spark: SparkSession): Unit = {
-    // wilson_interval_lower/upper — WilsonInterval.java:30-57, identical
-    // double-op order so the DuckDB oracle reproduces bits exactly
-    def wilson(s: Long, t: Long, z: Double, bound: Int): Double = {
-      require(s >= 0, "number of successes must not be negative")
-      require(t > 0, "number of trials must be positive")
-      require(s <= t, "number of successes must not be larger than number of trials")
-      require(z >= 0, "z-score must not be negative")
-      val p = s * 1.0 / t
-      val n = t.toDouble
-      (p + (z * z) / (2 * n) + bound * z * math.sqrt((p * (1 - p)) / n + (z * z) / (4 * n * n))) / (1 + (z * z) / n)
-    }
-    spark.udf.register("wilson_interval_lower", (s: Long, t: Long, z: Double) => wilson(s, t, z, -1))
-    spark.udf.register("wilson_interval_upper", (s: Long, t: Long, z: Double) => wilson(s, t, z, 1))
+  // wilson_interval_lower/upper — WilsonInterval.java:30-57, identical
+  // double-op order so the DuckDB oracle reproduces bits exactly
+  private def wilson(s: Long, t: Long, z: Double, bound: Int): Double = {
+    require(s >= 0, "number of successes must not be negative")
+    require(t > 0, "number of trials must be positive")
+    require(s <= t, "number of successes must not be larger than number of trials")
+    require(z >= 0, "z-score must not be negative")
+    val p = s * 1.0 / t
+    val n = t.toDouble
+    (p + (z * z) / (2 * n) + bound * z * math.sqrt((p * (1 - p)) / n + (z * z) / (4 * n * n))) / (1 + (z * z) / n)
+  }
+
+  def functions: Seq[FunctionRegistry.Fn] = Seq(
+    scalaUdf("wilson_interval_lower", udf((s: Long, t: Long, z: Double) => wilson(s, t, z, -1))),
+    scalaUdf("wilson_interval_upper", udf((s: Long, t: Long, z: Double) => wilson(s, t, z, 1))),
     // empty_approx_set() — HyperLogLogFunctions.java
-    spark.udf.register("empty_approx_set", () => new Array[Byte](Hll.M))
-    spark.udf.register("date_format_mysql", (ts: java.sql.Timestamp, p: String) => dateFormatMysql(ts, p))
-    spark.udf.register("date_parse_mysql", (s: String, p: String) => dateParseMysql(s, p))
-    spark.udf.register("word_stem", (s: String) => porterStem(s))
-    spark.udf.register("url_encode", (s: String) => urlEncode(s))
-    spark.udf.register("url_decode", (s: String) => urlDecode(s))
-    spark.udf.register("to_base", (x: Long, r: Int) => toBase(x, r))
-    spark.udf.register("from_base", (s: String, r: Int) => fromBase(s, r))
-    spark.udf.register("to_ieee754_64", (d: Double) => toIeee754_64(d))
-    spark.udf.register("from_ieee754_64", (b: Array[Byte]) => fromIeee754_64(b))
-    spark.udf.register("to_ieee754_32", (f: Float) => toIeee754_32(f))
-    spark.udf.register("from_ieee754_32", (b: Array[Byte]) => fromIeee754_32(b))
-    spark.udf.register("to_base64url", (b: Array[Byte]) => toBase64Url(b))
-    spark.udf.register("from_base64url", (s: String) => fromBase64Url(s))
-    spark.udf.register("to_hex", (b: Array[Byte]) => toHex(b))
-    spark.udf.register("from_hex", (s: String) => fromHex(s))
-    spark.udf.register("millisecond", (ts: java.sql.Timestamp) => millisecondOf(ts))
-    spark.udf.register("at_timezone", (ts: java.sql.Timestamp, z: String) => atTimezone(ts, z))
-    spark.udf.register("timezone_hour", (ts: java.sql.Timestamp, z: String) => timezoneHour(ts, z))
-    spark.udf.register("timezone_minute", (ts: java.sql.Timestamp, z: String) => timezoneMinute(ts, z))
-    spark.udf.register("year_of_week", (d: java.sql.Date) => yearOfWeek(d))
-    spark.udf.register("yow", (d: java.sql.Date) => yearOfWeek(d))
+    scalaUdf("empty_approx_set", udf(() => new Array[Byte](Hll.M))),
+    scalaUdf("date_format_mysql", udf((ts: java.sql.Timestamp, p: String) => dateFormatMysql(ts, p))),
+    scalaUdf("date_parse_mysql", udf((s: String, p: String) => dateParseMysql(s, p))),
+    scalaUdf("word_stem", udf((s: String) => porterStem(s))),
+    scalaUdf("url_encode", udf((s: String) => urlEncode(s))),
+    scalaUdf("url_decode", udf((s: String) => urlDecode(s))),
+    scalaUdf("to_base", udf((x: Long, r: Int) => toBase(x, r))),
+    scalaUdf("from_base", udf((s: String, r: Int) => fromBase(s, r))),
+    scalaUdf("to_ieee754_64", udf((d: Double) => toIeee754_64(d))),
+    scalaUdf("from_ieee754_64", udf((b: Array[Byte]) => fromIeee754_64(b))),
+    scalaUdf("to_ieee754_32", udf((f: Float) => toIeee754_32(f))),
+    scalaUdf("from_ieee754_32", udf((b: Array[Byte]) => fromIeee754_32(b))),
+    scalaUdf("to_base64url", udf((b: Array[Byte]) => toBase64Url(b))),
+    scalaUdf("from_base64url", udf((s: String) => fromBase64Url(s))),
+    scalaUdf("to_hex", udf((b: Array[Byte]) => toHex(b))),
+    scalaUdf("from_hex", udf((s: String) => fromHex(s))),
+    scalaUdf("millisecond", udf((ts: java.sql.Timestamp) => millisecondOf(ts))),
+    scalaUdf("at_timezone", udf((ts: java.sql.Timestamp, z: String) => atTimezone(ts, z))),
+    scalaUdf("timezone_hour", udf((ts: java.sql.Timestamp, z: String) => timezoneHour(ts, z))),
+    scalaUdf("timezone_minute", udf((ts: java.sql.Timestamp, z: String) => timezoneMinute(ts, z))),
+    scalaUdf("year_of_week", udf((d: java.sql.Date) => yearOfWeek(d))),
+    scalaUdf("yow", udf((d: java.sql.Date) => yearOfWeek(d))),
     // multimap_from_entries — MultimapFromEntriesFunction.java:42: map of
     // first-appearance-ordered keys to entry-ordered value lists. Java
     // UDF API: struct inputs arrive as Row, which Scala UDF type
     // inference cannot express.
-    spark.udf.register("multimap_from_entries",
+    scalaUdf("multimap_from_entries", udf(
       new org.apache.spark.sql.api.java.UDF1[
           scala.collection.Seq[org.apache.spark.sql.Row],
           java.util.LinkedHashMap[String, java.util.List[String]]] {
@@ -544,32 +546,31 @@ object ScalarFunctions {
       },
       org.apache.spark.sql.types.MapType(
         org.apache.spark.sql.types.StringType,
-        org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.StringType)))
-    spark.udf.register("hmac_sha256", (k: Array[Byte], d: Array[Byte]) => hmacSha256(k, d))
-    spark.udf.register("normalize_nfc", (s: String) => normalizeNfc(s))
-    spark.udf.register("simhash64", (s: String) => simhash64(s))
-    spark.udf.register("hamming_distance", (a: String, b: String) => hammingDistance(a, b))
-    spark.udf.register("split_to_multimap",
-      (s: String, e: String, kv: String) => splitToMultimap(s, e, kv))
-    spark.udf.register("to_big_endian_64", (x: Long) => toBigEndian64(x))
-    spark.udf.register("from_big_endian_64", (b: Array[Byte]) => fromBigEndian64(b))
-    spark.udf.register("to_big_endian_32", (x: Int) => toBigEndian32(x))
-    spark.udf.register("from_big_endian_32", (b: Array[Byte]) => fromBigEndian32(b))
-    spark.udf.register("parse_duration", (s: String) => parseDuration(s))
-    spark.udf.register("to_milliseconds", (d: java.time.Duration) => durationToMillis(d))
-    spark.udf.register("parse_presto_data_size", (s: String) => parseDataSize(s))
-    spark.udf.register("format_datetime", (ts: java.sql.Timestamp, p: String) => formatDatetime(ts, p))
-    spark.udf.register("parse_datetime", (s: String, p: String) => parseDatetime(s, p))
-    spark.udf.register("is_json_scalar", (s: String) => isJsonScalar(s))
-    spark.udf.register("json_extract_scalar", (s: String, p: String) => jsonExtractScalar(s, p))
-    spark.udf.register("json_size", (s: String, p: String) => jsonSize(s, p))
-    spark.udf.register("json_array_get", (s: String, i: Long) => jsonArrayGet(s, i))
-    spark.udf.register("json_array_contains", (s: String, v: String) => jsonArrayContains(s, v))
-    spark.udf.register("normal_cdf", (m: Double, sd: Double, v: Double) => normalCdf(m, sd, v))
-    spark.udf.register("inverse_normal_cdf", (m: Double, sd: Double, p: Double) => inverseNormalCdf(m, sd, p))
-    spark.udf.register("beta_cdf", (a: Double, b: Double, v: Double) => betaCdf(a, b, v))
-    spark.udf.register("inverse_beta_cdf", (a: Double, b: Double, p: Double) => inverseBetaCdf(a, b, p))
-  }
+        org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.StringType)))),
+    scalaUdf("hmac_sha256", udf((k: Array[Byte], d: Array[Byte]) => hmacSha256(k, d))),
+    scalaUdf("normalize_nfc", udf((s: String) => normalizeNfc(s))),
+    scalaUdf("simhash64", udf((s: String) => simhash64(s))),
+    scalaUdf("hamming_distance", udf((a: String, b: String) => hammingDistance(a, b))),
+    scalaUdf("split_to_multimap", udf(
+      (s: String, e: String, kv: String) => splitToMultimap(s, e, kv))),
+    scalaUdf("to_big_endian_64", udf((x: Long) => toBigEndian64(x))),
+    scalaUdf("from_big_endian_64", udf((b: Array[Byte]) => fromBigEndian64(b))),
+    scalaUdf("to_big_endian_32", udf((x: Int) => toBigEndian32(x))),
+    scalaUdf("from_big_endian_32", udf((b: Array[Byte]) => fromBigEndian32(b))),
+    scalaUdf("parse_duration", udf((s: String) => parseDuration(s))),
+    scalaUdf("to_milliseconds", udf((d: java.time.Duration) => durationToMillis(d))),
+    scalaUdf("parse_presto_data_size", udf((s: String) => parseDataSize(s))),
+    scalaUdf("format_datetime", udf((ts: java.sql.Timestamp, p: String) => formatDatetime(ts, p))),
+    scalaUdf("parse_datetime", udf((s: String, p: String) => parseDatetime(s, p))),
+    scalaUdf("is_json_scalar", udf((s: String) => isJsonScalar(s))),
+    scalaUdf("json_extract_scalar", udf((s: String, p: String) => jsonExtractScalar(s, p))),
+    scalaUdf("json_size", udf((s: String, p: String) => jsonSize(s, p))),
+    scalaUdf("json_array_get", udf((s: String, i: Long) => jsonArrayGet(s, i))),
+    scalaUdf("json_array_contains", udf((s: String, v: String) => jsonArrayContains(s, v))),
+    scalaUdf("normal_cdf", udf((m: Double, sd: Double, v: Double) => normalCdf(m, sd, v))),
+    scalaUdf("inverse_normal_cdf", udf((m: Double, sd: Double, p: Double) => inverseNormalCdf(m, sd, p))),
+    scalaUdf("beta_cdf", udf((a: Double, b: Double, v: Double) => betaCdf(a, b, v))),
+    scalaUdf("inverse_beta_cdf", udf((a: Double, b: Double, p: Double) => inverseBetaCdf(a, b, p))))
 }
 
 /** Native (codegen-friendly) Column compositions for ops the reference
@@ -579,7 +580,7 @@ object ScalarFunctions {
 object Fns {
 
   /** Cosine similarity via the native codegen'd ArrayCosineSimilarity
-    * expression (registered by FunctionRegistry.installAll) —
+    * expression (listed in FunctionRegistry.all) —
     * reference: operator/scalar/MathFunctions.java cosineSimilarity.
     */
   def cosineSim(a: Column, b: Column): Column =

@@ -1,12 +1,13 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{functions => F}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate.{BitXorAgg, TypedImperativeAggregate}
 import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
+import FunctionRegistry.{fn, scalaUdf}
 
 /** Mergeable sketch aggregates — the reference's HyperLogLog / SetDigest /
   * checksum surface (SURVEY §2.4), rebuilt as Spark
@@ -264,42 +265,40 @@ case class SetDigestAgg(
 }
 
 object SketchAggregates {
-  def install(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("approx_set",
-      args => HllSketchAgg(args.head, mergeMode = false), "scala_udf")
-    reg.createOrReplaceTempFunction("merge_hll",
-      args => HllSketchAgg(args.head, mergeMode = true), "scala_udf")
-    reg.createOrReplaceTempFunction("make_set_digest",
-      args => SetDigestAgg(args.head), "scala_udf")
-    reg.createOrReplaceTempFunction("merge_set_digest",
-      args => SetDigestAgg(args.head, mergeMode = true), "scala_udf")
+  def functions: Seq[FunctionRegistry.Fn] = Seq(
+    fn("approx_set")(
+      args => HllSketchAgg(args.head, mergeMode = false)),
+    fn("merge_hll")(
+      args => HllSketchAgg(args.head, mergeMode = true)),
+    fn("make_set_digest")(
+      args => SetDigestAgg(args.head)),
+    fn("merge_set_digest")(
+      args => SetDigestAgg(args.head, mergeMode = true)),
     // checksum(x): order-independent xor of xxhash64 — stays fully native.
     // Reference: ChecksumAggregationFunction.java:47.
-    reg.createOrReplaceTempFunction("checksum",
-      args => BitXorAgg(new XxHash64(args)), "scala_udf")
+    fn("checksum")(
+      args => BitXorAgg(new XxHash64(args))),
 
     // SQL convention: NULL/malformed sketch input -> NULL, not a crash.
-    spark.udf.register("hll_cardinality", (b: Array[Byte]) =>
+    scalaUdf("hll_cardinality", F.udf((b: Array[Byte]) =>
       if (b == null || b.length != Hll.M) null
-      else java.lang.Long.valueOf(Hll.cardinality(b)))
-    spark.udf.register("jaccard_index", (a: Array[Byte], b: Array[Byte]) =>
+      else java.lang.Long.valueOf(Hll.cardinality(b)))),
+    scalaUdf("jaccard_index", F.udf((a: Array[Byte], b: Array[Byte]) =>
       if (a == null || b == null) null
       else java.lang.Double.valueOf(
-        SetDigest.jaccard(SetDigest.fromBytes(a), SetDigest.fromBytes(b))))
+        SetDigest.jaccard(SetDigest.fromBytes(a), SetDigest.fromBytes(b))))),
     // SetDigestFunctions.java:54 — exact below k, jaccard-bounded above
-    spark.udf.register("intersection_cardinality", (a: Array[Byte], b: Array[Byte]) =>
+    scalaUdf("intersection_cardinality", F.udf((a: Array[Byte], b: Array[Byte]) =>
       if (a == null || b == null) null
       else java.lang.Long.valueOf(
-        SetDigest.intersectionCardinality(SetDigest.fromBytes(a), SetDigest.fromBytes(b))))
+        SetDigest.intersectionCardinality(SetDigest.fromBytes(a), SetDigest.fromBytes(b))))),
     // SetDigestFunctions.java:47 — cardinality(setdigest); named to avoid
     // shadowing Spark's array/map cardinality (Presto overloads by type)
-    spark.udf.register("set_digest_cardinality", (a: Array[Byte]) =>
+    scalaUdf("set_digest_cardinality", F.udf((a: Array[Byte]) =>
       if (a == null) null
-      else java.lang.Long.valueOf(SetDigest.cardinality(SetDigest.fromBytes(a))))
+      else java.lang.Long.valueOf(SetDigest.cardinality(SetDigest.fromBytes(a))))),
     // SetDigestFunctions.java:86 — hash -> occurrence count map
-    spark.udf.register("hash_counts", (a: Array[Byte]) =>
+    scalaUdf("hash_counts", F.udf((a: Array[Byte]) =>
       if (a == null) null
-      else SetDigest.hashCounts(SetDigest.fromBytes(a)))
-  }
+      else SetDigest.hashCounts(SetDigest.fromBytes(a)))))
 }

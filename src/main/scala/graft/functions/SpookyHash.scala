@@ -1,6 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{functions => F}
+import FunctionRegistry.scalaUdf
 
 /** SpookyHash V2 (Bob Jenkins, public domain) — the reference registers
   * spooky_hash_v2_32 / spooky_hash_v2_64 over varbinary
@@ -195,14 +196,14 @@ object SpookyHash {
     * bytes, matching the reference's reverseBytes write). Seed 0, as
     * VarbinaryFunctions.java:286,296 hard-code.
     */
-  def install(spark: SparkSession): Unit = {
-    spark.udf.register("spooky_hash_v2_32", (b: Array[Byte]) =>
+  def functions: Seq[FunctionRegistry.Fn] = Seq(
+    scalaUdf("spooky_hash_v2_32", F.udf((b: Array[Byte]) =>
       if (b == null) null
       else {
         val v = hash32(b, 0)
         Array((v >>> 24).toByte, (v >>> 16).toByte, (v >>> 8).toByte, v.toByte)
-      })
-    spark.udf.register("spooky_hash_v2_64", (b: Array[Byte]) =>
+      })),
+    scalaUdf("spooky_hash_v2_64", F.udf((b: Array[Byte]) =>
       if (b == null) null
       else {
         val v = hash64(b, 0L)
@@ -210,6 +211,5 @@ object SpookyHash {
         var i = 0
         while (i < 8) { out(i) = (v >>> (56 - 8 * i)).toByte; i += 1 }
         out
-      })
-  }
+      })))
 }

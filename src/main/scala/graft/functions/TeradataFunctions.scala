@@ -1,7 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions._
+import FunctionRegistry.{fn, scalaUdf}
 
 /** Teradata-compatibility functions — the reference's
   * presto-teradata-functions plugin re-expressed on Catalyst:
@@ -62,28 +62,21 @@ object TeradataFunctions {
     case other => other // non-literal format: pattern passed through untranslated
   }
 
-  private def register(spark: SparkSession, name: String)(
-      builder: Seq[Expression] => Expression): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, builder, "scala_udf")
-
-  def install(spark: SparkSession): Unit = {
-    register(spark, "index") { args => StringInstr(args(0), args(1)) }
-    register(spark, "to_char") { args => DateFormatClass(args(0), translated(args(1))) }
-    register(spark, "to_date") { args =>
+  def functions: Seq[FunctionRegistry.Fn] = Seq(
+    fn("index") { args => StringInstr(args(0), args(1)) },
+    fn("to_char") { args => DateFormatClass(args(0), translated(args(1))) },
+    fn("to_date") { args =>
       if (args.size >= 2) new ParseToDate(args(0), translated(args(1))) else new ParseToDate(args(0))
-    }
-    register(spark, "to_timestamp") { args =>
+    },
+    fn("to_timestamp") { args =>
       if (args.size >= 2) new ParseToTimestamp(args(0), translated(args(1)))
       else new ParseToTimestamp(args(0))
-    }
-    val char2hexint = org.apache.spark.sql.functions.udf { (s: String) =>
+    },
+    scalaUdf("char2hexint", org.apache.spark.sql.functions.udf { (s: String) =>
       if (s == null) null
       else {
         val bytes = s.getBytes(java.nio.charset.StandardCharsets.UTF_16BE)
         bytes.map(b => f"${b & 0xff}%02X").mkString
       }
-    }
-    spark.udf.register("char2hexint", char2hexint)
-  }
+    }))
 }

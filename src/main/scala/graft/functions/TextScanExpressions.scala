@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -8,6 +7,7 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
+import FunctionRegistry.fn
 
 /** Single-pass text-scan kernels for the corpus-curation path — the two
   * per-document scans a quality/filtering pipeline runs over every byte
@@ -35,12 +35,11 @@ import org.apache.spark.unsafe.types.UTF8String
   *    quality-filter signal (Gopher/DCLM family).
   */
 object TextScanExpressions {
-  def install(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction("blocklist_counts",
-      args => BlocklistMatches(args(0), BlocklistMatches.literalPatterns(args(1))), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction("char_stats",
-      args => CharStats(args(0)), "scala_udf")
-  }
+  def functions: Seq[FunctionRegistry.Fn] = Seq(
+    fn("blocklist_counts")(
+      args => BlocklistMatches(args(0), BlocklistMatches.literalPatterns(args(1)))),
+    fn("char_stats")(
+      args => CharStats(args(0))))
 }
 
 /** Aho-Corasick automaton over UTF-16 code units. Built once per plan

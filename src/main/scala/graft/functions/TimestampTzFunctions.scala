@@ -1,6 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{functions => F}
+import FunctionRegistry.scalaUdf
 
 /** Zone-carrying TIMESTAMP WITH TIME ZONE (reference:
   * presto-spi/.../DateTimeEncoding.java:26-62 — value is a BIGINT
@@ -212,26 +213,25 @@ object TimestampTzFunctions {
     * packed-BIGINT variants therefore carry a tz_ prefix — same
     * semantics, disambiguated by name instead of argument type
     * (documented delta). */
-  def install(spark: SparkSession): Unit = {
-    spark.udf.register("with_timezone", (ts: java.sql.Timestamp, zone: String) =>
+  def functions: Seq[FunctionRegistry.Fn] = Seq(
+    scalaUdf("with_timezone", F.udf((ts: java.sql.Timestamp, zone: String) =>
       if (ts == null || zone == null) null.asInstanceOf[java.lang.Long]
       else java.lang.Long.valueOf(withTimezone(
-        ts.getTime * 1000L + (ts.getNanos / 1000) % 1000, zone)))
-    spark.udf.register("tz_at_timezone", (packed: java.lang.Long, zone: String) =>
+        ts.getTime * 1000L + (ts.getNanos / 1000) % 1000, zone)))),
+    scalaUdf("tz_at_timezone", F.udf((packed: java.lang.Long, zone: String) =>
       if (packed == null || zone == null) null.asInstanceOf[java.lang.Long]
-      else java.lang.Long.valueOf(atTimezone(packed, zone)))
-    spark.udf.register("tz_timezone_hour", (packed: java.lang.Long) =>
+      else java.lang.Long.valueOf(atTimezone(packed, zone)))),
+    scalaUdf("tz_timezone_hour", F.udf((packed: java.lang.Long) =>
       if (packed == null) null.asInstanceOf[java.lang.Long]
-      else java.lang.Long.valueOf(offsetSeconds(packed) / 3600L))
-    spark.udf.register("tz_timezone_minute", (packed: java.lang.Long) =>
+      else java.lang.Long.valueOf(offsetSeconds(packed) / 3600L))),
+    scalaUdf("tz_timezone_minute", F.udf((packed: java.lang.Long) =>
       if (packed == null) null.asInstanceOf[java.lang.Long]
-      else java.lang.Long.valueOf((offsetSeconds(packed) / 60L) % 60L))
-    spark.udf.register("tz_millis", (packed: java.lang.Long) =>
+      else java.lang.Long.valueOf((offsetSeconds(packed) / 60L) % 60L))),
+    scalaUdf("tz_millis", F.udf((packed: java.lang.Long) =>
       if (packed == null) null.asInstanceOf[java.lang.Long]
-      else java.lang.Long.valueOf(unpackMillis(packed)))
-    spark.udf.register("tz_zone", (packed: java.lang.Long) =>
-      if (packed == null) null else unpackZone(packed))
-    spark.udf.register("tz_format", (packed: java.lang.Long) =>
-      if (packed == null) null else format(packed))
-  }
+      else java.lang.Long.valueOf(unpackMillis(packed)))),
+    scalaUdf("tz_zone", F.udf((packed: java.lang.Long) =>
+      if (packed == null) null else unpackZone(packed))),
+    scalaUdf("tz_format", F.udf((packed: java.lang.Long) =>
+      if (packed == null) null else format(packed))))
 }

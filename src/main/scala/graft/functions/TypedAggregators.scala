@@ -1,7 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.{Encoder, Encoders, SparkSession, functions => F}
+import org.apache.spark.sql.{Encoder, Encoders, functions => F}
 import org.apache.spark.sql.expressions.Aggregator
+import FunctionRegistry.scalaUdf
 
 /** Typed `Aggregator[IN, BUF, OUT]` implementations — the Spark mapping
   * for the reference's reduce_agg (ReduceAggregationFunction.java,
@@ -48,8 +49,7 @@ object TypedAggregators {
       override def outputEncoder: Encoder[Double] = Encoders.scalaDouble
     }
 
-  def install(spark: SparkSession): Unit = {
-    spark.udf.register("reduce_sumsq", F.udaf(sumOfSquares))
-    spark.udf.register("reduce_logsumexp", F.udaf(logSumExp))
-  }
+  def functions: Seq[FunctionRegistry.Fn] = Seq(
+    scalaUdf("reduce_sumsq", F.udaf(sumOfSquares)),
+    scalaUdf("reduce_logsumexp", F.udaf(logSumExp)))
 }

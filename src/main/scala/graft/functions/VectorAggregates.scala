@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.expressions.{Cast, Expression}
@@ -117,7 +116,6 @@ object VectorMeanAgg {
   /** Float arrays widen to double via the cast (exact), same convention as
     * cosine_similarity.
     */
-  def install(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction("vec_mean",
-      args => VectorMeanAgg(Cast(args.head, ArrayType(DoubleType))), "scala_udf")
+  def functions: Seq[FunctionRegistry.Fn] = Seq(
+    FunctionRegistry.fn("vec_mean") { args => VectorMeanAgg(Cast(args.head, ArrayType(DoubleType))) })
 }

@@ -187,7 +187,6 @@ object LlmQueries extends QueryModule {
     * no Σc² bucket term anywhere.
     */
   private[graft] def snmPipeline(s: SparkSession): (DataFrame, DataFrame, Long, Long) = {
-    graft.functions.FunctionRegistry.installAll(s)
     val w = 4
     val sig = s.table("documents").select(col("doc_id").cast("long").as("doc_id"),
       call_udf("simhash64", col("text")).as("sig"))
@@ -999,7 +998,6 @@ object LlmQueries extends QueryModule {
       val nCands = cCands.count()
       // independent equal-sig recomputation: every identical-signature
       // pair must be covered through its representative star
-      graft.functions.FunctionRegistry.installAll(s)
       val sig = s.table("documents").select(col("doc_id").cast("long").as("doc_id"),
         call_udf("simhash64", col("text")).as("sig"))
       val star = sig.groupBy("sig")
@@ -1056,7 +1054,6 @@ object LlmQueries extends QueryModule {
     Q("llm_dedup_simhash",
       """SELECT true AS separates_dups""".stripMargin) { (s, _) =>
       import s.implicits._
-      graft.functions.FunctionRegistry.installAll(s)
       val sig = s.table("documents")
         .select(col("doc_id"), call_udf("simhash64", col("text")).as("sig"))
       def hammingOf(pairs: DataFrame): DataFrame = pairs
@@ -1075,7 +1072,6 @@ object LlmQueries extends QueryModule {
       Seq(ok).toDF("separates_dups")
     }.withBench { (s, _) =>
       // Engine side: the O(tokens)/doc signature computation itself.
-      graft.functions.FunctionRegistry.installAll(s)
       s.table("documents")
         .select(col("doc_id"), call_udf("simhash64", col("text")).as("sig"))
     },

@@ -102,8 +102,6 @@ object ConnectedComponents {
       prevCkpt.foreach(_.unpersist(blocking = false))
       prevCkpt = mine
       iter += 1
-      if (sys.env.contains("GRAFT_CC_DEBUG"))
-        System.err.println(s"[cc] round $iter done at ${System.nanoTime() / 1000000}ms converged=$converged")
     }
     ckptRdds(e0).foreach(_.unpersist(blocking = false))
     (labels, iter)

@@ -42,9 +42,12 @@ import org.apache.spark.sql.catalyst.rules.Rule
   * the same reasoning dynamic partition pruning applies to scans,
   * carried to the operator level.
   *
-  * Runs in `spark.experimental.extraOptimizations` (after the main
-  * batches): inserted filters reach FileSourceStrategy at physical
-  * planning, so they still become PushedFilters on V1 parquet scans.
+  * Injected into every session by Engine.session's extension, so it runs
+  * in the operator-optimization batches, before and after filter
+  * inference: an inserted filter is pushed down, merged and simplified
+  * like any other, reaches FileSourceStrategy at physical planning and
+  * becomes a PushedFilter on V1 parquet scans.
+  * `spark.sql.optimizer.excludedRules` switches it off.
   * Re-application is a fixpoint: predicates already present on the
   * target (semantic check) are never added twice.
   */

@@ -215,7 +215,6 @@ object AggQueries extends QueryModule {
       """SELECT array_to_string(list_sort(list_transform(map_entries(map_from_entries(
         |    array_agg({'k': c_custkey, 'v': c_name}))), e -> CAST(e.key AS VARCHAR) || '=' || e.value)), ',') AS kv
         |FROM customer WHERE c_custkey <= 20""".stripMargin) { (s, _) =>
-      graft.functions.FunctionRegistry.installAll(s)
       s.sql(
         """SELECT array_join(array_sort(transform(map_entries(map_agg(c_custkey, c_name)),
           |    e -> concat(CAST(e.key AS STRING), '=', e.value))), ',') AS kv
@@ -230,7 +229,6 @@ object AggQueries extends QueryModule {
         |FROM (SELECT l_returnflag || '-' || l_linestatus AS k,
         |        CAST(count(*) AS BIGINT) AS cnt
         |      FROM lineitem GROUP BY 1)""".stripMargin) { (s, _) =>
-      graft.functions.FunctionRegistry.installAll(s)
       s.sql(
         """SELECT array_join(array_sort(transform(map_entries(map_union(m)),
           |    e -> concat(e.key, '=', CAST(e.value AS STRING)))), ',') AS kv
@@ -253,7 +251,6 @@ object AggQueries extends QueryModule {
         |FROM (SELECT l_returnflag, l_quantity AS q, count(*) AS c
         |      FROM lineitem GROUP BY 1, 2)
         |GROUP BY l_returnflag""".stripMargin) { (s, _) =>
-      graft.functions.FunctionRegistry.installAll(s)
       s.sql(
         """SELECT l_returnflag,
           |  array_join(array_sort(transform(map_entries(numeric_histogram(60, l_quantity)),
@@ -272,7 +269,6 @@ object AggQueries extends QueryModule {
       // r8: the real histogram() aggregate (GenericMapAggs) replaces the
       // two-level group-by composition — one shuffle instead of two, and
       // the partial state is the value->count map itself.
-      graft.functions.FunctionRegistry.installAll(s)
       s.sql(
         """SELECT l_returnflag,
           |  array_join(array_sort(transform(map_entries(histogram(CAST(l_quantity AS INT))),
@@ -291,7 +287,6 @@ object AggQueries extends QueryModule {
       // the nation sub-grouping). element_at pulls each key's list back
       // out, proving key routing; sorted render keeps the compare
       // order-independent.
-      graft.functions.FunctionRegistry.installAll(s)
       s.sql(
         """SELECT c_mktsegment, nk, array_join(array_sort(element_at(mm, nk)), '|') AS members
           |FROM (SELECT c_mktsegment, multimap_agg(c_nationkey, c_name) AS mm
@@ -307,7 +302,6 @@ object AggQueries extends QueryModule {
     Q("agg_reduce",
       """SELECT l_returnflag, sum(l_quantity * l_quantity) AS sum_sq
         |FROM lineitem GROUP BY l_returnflag""".stripMargin) { (s, _) =>
-      graft.functions.FunctionRegistry.installAll(s)
       s.sql("SELECT l_returnflag, reduce_sumsq(l_quantity) AS sum_sq FROM lineitem GROUP BY l_returnflag")
     },
 

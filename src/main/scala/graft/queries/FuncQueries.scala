@@ -292,7 +292,6 @@ object FuncQueries extends QueryModule {
       """SELECT NULL AS bad_int, 42 AS good_int, NULL AS div0,
         |  NULL AS overflow_add, NULL AS bad_date,
         |  NULL AS try_div0, 7 AS try_ok, NULL AS try_overflow""".stripMargin) { (s, _) =>
-      graft.functions.FunctionRegistry.installAll(s)
       s.sql(
         """SELECT
           |  try_cast('abc' AS INT) AS bad_int,
@@ -311,7 +310,6 @@ object FuncQueries extends QueryModule {
       """SELECT 'https' AS proto, 'example.com' AS host, '/path/page' AS path,
         |  'q=spark-sql&lang=en' AS query, 'spark-sql' AS q_param,
         |  'a%20b%26c%3Dd' AS encoded, 'a b&c=d' AS decoded""".stripMargin) { (s, _) =>
-      graft.functions.FunctionRegistry.installAll(s)
       s.sql(
         """SELECT
           |  parse_url(u, 'PROTOCOL') AS proto,
@@ -354,7 +352,6 @@ object FuncQueries extends QueryModule {
         |  strftime(o_orderdate, '%d/%m/%Y %H:%M') AS dmy_hm,
         |  strptime('1997-05-13 14:30:00', '%Y-%m-%d %H:%M:%S') AS parsed
         |FROM orders WHERE o_orderkey <= 1000""".stripMargin) { (s, _) =>
-      graft.functions.FunctionRegistry.installAll(s)
       s.table("orders").filter(col("o_orderkey") <= 1000).select(col("o_orderkey"),
         call_udf("date_format_mysql", col("o_orderdate"), lit("%Y-%m-%d")).as("ymd"),
         call_udf("date_format_mysql", col("o_orderdate"), lit("%d/%m/%Y %H:%i")).as("dmy_hm"),
@@ -386,7 +383,6 @@ object FuncQueries extends QueryModule {
         |  upper(p_name) AS upped,
         |  regexp_replace(p_brand, '(\d+)', '<\1>', 'g') AS bracketed
         |FROM part WHERE p_partkey <= 200""".stripMargin) { (s, _) =>
-      graft.functions.FunctionRegistry.installAll(s)
       s.sql(
         """SELECT p_partkey,
           |  regexp_replace(p_name, '([a-z]+)', x -> upper(element_at(x, 1))) AS upped,
@@ -408,7 +404,6 @@ object FuncQueries extends QueryModule {
         |  '2' AS m_b,
         |  '9,5,1' AS sorted_desc
         |FROM lineitem WHERE l_orderkey <= 100""".stripMargin) { (s, _) =>
-      graft.functions.FunctionRegistry.installAll(s)
       // wilson_interval_lower/upper(successes, trials, z) —
       // WilsonInterval.java:33,41 — stated by its closed form with
       // successes = l_quantity of trials = 50, z = 1.96 (z² = 3.8416);
@@ -450,7 +445,6 @@ object FuncQueries extends QueryModule {
         |  'cat' AS stem_cats,
         |  'happi' AS stem_happy,
         |  'agree' AS stem_agreed""".stripMargin) { (s, _) =>
-      graft.functions.FunctionRegistry.installAll(s)
       s.sql(
         """SELECT
           |  lower(hex(hmac_sha256(encode('key', 'UTF-8'),
@@ -491,7 +485,6 @@ object FuncQueries extends QueryModule {
         |  isnan('nan'::DOUBLE) AS nan_isnan,
         |  'inf'::DOUBLE > 1e308 AS inf_big
         |FROM lineitem WHERE l_orderkey <= 50""".stripMargin) { (s, _) =>
-      graft.functions.FunctionRegistry.installAll(s)
       s.table("lineitem").filter(col("l_orderkey") <= 50).select(
         col("l_orderkey"), col("l_quantity"),
         round(call_udf("normal_cdf", lit(0.0), lit(1.0), lit(-1.96)), 9).as("ncdf_a"),
@@ -522,7 +515,6 @@ object FuncQueries extends QueryModule {
         |  '2' AS stm_b,
         |  '{"a":["1","2"],"b":["3"]}' AS multimap_json
         |FROM part WHERE p_partkey <= 200""".stripMargin) { (s, _) =>
-      graft.functions.FunctionRegistry.installAll(s)
       s.table("part").filter(col("p_partkey") <= 200).select(
         col("p_partkey"),
         call_udf("hamming_distance",
@@ -542,7 +534,6 @@ object FuncQueries extends QueryModule {
         |  -123456789 AS be64_rt,
         |  '00000001' AS be32_hex,
         |  -42 AS be32_rt""".stripMargin) { (s, _) =>
-      graft.functions.FunctionRegistry.installAll(s)
       s.sql(
         """SELECT
           |  lower(hex(to_big_endian_64(258L))) AS be64_hex,
@@ -565,7 +556,6 @@ object FuncQueries extends QueryModule {
         |  CAST(2411724 AS BIGINT) AS dsize_mb,
         |  CAST(100 AS BIGINT) AS dsize_plain
         |FROM orders WHERE o_orderkey <= 500""".stripMargin) { (s, _) =>
-      graft.functions.FunctionRegistry.installAll(s)
       s.table("orders").filter(col("o_orderkey") <= 500).select(
         col("o_orderkey"),
         call_udf("format_datetime", col("o_orderdate"), lit("yyyy-MM-dd HH:mm")).as("fd"),
@@ -594,7 +584,6 @@ object FuncQueries extends QueryModule {
         |  CAST(0 AS BIGINT) AS jsize_scalar,
         |  CAST(json_array_length(json_extract('{"xs":[1,2]}', '$.xs')) AS BIGINT) AS jsize_arr
         |FROM (SELECT doc_id FROM documents WHERE doc_id < 5) d""".stripMargin) { (s, _) =>
-      graft.functions.FunctionRegistry.installAll(s)
       s.table("documents").filter(col("doc_id") < 5).select(col("doc_id"))
         .selectExpr("doc_id",
           "json_array_length('[1,2,3,\"x\"]') AS jal",
@@ -620,7 +609,6 @@ object FuncQueries extends QueryModule {
         |                                 e -> e.key || '=' || CAST(e.value AS VARCHAR)), ',') AS entries_str,
         |  '{"a":["1","3"],"b":["2"]}' AS mmap
         |FROM part WHERE p_partkey <= 200""".stripMargin) { (s, _) =>
-      graft.functions.FunctionRegistry.installAll(s)
       s.table("part").filter(col("p_partkey") <= 200).selectExpr(
         "p_partkey",
         "array_join(array_remove(split(p_name, ' '), 'spring'), ' ') AS removed",
@@ -660,7 +648,6 @@ object FuncQueries extends QueryModule {
         |  CAST(-4 AS BIGINT) AS tzh_sum,
         |  CAST(45 AS BIGINT) AS tzm
         |FROM orders WHERE o_orderkey <= 500""".stripMargin) { (s, _) =>
-      graft.functions.FunctionRegistry.installAll(s)
       s.table("orders").filter(col("o_orderkey") <= 500).selectExpr(
         "o_orderkey",
         "CAST(extract(YEAROFWEEK FROM o_orderdate) AS BIGINT) AS yow",
@@ -686,7 +673,6 @@ object FuncQueries extends QueryModule {
         |  CAST(-0.5 AS DOUBLE) AS ieee32_rt,
         |  '01FBFF' AS hex_up,
         |  'abcdef' AS hex_rt""".stripMargin) { (s, _) =>
-      graft.functions.FunctionRegistry.installAll(s)
       s.sql(
         """SELECT
           |  to_base64url(X'01FBFF') AS b64u,
@@ -713,7 +699,6 @@ object FuncQueries extends QueryModule {
         |  CAST(instr(o_orderpriority, 'URGENT') AS BIGINT) AS td_index,
         |  '004100420043' AS td_hex
         |FROM orders WHERE o_orderkey <= 500""".stripMargin) { (s, _) =>
-      graft.functions.FunctionRegistry.installAll(s)
       s.sql(
         """SELECT o_orderkey,
           |  to_char(CAST(o_orderdate AS TIMESTAMP), 'yyyy/mm/dd') AS td_char,
@@ -741,7 +726,6 @@ object FuncQueries extends QueryModule {
         |    / (1 + (1.96 * 1.96) / 50.0) AS w_lo,
         |  CAST(0 AS BIGINT) AS empty_hll_card
         |FROM orders WHERE o_orderkey <= 300""".stripMargin) { (s, _) =>
-      graft.functions.FunctionRegistry.installAll(s)
       s.sql(
         """SELECT o_orderkey,
           |  to_hex(spooky_hash_v2_32(CAST('' AS BINARY))) AS sp32_empty,
@@ -789,7 +773,6 @@ object FuncQueries extends QueryModule {
         |  hi AS in_upper_half,
         |  true AS self_in_own_subnet
         |FROM fmt""".stripMargin) { (s, _) =>
-      graft.functions.FunctionRegistry.installAll(s)
       s.sql(
         """WITH ips AS (
           |  SELECT c_custkey,
@@ -911,7 +894,6 @@ object FuncQueries extends QueryModule {
         |  true AS roundtrip,
         |  strftime(wall, '%Y-%m-%d %H:%M:%S') || '.000 ' || zone AS rendered
         |FROM t""".stripMargin) { (s, _) =>
-      graft.functions.FunctionRegistry.installAll(s)
       s.table("supplier").selectExpr("s_suppkey",
           "timestampadd(HOUR, CAST(s_suppkey AS INT), TIMESTAMP'1995-01-01 00:00:00') AS wall",
           """CASE CAST(s_suppkey % 4 AS INT) WHEN 0 THEN 'UTC' WHEN 1 THEN 'Asia/Tokyo'

@@ -522,7 +522,6 @@ object GeoQueries extends QueryModule {
         |  AND nx.rn = CASE WHEN o.rn = o.cnt THEN 1 ELSE o.rn + 1 END
         |JOIN np ON np.g = o.g
         |GROUP BY o.g""".stripMargin) { (s, _) =>
-      graft.functions.FunctionRegistry.installAll(s)
       val g = (col("s_suppkey") % 8).as("g")
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy(col("s_suppkey") % 8).orderBy("s_suppkey")
@@ -564,7 +563,6 @@ object GeoQueries extends QueryModule {
         |        (s_suppkey * 29) % 35 + 2 AS cy,
         |        2 + s_suppkey % 3 AS r
         |      FROM supplier) t""".stripMargin) { (s, _) =>
-      graft.functions.FunctionRegistry.installAll(s)
       import graft.functions.WktGeometry
       val base = s.table("supplier").selectExpr("s_suppkey",
         "(s_suppkey * 13) % 35 + 2 AS cx",
@@ -638,7 +636,6 @@ object GeoQueries extends QueryModule {
         |        (s_suppkey * 13) % 40 AS cx, (s_suppkey * 29) % 40 AS cy,
         |        1 + s_suppkey % 3 AS r
         |      FROM supplier) t""".stripMargin) { (s, _) =>
-      graft.functions.FunctionRegistry.installAll(s)
       val base = s.table("supplier").selectExpr("s_suppkey",
         "(s_suppkey * 13) % 40 AS cx", "(s_suppkey * 29) % 40 AS cy",
         "1 + s_suppkey % 3 AS r")
@@ -689,7 +686,6 @@ object GeoQueries extends QueryModule {
         |  CAST(12 * r * r AS DOUBLE) AS frame_area,
         |  CAST(15 * r * r AS DOUBLE) AS holed_diff_area
         |FROM (SELECT s_suppkey, 1 + s_suppkey % 3 AS r FROM supplier) t""".stripMargin) { (s, _) =>
-      graft.functions.FunctionRegistry.installAll(s)
       val base = s.table("supplier").selectExpr("s_suppkey",
         "(s_suppkey * 13) % 40 AS cx", "(s_suppkey * 29) % 40 AS cy",
         "1 + s_suppkey % 3 AS r")
@@ -754,7 +750,6 @@ object GeoQueries extends QueryModule {
         |  CAST(5 * r * r AS DOUBLE) AS vertex_union,
         |  CAST(8 * r * r AS DOUBLE) AS half_union
         |FROM (SELECT s_suppkey, 1 + s_suppkey % 3 AS r FROM supplier) t""".stripMargin) { (s, _) =>
-      graft.functions.FunctionRegistry.installAll(s)
       val base = s.table("supplier").selectExpr("s_suppkey",
         "(s_suppkey * 17) % 40 AS cx", "(s_suppkey * 31) % 40 AS cy",
         "1 + s_suppkey % 3 AS r")
@@ -794,7 +789,6 @@ object GeoQueries extends QueryModule {
         |       WHEN 1 THEN 'Self-intersection between ring edges 0 and 2'
         |       ELSE 'Degenerate ring: zero area' END AS reason
         |FROM supplier""".stripMargin) { (s, _) =>
-      graft.functions.FunctionRegistry.installAll(s)
       val cx = col("s_suppkey") * 7 % 50
       val cy = col("s_suppkey") * 11 % 50
       val diamond = concat(lit("POLYGON (("), cx + 2, lit(" "), cy, lit(", "),

@@ -41,7 +41,6 @@ object MlQueries extends QueryModule {
         |       CAST(count(*) AS BIGINT) AS n_correct,
         |       concat('Accuracy: ', count(*), '/', count(*), ' (100.00%)') AS summary
         |FROM lab""".stripMargin) { (s, _) =>
-      graft.functions.FunctionRegistry.installAll(s)
       val lab = s.table("customer")
         .selectExpr(Seq("c_custkey") ++ featSql: _*)
         .filter(expr("abs(2*x1 + 3*x2 - 25) > 0.95"))
@@ -64,7 +63,6 @@ object MlQueries extends QueryModule {
         |SELECT CAST(count(*) AS BIGINT) AS n_total,
         |       CAST(0 AS DOUBLE) AS max_err
         |FROM pts""".stripMargin) { (s, _) =>
-      graft.functions.FunctionRegistry.installAll(s)
       val pts = s.table("customer")
         .selectExpr(Seq("c_custkey") ++ featSql: _*)
         .withColumn("y", expr("1 + 2*x1 + 3*x2"))
@@ -91,7 +89,6 @@ object MlQueries extends QueryModule {
         |SELECT CAST(count(*) AS BIGINT) AS n_total,
         |       CAST(count(*) AS BIGINT) AS n_correct
         |FROM pts""".stripMargin) { (s, _) =>
-      graft.functions.FunctionRegistry.installAll(s)
       val pts = s.table("customer").selectExpr(
         "c_custkey", "c_custkey % 3 AS label",
         "CAST(c_custkey % 3 = 1 AS INT) * 10 + ((c_custkey * 7) % 30) / 20.0 AS x1",
@@ -127,7 +124,6 @@ object MlQueries extends QueryModule {
         |       true AS rbf_all_correct,
         |       true AS linear_imperfect
         |FROM lab""".stripMargin) { (s, _) =>
-      graft.functions.FunctionRegistry.installAll(s)
       val lab = s.table("customer")
         .selectExpr(
           "((c_custkey * 7919) % 201 - 100) / 100.0 AS x1",
@@ -159,7 +155,6 @@ object MlQueries extends QueryModule {
         |SELECT CAST(count(*) AS BIGINT) AS n_total,
         |       CAST(0 AS DOUBLE) AS max_err
         |FROM pts""".stripMargin) { (s, _) =>
-      graft.functions.FunctionRegistry.installAll(s)
       val pts = s.table("customer")
         .selectExpr(
           "((c_custkey * 7) % 100) / 10.0 AS x1",
@@ -193,7 +188,6 @@ object MlQueries extends QueryModule {
         |       true AS sigmoid_strong,
         |       true AS poly2_imperfect
         |FROM lab""".stripMargin) { (s, _) =>
-      graft.functions.FunctionRegistry.installAll(s)
       val lab = s.table("customer")
         .selectExpr("((c_custkey * 7919) % 401 - 200) / 100.0 AS x")
         .filter(expr("abs(x*x*x - x) > 0.1"))

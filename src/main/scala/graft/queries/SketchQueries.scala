@@ -46,7 +46,6 @@ object SketchQueries extends QueryModule {
     Q("sketch_hll_merge",
       """SELECT true AS accuracy_ok, true AS merge_consistent""".stripMargin) { (s, _) =>
       import s.implicits._
-      graft.functions.FunctionRegistry.installAll(s)
       val global = s.sql(
         "SELECT hll_cardinality(approx_set(l_partkey)) AS est FROM lineitem").head().getLong(0)
       val merged = s.sql(
@@ -57,7 +56,6 @@ object SketchQueries extends QueryModule {
       Seq((math.abs(global - exact).toDouble / exact < 0.05, global == merged))
         .toDF("accuracy_ok", "merge_consistent")
     }.withBench { (s, _) =>
-      graft.functions.FunctionRegistry.installAll(s)
       s.sql(
         """SELECT hll_cardinality(merge_hll(sk)) AS est FROM
           |  (SELECT approx_set(l_partkey) AS sk FROM lineitem GROUP BY l_returnflag)""".stripMargin)
@@ -68,7 +66,6 @@ object SketchQueries extends QueryModule {
     Q("sketch_setdigest_jaccard",
       """SELECT true AS jaccard_ok""".stripMargin) { (s, _) =>
       import s.implicits._
-      graft.functions.FunctionRegistry.installAll(s)
       val est = s.sql(
         """SELECT jaccard_index(
           |  (SELECT make_set_digest(l_partkey) FROM lineitem WHERE l_quantity < 25),
@@ -81,7 +78,6 @@ object SketchQueries extends QueryModule {
         .head().getDouble(0)
       Seq(math.abs(est - exact) < 0.15).toDF("jaccard_ok")
     }.withBench { (s, _) =>
-      graft.functions.FunctionRegistry.installAll(s)
       s.sql(
         """SELECT jaccard_index(
           |  (SELECT make_set_digest(l_partkey) FROM lineitem WHERE l_quantity < 25),
@@ -97,7 +93,6 @@ object SketchQueries extends QueryModule {
       """SELECT true AS exact_inter_ok, true AS exact_card_ok,
         |  true AS hash_counts_ok, true AS kmv_ok""".stripMargin) { (s, _) =>
       import s.implicits._
-      graft.functions.FunctionRegistry.installAll(s)
       val r = s.sql(
         """WITH dc AS (SELECT make_set_digest(c_nationkey) AS dg FROM customer),
           |     dn AS (SELECT make_set_digest(n_nationkey) AS dg FROM nation WHERE n_nationkey < 10),
@@ -122,7 +117,6 @@ object SketchQueries extends QueryModule {
         math.abs(r.getLong(3).toDouble - exactParts) / exactParts < 0.15))
         .toDF("exact_inter_ok", "exact_card_ok", "hash_counts_ok", "kmv_ok")
     }.withBench { (s, _) =>
-      graft.functions.FunctionRegistry.installAll(s)
       s.sql(
         """SELECT
           |  intersection_cardinality(
@@ -158,7 +152,6 @@ object SketchQueries extends QueryModule {
     Q("sketch_qdigest",
       """SELECT true AS p50_ok, true AS p90_ok""".stripMargin) { (s, _) =>
       import s.implicits._
-      graft.functions.FunctionRegistry.installAll(s)
       val merged = s.sql(
         """SELECT qdigest_value_at(qdigest_agg(l_extendedprice), 0.5) AS q50,
           |       qdigest_value_at(qdigest_agg(l_extendedprice), 0.9) AS q90
@@ -169,7 +162,6 @@ object SketchQueries extends QueryModule {
       Seq((ok(merged.getDouble(0), exact.getDouble(0)), ok(merged.getDouble(1), exact.getDouble(1))))
         .toDF("p50_ok", "p90_ok")
     }.withBench { (s, _) =>
-      graft.functions.FunctionRegistry.installAll(s)
       s.sql(
         """SELECT qdigest_value_at(qdigest_agg(l_extendedprice), 0.5) AS q50,
           |       qdigest_value_at(qdigest_agg(l_extendedprice), 0.9) AS q90
@@ -182,7 +174,6 @@ object SketchQueries extends QueryModule {
     Q("sketch_heavy_hitters",
       """SELECT true AS contains_all_heavy, true AS bounded""".stripMargin) { (s, _) =>
       import s.implicits._
-      graft.functions.FunctionRegistry.installAll(s)
       val k = 50
       val words = s.table("documents")
         .select(explode(split(col("text"), " ")).as("w")).filter(col("w") =!= "")
@@ -196,7 +187,6 @@ object SketchQueries extends QueryModule {
       Seq((exactHeavy.subsetOf(keys), keys.size <= k - 1))
         .toDF("contains_all_heavy", "bounded")
     }.withBench { (s, _) =>
-      graft.functions.FunctionRegistry.installAll(s)
       s.table("documents")
         .select(explode(split(col("text"), " ")).as("w")).filter(col("w") =!= "")
         .createOrReplaceTempView("graft_words_bench")
@@ -210,7 +200,6 @@ object SketchQueries extends QueryModule {
     Q("sketch_checksum",
       """SELECT true AS order_independent, true AS change_sensitive""".stripMargin) { (s, _) =>
       import s.implicits._
-      graft.functions.FunctionRegistry.installAll(s)
       s.table("lineitem").orderBy(col("l_extendedprice").desc)
         .createOrReplaceTempView("lineitem_reordered")
       val a = s.sql("SELECT checksum(l_orderkey * 31 + l_linenumber) AS c FROM lineitem")
@@ -221,7 +210,6 @@ object SketchQueries extends QueryModule {
         .head().getLong(0)
       Seq((a == b, a != c)).toDF("order_independent", "change_sensitive")
     }.withBench { (s, _) =>
-      graft.functions.FunctionRegistry.installAll(s)
       s.sql("SELECT checksum(l_orderkey * 31 + l_linenumber) AS c FROM lineitem")
     },
 
@@ -231,7 +219,6 @@ object SketchQueries extends QueryModule {
     Q("sketch_values_at_quantiles",
       """SELECT true AS q25_ok, true AS q50_ok, true AS q75_ok""".stripMargin) { (s, _) =>
       import s.implicits._
-      graft.functions.FunctionRegistry.installAll(s)
       val vs = s.sql(
         """SELECT values_at_quantiles(qdigest_agg(l_extendedprice),
           |                           array(0.25D, 0.5D, 0.75D)) AS vs
@@ -242,7 +229,6 @@ object SketchQueries extends QueryModule {
       def ok(i: Int) = math.abs(vs(i) - exact.getDouble(i)) / exact.getDouble(i) < 0.02
       Seq((ok(0), ok(1), ok(2))).toDF("q25_ok", "q50_ok", "q75_ok")
     }.withBench { (s, _) =>
-      graft.functions.FunctionRegistry.installAll(s)
       s.sql(
         """SELECT values_at_quantiles(qdigest_agg(l_extendedprice),
           |                           array(0.25D, 0.5D, 0.75D)) AS vs
@@ -259,7 +245,6 @@ object SketchQueries extends QueryModule {
     Q("sketch_qdigest_merge",
       """SELECT true AS q50_ok, true AS q90_ok, true AS arr_ok""".stripMargin) { (s, _) =>
       import s.implicits._
-      graft.functions.FunctionRegistry.installAll(s)
       val merged = s.sql(
         """WITH per AS (SELECT l_suppkey, qdigest_agg(l_extendedprice) AS d
           |             FROM lineitem GROUP BY l_suppkey)
@@ -277,7 +262,6 @@ object SketchQueries extends QueryModule {
         ok(arr(0), exact.getDouble(0)) && ok(arr(1), exact.getDouble(1))))
         .toDF("q50_ok", "q90_ok", "arr_ok")
     }.withBench { (s, _) =>
-      graft.functions.FunctionRegistry.installAll(s)
       s.sql(
         """WITH per AS (SELECT l_suppkey, qdigest_agg(l_extendedprice) AS d
           |             FROM lineitem GROUP BY l_suppkey)
@@ -292,7 +276,6 @@ object SketchQueries extends QueryModule {
     // direct whole-table digest bit-for-bit: jaccard == 1.0.
     Q("sketch_setdigest_merge",
       """SELECT CAST(1.0 AS DOUBLE) AS merged_vs_direct""".stripMargin) { (s, _) =>
-      graft.functions.FunctionRegistry.installAll(s)
       s.sql(
         """WITH per AS (SELECT l_suppkey, make_set_digest(l_partkey) AS d
           |             FROM lineitem GROUP BY l_suppkey)

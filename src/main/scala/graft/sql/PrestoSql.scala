@@ -3,9 +3,10 @@ package graft.sql
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import scala.util.matching.Regex
 
-/** Thin Presto-dialect SQL front door (SURVEY §7.0 graft.sql): installs
-  * the Presto-named function aliases and applies light textual rewrites
-  * for constructs whose syntax differs, then delegates to spark.sql (the
+/** Thin Presto-dialect SQL front door (SURVEY §7.0 graft.sql): applies
+  * light textual rewrites for constructs whose syntax differs (the
+  * Presto-named function aliases come with every session Engine.session
+  * builds), then delegates to spark.sql (the
   * real parser/analyzer/optimizer — we do NOT rebuild those layers).
   *
   * Handled dialect deltas (reference: presto-docs functions + SqlBase.g4):
@@ -1194,7 +1195,6 @@ object PrestoSql {
   }
 
   private def sqlImpl(spark: SparkSession, text: String): DataFrame = {
-    graft.functions.FunctionRegistry.installAll(spark)
     import spark.implicits._
     text match {
       case explainAnalyzeRe(query) =>

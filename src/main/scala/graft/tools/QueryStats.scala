@@ -55,31 +55,27 @@ object QueryStats {
     df.observe(ObsPrefix + query + ":" + obsSeq.incrementAndGet(), metric, more: _*)
   }
 
-  private val listenerInstalled =
-    java.util.Collections.synchronizedMap(
-      new java.util.WeakHashMap[org.apache.spark.sql.SparkSession, java.lang.Boolean]())
-
-  def installListener(spark: org.apache.spark.sql.SparkSession): Unit = {
-    if (listenerInstalled.put(spark, java.lang.Boolean.TRUE) == null) {
-      spark.listenerManager.register(new org.apache.spark.sql.util.QueryExecutionListener {
-        override def onSuccess(funcName: String,
-            qe: org.apache.spark.sql.execution.QueryExecution, durationNs: Long): Unit = {
-          qe.observedMetrics.foreach { case (name, row) =>
-            if (name.startsWith(ObsPrefix)) {
-              val query = name.drop(ObsPrefix.length).split(":")(0)
-              row.schema.fields.zipWithIndex.foreach { case (f, i) =>
-                if (!row.isNullAt(i)) row.get(i) match {
-                  case l: Long => record(query, f.name, l)
-                  case i2: Int => record(query, f.name, i2.toLong)
-                  case _ => ()
-                }
-              }
+  /** Routes every `qstats:`-prefixed observation into the registry.
+    * [[graft.engine.Engine.session]] names this class in
+    * `spark.sql.queryExecutionListeners`, so Spark registers one per
+    * session. */
+  class Listener extends org.apache.spark.sql.util.QueryExecutionListener {
+    override def onSuccess(funcName: String,
+        qe: org.apache.spark.sql.execution.QueryExecution, durationNs: Long): Unit = {
+      qe.observedMetrics.foreach { case (name, row) =>
+        if (name.startsWith(ObsPrefix)) {
+          val query = name.drop(ObsPrefix.length).split(":")(0)
+          row.schema.fields.zipWithIndex.foreach { case (f, i) =>
+            if (!row.isNullAt(i)) row.get(i) match {
+              case l: Long => record(query, f.name, l)
+              case i2: Int => record(query, f.name, i2.toLong)
+              case _ => ()
             }
           }
         }
-        override def onFailure(funcName: String,
-            qe: org.apache.spark.sql.execution.QueryExecution, ex: Exception): Unit = ()
-      })
+      }
     }
+    override def onFailure(funcName: String,
+        qe: org.apache.spark.sql.execution.QueryExecution, ex: Exception): Unit = ()
   }
 }

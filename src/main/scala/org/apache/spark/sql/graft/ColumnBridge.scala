@@ -4,9 +4,13 @@
 package org.apache.spark.sql.graft
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.analysis.FunctionRegistry.FunctionBuilder
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.{ExpressionUtils, UserDefinedFunctionUtils}
-import org.apache.spark.sql.expressions.{SparkUserDefinedFunction, UserDefinedFunction}
+import org.apache.spark.sql.errors.QueryCompilationErrors
+import org.apache.spark.sql.execution.aggregate.ScalaAggregator
+import org.apache.spark.sql.expressions.{SparkUserDefinedFunction, UserDefinedAggregator,
+  UserDefinedFunction}
 
 object ColumnBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
@@ -17,4 +21,19 @@ object ColumnBridge {
     * in a lazily-resolved node that FunctionBuilder lambdas can't return). */
   def applyUdf(u: UserDefinedFunction, args: Seq[Expression]): Expression =
     UserDefinedFunctionUtils.toScalaUDF(u.asInstanceOf[SparkUserDefinedFunction], args.toSeq)
+
+  /** The builder Spark's UDF registration installs for `u` under `name`,
+    * without a session: `u` named `name`, so an unaliased call's output column
+    * reads `name(x)`, not `UDF(x)`. A UDAF becomes a ScalaAggregator (the
+    * Column-level apply fails analysis in a window); a scalar UDF checks
+    * its argument count first. */
+  def udfBuilder(name: String, u: UserDefinedFunction): FunctionBuilder = u.withName(name) match {
+    case agg: UserDefinedAggregator[_, _, _] => children => ScalaAggregator(agg, children)
+    case f: SparkUserDefinedFunction =>
+      val arity = f.inputEncoders.size
+      children =>
+        if (children.length != arity)
+          throw QueryCompilationErrors.wrongNumArgsError(name, Seq(arity.toString), children.length)
+        UserDefinedFunctionUtils.toScalaUDF(f, children)
+  }
 }

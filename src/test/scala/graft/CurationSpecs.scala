@@ -308,7 +308,6 @@ class CurationSpecs extends AnyFunSuite with BeforeAndAfterAll {
   test("blocklist: Aho-Corasick counts every start position, incl. overlaps and nested patterns") {
     val s = spark
     import s.implicits._
-    graft.functions.FunctionRegistry.installAll(spark)
     val pats = Seq("scan slow", "slow filter", "table", "table table")
     val patLit = array(pats.map(lit): _*)
     val fixture = Seq(
@@ -360,7 +359,6 @@ class CurationSpecs extends AnyFunSuite with BeforeAndAfterAll {
   test("char entropy: closed-form values on planted strings; map-only corpus plan") {
     val s = spark
     import s.implicits._
-    graft.functions.FunctionRegistry.installAll(spark)
     val fx = Seq("aaaa", "abcd", "aabbbc").toDF("text")
       .select(round(call_udf("char_stats", col("text")).getField("entropy"), 6).as("e"),
         call_udf("char_stats", col("text")).getField("distinct_chars").as("d"))

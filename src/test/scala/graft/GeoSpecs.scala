@@ -249,7 +249,6 @@ class GeoSpecs extends AnyFunSuite with BeforeAndAfterAll {
 
   test("convex_hull_agg is partitioning-invariant end to end") {
     graft.engine.Engine.registerTables(spark, "/root/testdata/sf0.001")
-    graft.functions.FunctionRegistry.installAll(spark)
     val q = graft.queries.GeoQueries.queries.find(_.name == "agg_convex_hull").get
     val base = q.build(spark, "/root/testdata/sf0.001")
       .collect().map(_.toString).sorted.toSeq
@@ -377,7 +376,6 @@ class GeoSpecs extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("SQL front door: great_circle_distance + bing tile scalars registered") {
-    graft.functions.FunctionRegistry.installAll(spark)
     val d = spark.sql(
       "SELECT great_circle_distance(36.12, -86.67, 33.94, -118.40)").head().getDouble(0)
     assert(math.abs(d - 2886.448973436703) < 1e-9)
@@ -716,7 +714,6 @@ class GeoSpecs extends AnyFunSuite with BeforeAndAfterAll {
     assert(absAreas(ExactOverlay.run(OpUnion, sq, off)) ==
       absAreas(graft.functions.PolygonClip.union(sq, off)))
     // end to end: the UDFs route degenerate input through the exact path
-    graft.functions.FunctionRegistry.installAll(spark)
     val r = spark.range(1).selectExpr(
       "st_wkt_area(st_union('POLYGON ((0 0, 2 0, 2 2, 0 2, 0 0))', " +
         "'POLYGON ((2 0, 4 0, 4 2, 2 2, 2 0))')) AS a").head().getDouble(0)

@@ -15,7 +15,6 @@ class PrestoNamesSpecs extends AnyFunSuite with BeforeAndAfterAll {
 
   override def beforeAll(): Unit = {
     spark = graft.engine.Engine.session("local[2]", shufflePartitions = 2)
-    graft.functions.FunctionRegistry.installAll(spark)
   }
 
   override def afterAll(): Unit = if (spark != null) spark.stop()

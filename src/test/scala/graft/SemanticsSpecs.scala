@@ -73,7 +73,6 @@ class SemanticsSpecs extends AnyFunSuite with BeforeAndAfterAll {
     // silently de-compiling the whole stage to interpreted.
     val strict = spark.newSession()
     strict.conf.set("spark.sql.codegen.fallback", "false")
-    graft.functions.FunctionRegistry.installAll(strict)
     import strict.implicits._
     // through parquet: a local Seq relation would be constant-collapsed
     // by ConvertToLocalRelation and never reach generated code
@@ -238,7 +237,6 @@ class SemanticsSpecs extends AnyFunSuite with BeforeAndAfterAll {
     assert(one(s"SELECT reverse('a${clef}b')").toString == s"b${clef}a")
     assert(one(s"SELECT octet_length(encode('$clef', 'UTF-8'))") == 4)
     // codepoint() (Presto name, registered alias) returns the scalar value
-    graft.functions.FunctionRegistry.installAll(spark)
     assert(one("SELECT codepoint('A')") == 65)
   }
 }

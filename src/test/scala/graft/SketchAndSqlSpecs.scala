@@ -73,7 +73,6 @@ class SketchAndSqlSpecs extends AnyFunSuite {
       "SELECT 'x AT TIME ZONE y' AS s FROM t")
     // end-to-end through the front door: Tokyo wall clock of a UTC instant
     val spark = graft.engine.Engine.session("local[2]", shufflePartitions = 2)
-    graft.functions.FunctionRegistry.installAll(spark)
     // at_timezone renders ISO_OFFSET_DATE_TIME in the target zone
     val r = PrestoSql.sql(spark,
       "SELECT TIMESTAMP '2020-01-01 00:00:00' AT TIME ZONE 'Asia/Tokyo' AS t")
@@ -124,7 +123,6 @@ class SketchAndSqlSpecs extends AnyFunSuite {
       "SELECT 'a[1]' AS s, x FROM t")
     // end to end: Presto 1-based indexing through the front door
     val spark = graft.engine.Engine.session("local[2]", shufflePartitions = 2)
-    graft.functions.FunctionRegistry.installAll(spark)
     assert(PrestoSql.sql(spark, "SELECT ARRAY[7, 8, 9][1] AS v").head().getInt(0) == 7)
     assert(PrestoSql.sql(spark,
       "SELECT map_from_arrays(ARRAY['a', 'b'], ARRAY[1, 2])['b'] AS v").head().getInt(0) == 2)
@@ -161,7 +159,6 @@ class SketchAndSqlSpecs extends AnyFunSuite {
       "SELECT TIMESTAMP '2020-01-01 00:00:00'")
     // end to end: the carried zone reads back out of the packed value
     val spark = graft.engine.Engine.session("local[2]", shufflePartitions = 2)
-    graft.functions.FunctionRegistry.installAll(spark)
     val r = PrestoSql.sql(spark,
       "SELECT tz_zone(TIMESTAMP '2020-06-01 12:00:00 Asia/Tokyo') AS z, " +
         "tz_timezone_hour(TIMESTAMP '2020-06-01 12:00:00 Asia/Tokyo') AS h").head()
@@ -182,7 +179,6 @@ class SketchAndSqlSpecs extends AnyFunSuite {
       "SELECT 'AS ARRAY(x)' AS s FROM t")
     // end to end through the front door
     val spark = graft.engine.Engine.session("local[2]", shufflePartitions = 2)
-    graft.functions.FunctionRegistry.installAll(spark)
     val r = PrestoSql.sql(spark,
       "SELECT CAST(ARRAY[1, 2] AS ARRAY(VARCHAR))[2] AS v").head()
     assert(r.getString(0) == "2")
@@ -195,7 +191,6 @@ class SketchAndSqlSpecs extends AnyFunSuite {
     assert(PrestoSql.rewriteFull("SELECT 'LIMIT ALL' AS s FROM t") ==
       "SELECT 'LIMIT ALL' AS s FROM t")
     val spark = graft.engine.Engine.session("local[2]", shufflePartitions = 2)
-    graft.functions.FunctionRegistry.installAll(spark)
     val r = PrestoSql.sql(spark, "SELECT ROW(1, 'a').col2 AS f").head()
     assert(r.getString(0) == "a")
     assert(PrestoSql.sql(spark, "SELECT 42 AS v LIMIT ALL").head().getInt(0) == 42)
@@ -336,13 +331,18 @@ class SketchAndSqlSpecs extends AnyFunSuite {
       val card = spark.sql(
         "SELECT length(approx_set(x)) AS l FROM VALUES (1), (2), (3) AS t(x)").head().getInt(0)
       assert(card == graft.functions.Hll.M)
+      // a UDF-backed name and a UDAF come through the same injection
+      val upper = spark.sql("SELECT wilson_interval_upper(3, 10, 1.96D) AS u").head().getDouble(0)
+      assert(math.abs(upper - 0.6032267800204347) < 1e-12)
+      val sumsq = spark.sql(
+        "SELECT reduce_sumsq(x) AS s FROM VALUES (1.0D), (2.0D), (3.0D) AS t(x)").head().getDouble(0)
+      assert(sumsq == 14.0)
     } finally spark.stop()
   }
 
   test("multimap_from_entries preserves key first-appearance and value entry order") {
     val spark = graft.engine.Engine.session("local[2]", shufflePartitions = 2)
     try {
-      graft.functions.FunctionRegistry.installAll(spark)
       val json = spark.sql(
         """SELECT to_json(multimap_from_entries(
           |  array(struct('b','1'), struct('a','2'), struct('b','3')))) AS m""".stripMargin)
@@ -354,7 +354,6 @@ class SketchAndSqlSpecs extends AnyFunSuite {
   test("merge_set_digest of partitioned digests equals the direct digest") {
     val spark = graft.engine.Engine.session("local[2]", shufflePartitions = 2)
     try {
-      graft.functions.FunctionRegistry.installAll(spark)
       spark.range(0, 10000).selectExpr("id", "id % 7 AS g")
         .createOrReplaceTempView("sdm_t")
       val j = spark.sql(
@@ -369,7 +368,6 @@ class SketchAndSqlSpecs extends AnyFunSuite {
   test("values_at_quantiles matches per-quantile extraction on one sketch") {
     val spark = graft.engine.Engine.session("local[2]", shufflePartitions = 2)
     try {
-      graft.functions.FunctionRegistry.installAll(spark)
       spark.range(0, 50000).selectExpr("CAST(id AS DOUBLE) AS x")
         .createOrReplaceTempView("vaq_t")
       val r = spark.sql(
@@ -404,7 +402,6 @@ class SketchAndSqlSpecs extends AnyFunSuite {
 
   test("approx_most_frequent: Presto signature (buckets, value, capacity) maps onto Misra-Gries") {
     val spark = graft.engine.Engine.session("local[2]", shufflePartitions = 2)
-    graft.functions.FunctionRegistry.installAll(spark)
     import spark.implicits._
     (1 to 100).map(i => if (i <= 60) "a" else if (i <= 90) "b" else s"c$i")
       .toDF("v").createOrReplaceTempView("amf_t")

@@ -48,13 +48,19 @@ def normalize(cols, rows):
     return [cols[i] for i in order], out
 
 
-def main():
-    sf_dir, out_dir = sys.argv[1], sys.argv[2]
+def connect(sf_dir):
+    """DuckDB with every fixture table under sf_dir as a view."""
     con = duckdb.connect()
     for t in TABLES:
         p = f"{sf_dir}/{t}.parquet"
         if os.path.exists(p):
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
+    return con
+
+
+def main():
+    sf_dir, out_dir = sys.argv[1], sys.argv[2]
+    con = connect(sf_dir)
     oracles = json.load(open(f"{out_dir}/oracle_sql.json"))
     n_pass = n_fail = n_rowsonly = 0
     for name in sorted(os.listdir(out_dir)):

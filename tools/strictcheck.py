@@ -4,17 +4,17 @@ closely than tools/check.py: reads the Spark result with pandas/pyarrow,
 runs the oracle in DuckDB via .df(), sorts columns by name, sorts rows
 by all columns (crashes on ndarray columns exactly like the driver),
 and compares cells at FULL float precision (repr), not 12 sig digits.
+The oracle runs on one DuckDB thread: at full precision a parallel float
+sum differs from run to run, so two runs over one dump would not agree.
 
 Usage: python3 tools/strictcheck.py <sfDir> <verifyOutDir> [query ...]
 """
 import sys, os, json, glob, math
 
-import duckdb
 import pandas as pd
 import numpy as np
 
-TABLES = ["region", "nation", "customer", "supplier", "part",
-          "orders", "lineitem", "events", "documents", "embeddings"]
+from check import connect
 
 
 def cell(v):
@@ -42,11 +42,8 @@ def frame(df):
 def main():
     sf_dir, out_dir = sys.argv[1], sys.argv[2]
     only = set(sys.argv[3:])
-    con = duckdb.connect()
-    for t in TABLES:
-        p = f"{sf_dir}/{t}.parquet"
-        if os.path.exists(p):
-            con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
+    con = connect(sf_dir)
+    con.execute("SET threads TO 1")
     oracles = json.load(open(f"{out_dir}/oracle_sql.json"))
     n_pass = n_fail = 0
     for name in sorted(os.listdir(out_dir)):
