@@ -117,6 +117,13 @@ object Bench {
 
   private def r3(v: Double): String = "%.3f".formatLocal(java.util.Locale.ROOT, v)
 
+  /** The host a run measured, as JSON fields: the cores the master uses,
+    * the processors the JVM sees, its heap limit, JDK and Spark versions. */
+  private def hostJson: String =
+    s""""cpus":${graft.engine.Engine.cores},"nproc":${Runtime.getRuntime.availableProcessors},""" +
+      s""""max_heap_mb":${Runtime.getRuntime.maxMemory / (1024 * 1024)},""" +
+      s""""java_version":"${System.getProperty("java.version")}","spark_version":"${org.apache.spark.SPARK_VERSION}""""
+
   def main(args: Array[String]): Unit =
     sys.env.get("SPARK_GRAFT_BENCH_ISOLATED") match {
       case Some(names) => isolatedChild(names.split(",").filter(_.nonEmpty).toSeq)
@@ -343,7 +350,7 @@ object Bench {
     }.mkString("{", ",", "}")
     val inflatedJson = inflated.toSeq.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")
     val full =
-      s"""{"metric":"total","value":${r3(wallTotal)},"cpu":${r3(cpuTotal)},"unit":"sec","n_queries":${results.size},"steal_pct":${r3(runStealPct)},"methodology":"min-of-2 wall per query, second pass after full suite; cpu = executorCpuTime of the min run; steal_pct = percent (0-100) of host /proc/stat jiffies stolen during the window, same unit per-query and total; gc_ms = driver-JVM STW GC ms inside the window; compiles/compile_ms = generated classes Janino compiled inside the window and the ms it took (a compiled-class cache hit is not counted); 10 slowest re-timed as isolated in a FORKED fresh JVM at isolated_xmx_mb (warm pass + min-of-2), plus every query whose wall is >2x its previous committed BENCH_FULL wall (listed in retimed_inflated)","isolated_forked":${forked.isDefined},"isolated_xmx_mb":$isolatedXmxMb,"retimed_inflated":$inflatedJson,"queries":$fullQs,"failures":$failures,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${r3(wallTotal)},"cpu":${r3(cpuTotal)},"unit":"sec","n_queries":${results.size},"steal_pct":${r3(runStealPct)},$hostJson,"methodology":"min-of-2 wall per query, second pass after full suite; cpu = executorCpuTime of the min run; steal_pct = percent (0-100) of host /proc/stat jiffies stolen during the window, same unit per-query and total; gc_ms = driver-JVM STW GC ms inside the window; compiles/compile_ms = generated classes Janino compiled inside the window and the ms it took (a compiled-class cache hit is not counted); 10 slowest re-timed as isolated in a FORKED fresh JVM at isolated_xmx_mb (warm pass + min-of-2), plus every query whose wall is >2x its previous committed BENCH_FULL wall (listed in retimed_inflated)","isolated_forked":${forked.isDefined},"isolated_xmx_mb":$isolatedXmxMb,"retimed_inflated":$inflatedJson,"queries":$fullQs,"failures":$failures,"sf":"$sfDir"}"""
     java.nio.file.Files.write(java.nio.file.Paths.get("BENCH_FULL.json"),
       full.getBytes(java.nio.charset.StandardCharsets.UTF_8))
 
@@ -358,7 +365,7 @@ object Bench {
     // The driver parses the LAST line of captured stdout: Spark is already
     // stopped (before the fork), so nothing can log after the JSON. Print
     // last, flush, and exit without further output.
-    println(s"""{"metric":"total","value":${r3(wallTotal)},"cpu":${r3(cpuTotal)},"unit":"sec","n_queries":${results.size},"steal_pct":${r3(runStealPct)},"queries":$qs,"failures":$failures,"sf":"$sfDir","detail":"BENCH_FULL.json"}""")
+    println(s"""{"metric":"total","value":${r3(wallTotal)},"cpu":${r3(cpuTotal)},"unit":"sec","n_queries":${results.size},"steal_pct":${r3(runStealPct)},$hostJson,"queries":$qs,"failures":$failures,"sf":"$sfDir","detail":"BENCH_FULL.json"}""")
     System.out.flush()
   }
 }

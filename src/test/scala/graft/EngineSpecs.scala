@@ -209,6 +209,134 @@ class EngineSpecs extends AnyFunSuite with BeforeAndAfterAll {
     assert(warm * 20 <= cold, s"the second pass compiled $warm classes against $cold in the first")
   }
 
+  // ---- keyed statements compile once per shape (BindComparisonLiterals) ----
+
+  private def compiled(body: => Unit): Long = {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    body
+    CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0
+  }
+
+  private def drain(text: String): Unit =
+    graft.sql.PrestoSql.sql(spark, text).toLocalIterator().forEachRemaining(_ => ())
+
+  private lazy val orderKeys: IndexedSeq[Long] =
+    spark.sql("SELECT o_orderkey FROM orders ORDER BY 1").collect().map(_.getLong(0)).toIndexedSeq
+
+  // ingest_mixed's keyed statements (perfbench/workloads.py)
+  private def ordersByKey(k: Long): String =
+    "SELECT o_orderkey, o_custkey, o_orderstatus, o_totalprice, o_orderdate " +
+      s"FROM orders WHERE o_orderkey = $k"
+  private def nationJoinAgg(k: Int): String =
+    "SELECT n_name, count(*) AS customers, sum(c_acctbal) AS balance " +
+      s"FROM customer JOIN nation ON c_nationkey = n_nationkey WHERE n_nationkey = $k GROUP BY n_name"
+  private def insertBatch(lo: Long, hi: Long): String =
+    "SELECT l_orderkey, l_partkey, l_suppkey, l_linenumber, l_quantity, l_extendedprice, " +
+      s"l_discount, l_shipdate FROM lineitem WHERE l_orderkey BETWEEN $lo AND $hi"
+
+  test("a keyed statement compiles on its first key only, with AQE and without") {
+    val nationKeys = spark.sql("SELECT DISTINCT c_nationkey FROM customer ORDER BY 1")
+      .collect().map(_.getInt(0)).toIndexedSeq
+    assert(nationKeys.size >= 20)
+    // disjoint keys per mode where the domain allows, so no key repeats a
+    // text the other mode compiled
+    val runs = for ((aqe, m) <- Seq("true", "false").zipWithIndex) yield {
+      val shapes = Seq[(String, Int => String)](
+        "orders_by_key" -> (i => ordersByKey(orderKeys(100 + 20 * m + i))),
+        "nation_join_agg" -> (i => nationJoinAgg(nationKeys((nationKeys.size - 20) * m + i))),
+        "insert batch" -> (i => insertBatch(orderKeys(200 + 40 * m + 2 * i), orderKeys(300 + 40 * m + 2 * i))))
+      try {
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
+        shapes.map { case (name, text) =>
+          (s"$name, adaptive $aqe", (0 until 20).map(i => compiled(drain(text(i)))))
+        }
+      } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
+    }
+    val report = runs.flatten.map { case (shape, perKey) => s"$shape: classes compiled per key ${perKey.mkString(" ")}" }
+    report.foreach(info(_))
+    val keysAfterTheFirstCompileNoMore = runs.flatten.forall { case (_, n) => n.tail.sum <= n.head }
+    assert(keysAfterTheFirstCompileNoMore, report.mkString("\n"))
+  }
+
+  test("EXECUTE ... USING a second value compiles no class") {
+    graft.sql.PrestoSql.sql(spark,
+      "PREPARE bound_spec FROM SELECT o_orderkey, o_totalprice FROM orders WHERE o_orderkey = ?")
+    drain(s"EXECUTE bound_spec USING ${orderKeys(11)}")
+    val second = compiled(drain(s"EXECUTE bound_spec USING ${orderKeys(12)}"))
+    assert(second == 0, s"the second EXECUTE compiled $second classes")
+  }
+
+  test("bound comparison literals leave scan filters and foldable arguments literal, and evaluate interpreted") {
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import org.apache.spark.sql.execution.{FileSourceScanExec, FilterExec}
+    import org.apache.spark.sql.types.LongType
+    import graft.plans.BoundValue
+    def scanAndFilter(p: SparkPlan) =
+      (p.collectFirst { case s: FileSourceScanExec => s }.getOrElse(fail(s"no scan:\n$p")),
+        p.collectFirst { case f: FilterExec => f }.getOrElse(fail(s"no filter:\n$p")))
+    val k = orderKeys(321)
+    val lookup = "SELECT l_orderkey, l_linenumber, l_partkey, l_quantity, l_extendedprice " +
+      s"FROM lineitem WHERE l_orderkey = $k"
+
+    // the filter reads a bound value; the scan's data and pushed filters keep the literal
+    val (scan, filter) = scanAndFilter(executedPlan(graft.sql.PrestoSql.sql(spark, lookup)))
+    assert(filter.condition.exists(_ == BoundValue(k, LongType)), filter.condition)
+    val unbound = filter.condition.transform { case BoundValue(v, t) => Literal(v, t) }
+    assert(filter.condition.toString == unbound.toString && filter.condition.sql == unbound.sql,
+      "prints as the literal did")
+    assert(scan.dataFilters.exists(_.exists(_ == Literal(k))) &&
+      !scan.dataFilters.exists(_.exists(_.isInstanceOf[BoundValue])), scan.dataFilters)
+    assert(scan.metadata("PushedFilters") == s"[IsNotNull(l_orderkey), EqualTo(l_orderkey,$k)]")
+
+    // row-group pruning still applies: over a copy of lineitem in small
+    // row groups, the scan reads exactly the groups whose statistics admit k
+    val dir = java.nio.file.Files.createTempDirectory("bound_rg").toString + "/t"
+    spark.table("lineitem").repartition(1).sortWithinPartitions("l_orderkey")
+      .write.option("parquet.block.size", "16384").parquet(dir)
+    val conf = spark.sessionState.newHadoopConf()
+    val groups = new java.io.File(dir).listFiles().filter(_.getName.endsWith(".parquet")).toSeq.flatMap { f =>
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(new org.apache.hadoop.fs.Path(f.getPath), conf))
+      try r.getFooter.getBlocks.asScala.toSeq.map { b =>
+        val st = b.getColumns.asScala.find(_.getPath.toDotString == "l_orderkey").get.getStatistics
+        (st.genericGetMin.asInstanceOf[Long], st.genericGetMax.asInstanceOf[Long], b.getRowCount)
+      } finally r.close()
+    }
+    val admitted = groups.collect { case (lo, hi, n) if lo <= k && k <= hi => n }.sum
+    assert(groups.size > 1 && admitted < groups.map(_._3).sum, s"row groups $groups")
+    spark.read.parquet(dir).createOrReplaceTempView("lineitem_row_groups")
+    val rgDf = graft.sql.PrestoSql.sql(spark, lookup.replace("FROM lineitem", "FROM lineitem_row_groups"))
+    val (rgScan, _) = scanAndFilter(executedPlan(rgDf))
+    assert(rgScan.metrics("numOutputRows").value == admitted)
+
+    // a LIKE pattern beside the bound key stays a literal
+    val like = "SELECT c_custkey, c_name FROM customer WHERE c_custkey = 123 AND c_name LIKE 'Customer#00000012%'"
+    val (_, likeFilter) = scanAndFilter(executedPlan(graft.sql.PrestoSql.sql(spark, like)))
+    assert(likeFilter.condition.exists(_ == BoundValue(123L, LongType)), likeFilter.condition)
+    assert(likeFilter.condition.exists {
+      case Literal(s: org.apache.spark.unsafe.types.UTF8String, _) => s.toString.startsWith("Customer#00000012")
+      case _ => false
+    }, likeFilter.condition)
+
+    // interpreted evaluation (eval) returns the rows generated code does
+    val texts = Seq(lookup, like, ordersByKey(orderKeys(5)), nationJoinAgg(7),
+      insertBatch(orderKeys(40), orderKeys(90)))
+    def rows() = texts.map(t => graft.sql.PrestoSql.sql(spark, t).collect().map(_.toString).sorted.toSeq)
+    val generated = rows()
+    assert(generated.forall(_.nonEmpty))
+    try {
+      spark.conf.set("spark.sql.codegen.wholeStage", "false")
+      assert(rows() == generated, "without whole-stage codegen")
+      spark.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
+      assert(rows() == generated, "interpreted")
+    } finally {
+      spark.conf.unset("spark.sql.codegen.factoryMode")
+      spark.conf.unset("spark.sql.codegen.wholeStage")
+    }
+  }
+
   // ---- plan-shape assertions (scale discipline) ----
 
   private def executedPlan(df: org.apache.spark.sql.DataFrame): SparkPlan = {
