@@ -275,17 +275,15 @@ object Bench {
     // SPARK_DRIVER_MEM (kn_trigram 37.96s/521 CPU in-JVM vs 4.66s/13.2
     // fresh). Published per query so slow-tail regressions are
     // attributable from the JSON.
-    // func_geometry_overlay rides along every round: its r10 suite wall
-    // doubled with no geometry change and no isolated number to
-    // adjudicate (VERDICT r10 open item) — publishing it keeps
-    // suite-contention drift attributable without chasing reruns.
     // r14 self-adjudication widening: any query whose min-of-2 wall is
     // >2x its wall in the PREVIOUS committed BENCH_FULL.json (same sf,
-    // +0.2 s absolute floor so millisecond-noise queries don't churn)
-    // also gets an isolated retime, and the trigger list is published —
-    // a contention-inflated run then carries isolated numbers for every
-    // inflated query, not just the 10 slowest, so no driver/judge round
-    // needs manual adjudication.
+    // same nproc, +0.2 s absolute floor so millisecond-noise queries
+    // don't churn) also gets an isolated retime, and the trigger list is
+    // published — a contention-inflated run then carries isolated numbers
+    // for every inflated query, not just the 10 slowest, so no reader
+    // has to adjudicate by hand. A baseline from a host with another
+    // processor count (or one that does not say) is not compared: its
+    // walls would flag the host change, not inflation.
     val prevWalls: Map[String, Double] =
       try {
         val p = java.nio.file.Paths.get("BENCH_FULL.json")
@@ -293,7 +291,8 @@ object Bench {
         else {
           val node = new com.fasterxml.jackson.databind.ObjectMapper()
             .readTree(java.nio.file.Files.readAllBytes(p))
-          if (node.path("sf").asText() != sfDir) Map.empty
+          if (node.path("sf").asText() != sfDir ||
+              node.path("nproc").asInt(-1) != Runtime.getRuntime.availableProcessors) Map.empty
           else {
             import scala.jdk.CollectionConverters._
             node.path("queries").fields().asScala
@@ -306,8 +305,7 @@ object Bench {
       case (name, r, _) if r.wall >= 0 &&
         prevWalls.get(name).exists(pw => r.wall > 2.0 * pw && r.wall - pw > 0.2) => name
     }.toSet
-    val slowest = results.filter(_._2.wall >= 0).sortBy(-_._2.wall).take(10).map(_._1).toSet +
-      "func_geometry_overlay" ++ inflated
+    val slowest = results.filter(_._2.wall >= 0).sortBy(-_._2.wall).take(10).map(_._1).toSet ++ inflated
 
     // Stop the parent's Spark BEFORE forking the isolated child: one
     // Spark JVM at a time on this box (the parent's local threads
@@ -350,7 +348,7 @@ object Bench {
     }.mkString("{", ",", "}")
     val inflatedJson = inflated.toSeq.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")
     val full =
-      s"""{"metric":"total","value":${r3(wallTotal)},"cpu":${r3(cpuTotal)},"unit":"sec","n_queries":${results.size},"steal_pct":${r3(runStealPct)},$hostJson,"methodology":"min-of-2 wall per query, second pass after full suite; cpu = executorCpuTime of the min run; steal_pct = percent (0-100) of host /proc/stat jiffies stolen during the window, same unit per-query and total; gc_ms = driver-JVM STW GC ms inside the window; compiles/compile_ms = generated classes Janino compiled inside the window and the ms it took (a compiled-class cache hit is not counted); 10 slowest re-timed as isolated in a FORKED fresh JVM at isolated_xmx_mb (warm pass + min-of-2), plus every query whose wall is >2x its previous committed BENCH_FULL wall (listed in retimed_inflated)","isolated_forked":${forked.isDefined},"isolated_xmx_mb":$isolatedXmxMb,"retimed_inflated":$inflatedJson,"queries":$fullQs,"failures":$failures,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${r3(wallTotal)},"cpu":${r3(cpuTotal)},"unit":"sec","n_queries":${results.size},"steal_pct":${r3(runStealPct)},$hostJson,"methodology":"min-of-2 wall per query, second pass after full suite; cpu = executorCpuTime of the min run; steal_pct = percent (0-100) of host /proc/stat jiffies stolen during the window, same unit per-query and total; gc_ms = driver-JVM STW GC ms inside the window; compiles/compile_ms = generated classes Janino compiled inside the window and the ms it took (a compiled-class cache hit is not counted); 10 slowest re-timed as isolated in a FORKED fresh JVM at isolated_xmx_mb (warm pass + min-of-2), plus every query whose wall is >2x its wall in the previous committed BENCH_FULL of the same sf and nproc (listed in retimed_inflated)","isolated_forked":${forked.isDefined},"isolated_xmx_mb":$isolatedXmxMb,"retimed_inflated":$inflatedJson,"queries":$fullQs,"failures":$failures,"sf":"$sfDir"}"""
     java.nio.file.Files.write(java.nio.file.Paths.get("BENCH_FULL.json"),
       full.getBytes(java.nio.charset.StandardCharsets.UTF_8))
 

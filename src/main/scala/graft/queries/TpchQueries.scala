@@ -1,7 +1,5 @@
 package graft.queries
 
-import graft.engine.Engine.PinOps
-
 /** TPC-H-style headline queries restated for the driver's fixture schema
   * (FIXTURES.md — no partsupp, fewer columns). These are the reference's
   * own benchmark queries (presto-benchto-benchmarks/src/main/resources/
@@ -9,10 +7,9 @@ import graft.engine.Engine.PinOps
   * presto-benchmark/.../HandTpchQuery1.java, HandTpchQuery6.java).
   *
   * Spark runs each query's oracle text (`sqlQ`), except the five partsupp
-  * readers (`psQ`, whose text lacks only the oracle's partsupp CTE) and
-  * q15, a hand plan for the reason stated beside it. Catalyst handles
-  * pushdown, partial aggregation, and join strategy (broadcast for
-  * dims). At 100 TB:
+  * readers (`psQ`, whose text lacks only the oracle's partsupp CTE and
+  * reads the cached table instead). Catalyst handles pushdown, partial
+  * aggregation, and join strategy (broadcast for dims). At 100 TB:
   * lineitem/orders shuffle on their join keys once; nation/region/
   * customer/supplier are broadcast — verified via .explain in the specs.
   */
@@ -80,17 +77,11 @@ object TpchQueries extends QueryModule {
     // Q15: top supplier by quarterly revenue. The textbook form joins on
     // exact floating-point equality between two evaluations of the same
     // CTE — Spark may plan the CTE twice with different partial-agg
-    // orders and silently drop the top supplier. The r6 rank() fix
-    // evaluated it once but ranked over an UNPARTITIONED window: a
-    // single-task global sort of |suppliers| rows (the one remaining
-    // WindowExec "No Partition Defined" in the bench). Restated: the
-    // per-supplier revenue is materialized ONCE (localCheckpoint —
-    // executor-resident, |suppliers| rows, no driver collect), its max
-    // is a 1-row aggregate, and membership is a broadcast join against
-    // that max over the SAME materialized values — return-all-ties, one
-    // evaluation, no global sort. The oracle keeps the rank() SQL
-    // (equivalent set; DuckDB has no double-evaluation hazard).
-    Q("q15_top_supplier",
+    // orders and silently drop the top supplier. The rank() restatement
+    // evaluates it once. Its window has no PARTITION BY, but over
+    // |suppliers| rows; a hand plan that avoided it (max of a pinned
+    // aggregate, broadcast back) measured no faster at sf0.1.
+    sqlQ("q15_top_supplier",
       """WITH revenue AS (
         |  SELECT l_suppkey AS supplier_no,
         |         sum(l_extendedprice * (1 - l_discount)) AS total_revenue
@@ -104,18 +95,7 @@ object TpchQueries extends QueryModule {
         |  FROM revenue)
         |SELECT s_suppkey, s_name, total_revenue
         |FROM supplier JOIN ranked ON s_suppkey = supplier_no
-        |WHERE rn = 1""".stripMargin) { (s, _) =>
-      import org.apache.spark.sql.functions._
-      val revenue = s.table("lineitem")
-        .filter(expr("l_shipdate >= TIMESTAMP '1996-01-01' AND l_shipdate < TIMESTAMP '1996-04-01'"))
-        .groupBy(col("l_suppkey"))
-        .agg(sum(col("l_extendedprice") * (lit(1) - col("l_discount"))).as("total_revenue"))
-        .pinned()
-      val mx = revenue.agg(max(col("total_revenue")).as("mx"))
-      val top = revenue.join(broadcast(mx), col("total_revenue") === col("mx")).drop("mx")
-      s.table("supplier").join(top, col("s_suppkey") === col("l_suppkey"))
-        .select(col("s_suppkey"), col("s_name"), col("total_revenue"))
-    },
+        |WHERE rn = 1""".stripMargin),
 
     // Q17: small-quantity-order revenue (correlated scalar average).
     sqlQ("q17_small_quantity",

@@ -155,19 +155,11 @@ object WindowQueries extends QueryModule {
 
     // Whole-partition aggregate window (no ORDER BY => full frame) and a
     // sliding ROWS frame — AggregateWindowFunction.java.
-    Q("win_partition_agg",
+    Q.sameSql("win_partition_agg",
       """SELECT l_orderkey, l_linenumber,
         |  avg(l_extendedprice) OVER (PARTITION BY l_orderkey) AS order_avg_price,
         |  CAST(count(*) OVER (PARTITION BY l_orderkey) AS BIGINT) AS order_lines,
         |  min(l_quantity) OVER (PARTITION BY l_orderkey ORDER BY l_linenumber, l_quantity
         |    ROWS BETWEEN 1 PRECEDING AND 1 FOLLOWING) AS neighborhood_min
-        |FROM lineitem WHERE l_orderkey <= 500""".stripMargin) { (s, _) =>
-      val full = Window.partitionBy("l_orderkey")
-      val slide = Window.partitionBy("l_orderkey").orderBy("l_linenumber", "l_quantity").rowsBetween(-1, 1)
-      s.table("lineitem").filter(col("l_orderkey") <= 500)
-        .select(col("l_orderkey"), col("l_linenumber"),
-          avg("l_extendedprice").over(full).as("order_avg_price"),
-          count(lit(1)).over(full).as("order_lines"),
-          min("l_quantity").over(slide).as("neighborhood_min"))
-    })
+        |FROM lineitem WHERE l_orderkey <= 500""".stripMargin))
 }

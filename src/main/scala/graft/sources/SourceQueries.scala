@@ -92,6 +92,7 @@ object SourceQueries extends QueryModule {
     // The oracle recomputes the same aggregate from the parquet table —
     // the connector must be full-fidelity. (JdbcOps scaladoc: only the
     // URL distinguishes this from a networked RDBMS.)
+    // Kept as a hand plan: the build reads through the JDBC connector; the oracle text reads parquet.
     Q("src_jdbc_roundtrip",
       """SELECT n_regionkey, CAST(count(*) AS BIGINT) AS n,
         |  CAST(sum(n_nationkey) AS BIGINT) AS key_sum
@@ -110,6 +111,7 @@ object SourceQueries extends QueryModule {
     // column must be pruned from the remote SELECT, and the read fans
     // out over 4 key-range splits. EngineSpecs pins the plan; here the
     // oracle pins the values.
+    // Kept as a hand plan: the build reads through the JDBC connector; the oracle text reads parquet.
     Q("src_jdbc_pushdown",
       """SELECT CAST(count(*) AS BIGINT) AS n,
         |  CAST(sum(s_suppkey) AS BIGINT) AS key_sum,
@@ -134,6 +136,7 @@ object SourceQueries extends QueryModule {
     // the index side, probe partitioning preserved. The oracle is the
     // equivalent plain join: lookup semantics must equal join semantics
     // (inner, fan-out per match).
+    // Kept as a hand plan: the build probes the Derby index; the oracle text is a plain join.
     Q("src_index_join",
       """SELECT o_orderkey, o_custkey, c_name,
         |  CAST(c_acctbal AS DOUBLE) AS c_acctbal
@@ -157,6 +160,7 @@ object SourceQueries extends QueryModule {
     // is then shuffle-free (EngineSpecs pins the no-Exchange plan). The
     // oracle recomputes the same aggregate from the flat tables: layout
     // must not change results.
+    // Kept as a hand plan: the build writes and joins bucketed tables; the oracle text reads the flat ones.
     Q("src_bucketed_join",
       """SELECT o_orderpriority, CAST(count(*) AS BIGINT) AS n,
         |  CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS revenue
@@ -294,6 +298,8 @@ object SourceQueries extends QueryModule {
     // `dynamicpruning` on the partition column). At 100 TB this is THE
     // mechanism that keeps star-schema joins from scanning every date
     // partition of the fact table.
+    // Spark runs the oracle text to other rows: its dayofweek numbers
+    // Sunday 1, DuckDB's 0, so on Spark the text finds no Sundays (n = 0).
     Q("src_dynamic_partition_pruning",
       """WITH dim AS (
         |  SELECT DISTINCT CAST(ts AS DATE) AS event_date FROM events),
@@ -347,6 +353,7 @@ object SourceQueries extends QueryModule {
     // (EngineSpecs pins the split count) and filters records exactly.
     // The oracle recomputes the same log coordinates with window
     // functions over orders.
+    // Kept as a hand plan: the build scans the segmented offset log; the oracle text reads orders.
     Q("src_kafka_decoder",
       """WITH base AS (SELECT o_orderkey, o_custkey FROM orders ORDER BY o_orderkey LIMIT 4000),
         |log AS (SELECT o_orderkey % 4 AS p,
@@ -553,6 +560,7 @@ object SourceQueries extends QueryModule {
     // derivation from orders; the pushdown mechanics (skip bytes,
     // decoded-field counts, cursor-level rejection) are spec-pinned in
     // EngineSpecs.
+    // Kept as a hand plan: the build reads through the document-store cursor; the oracle text reads orders.
     Q("src_docstore_projection",
       """WITH base AS (SELECT o_orderkey, o_custkey, o_totalprice
         |              FROM orders ORDER BY o_orderkey LIMIT 3000)
@@ -594,6 +602,7 @@ object SourceQueries extends QueryModule {
     // oracle replays the derivation straight from parquet; the 06:00
     // lower bound prunes the first two 3-hour-bucket files (spec-pinned)
     // and the row filter finishes the job.
+    // Kept as a hand plan: the build reads the local-file connector; the oracle text reads orders.
     Q("src_local_file_log",
       """SELECT CASE CAST(o_orderkey % 4 AS INT) WHEN 0 THEN 'GET' WHEN 1 THEN 'POST'
         |            WHEN 2 THEN 'PUT' ELSE 'DELETE' END AS method,

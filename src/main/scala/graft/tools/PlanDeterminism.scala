@@ -33,10 +33,11 @@ object PlanDeterminism {
     .replaceAll("plan_id=\\d+", "plan_id=x")
     .replaceAll("\\[id=#?\\d+\\]", "[id=x]")          // exchange/stage ids
     .replaceAll("exprId=\\d+", "exprId=x")
-    .replaceAll("ExistingRDD\\[\\d+\\]", "ExistingRDD[x]")
+    .replaceAll("RDD\\[\\d+\\]", "RDD[x]")           // rdd ids count up per SparkContext
     .replaceAll("(?i)\\brdd_\\d+", "rdd_x")
     .replaceAll("Scan ExistingRDD[^\\n]*", "Scan ExistingRDD x") // checkpoint scans carry rdd ids + callsites
     .replaceAll("@[0-9a-fA-F]{4,}", "@x")            // object identity hashes
+    .replaceAll("\\$\\$Lambda[$/0-9a-fA-Fx]*", "\\$\\$Lambda") // lambda class names number per JVM
     .replaceAll("\\d{8}_\\d{6}_\\d{5}_graft", "qid") // generated query ids
     .replaceAll("(file|hdfs):[^,\\]\\s)]+", "path")  // per-run temp/warehouse paths
     .replaceAll("/[-A-Za-z0-9_./]*/(tmp|target|warehouse)[-A-Za-z0-9_./]*", "path")

@@ -43,6 +43,10 @@ object PlanDump {
       "llm_pmi_collocations", "llm_pca_power",
       "llm_dedup_sorted_neighborhood", "llm_knn_ivfpq",
       "llm_train_val_split")
+    // Ids, lambda and object names and paths change from run to run;
+    // canonical plans make a rerun at the same commit byte-identical.
+    def formatted(df: org.apache.spark.sql.DataFrame): String = PlanDeterminism.canon(
+      df.queryExecution.explainString(org.apache.spark.sql.execution.FormattedMode)).take(8000)
     val spark = graft.engine.Engine.session(s"local[${graft.engine.Engine.cores}]")
     graft.engine.Engine.registerTables(spark, sfDir)
     val sb = new StringBuilder
@@ -54,11 +58,7 @@ object PlanDump {
     sb.append("exchange, and pipelines stay inside `WholeStageCodegen` spans.\n")
     headline.foreach { name =>
       SparkEntry.queries.get(name).foreach { fn =>
-        val df = fn(spark, sfDir)
-        sb.append(s"\n## $name\n\n```\n")
-        sb.append(df.queryExecution.explainString(
-          org.apache.spark.sql.execution.FormattedMode).take(8000))
-        sb.append("\n```\n")
+        sb.append(s"\n## $name\n\n```\n${formatted(fn(spark, sfDir))}\n```\n")
       }
     }
 
@@ -67,10 +67,7 @@ object PlanDump {
     // that carry the scale claims are the INTERNAL per-pass plans —
     // dumped here from the same builders the queries run.
     def section(title: String, note: String, df: org.apache.spark.sql.DataFrame): Unit = {
-      sb.append(s"\n## $title\n\n$note\n\n```\n")
-      sb.append(df.queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode).take(8000))
-      sb.append("\n```\n")
+      sb.append(s"\n## $title\n\n$note\n\n```\n${formatted(df)}\n```\n")
     }
     {
       import org.apache.spark.sql.functions._
