@@ -1,9 +1,9 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicLong
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graft.ListenerBusFlush
+
+import graft.engine.QueryMetrics
 
 /** Benchmark harness (driver contract): runs every SparkEntry query on
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line.
@@ -56,32 +56,21 @@ object Bench {
 
   /** Session on the benchmark agent's exact configuration, fixtures
     * registered and the lineitem footers/pages warmed (untimed). */
-  private[graft] def start(sfDir: String): (SparkSession, AtomicLong) = {
+  private[graft] def start(sfDir: String): SparkSession = {
     val spark = graft.engine.Engine.session(s"local[${graft.engine.Engine.cores}]")
-    val cpuNs = installCpuListener(spark)
     graft.engine.Engine.registerTables(spark, sfDir)
     spark.table("lineitem").write.format("noop").mode("overwrite").save()
-    (spark, cpuNs)
-  }
-
-  /** Always-on CPU accounting: per-stage executorCpuTime accumulated into a
-    * counter, snapshotted around each query (bus drained first — stage
-    * events are async). CPU time is immune to the whole-host stall windows
-    * that wrecked the round-5 driver wall numbers.
-    */
-  private def installCpuListener(spark: SparkSession): AtomicLong = {
-    val cpuNs = new AtomicLong(0L)
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onStageCompleted(ev: SparkListenerStageCompleted): Unit =
-        cpuNs.addAndGet(ev.stageInfo.taskMetrics.executorCpuTime)
-    })
-    cpuNs
+    spark
   }
 
   final case class Run(wall: Double, cpu: Double, stealPct: Double, gcMs: Long,
-      compiles: Long, compileMs: Long)
+      compiles: Long, compileMs: Long, jobs: Long, stages: Long) {
+    /** The JSON fields the isolated child prints and BENCH_FULL carries. */
+    def fields: String = s""""wall":${r3(wall)},"cpu":${r3(cpu)},"steal_pct":${r3(stealPct)},""" +
+      s""""gc_ms":$gcMs,"compiles":$compiles,"compile_ms":$compileMs,"jobs":$jobs,"stages":$stages"""
+  }
 
-  private val failed = Run(-1.0, -1.0, 0.0, 0L, 0L, 0L)
+  private val failed = Run(-1.0, -1.0, 0.0, 0L, 0L, 0L, 0L, 0L)
 
   /** Generated classes compiled by Janino in this JVM so far (driver and
     * local tasks alike; a compiled-class cache hit does not count), and
@@ -90,16 +79,17 @@ object Bench {
     (org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount,
       org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator.compileTime)
 
-  /** One measured run. Bus drained on both sides of the window so stage
-    * events land in the right query. gcMs = driver-JVM stop-the-world GC
-    * time inside the window (heap-state attribution, r15 verdict #1);
-    * compiles/compileMs = generated classes compiled inside the window and
-    * the time that took.
+  /** One measured run. cpu (immune to host stalls), jobs and stages come
+    * from the context's [[QueryMetrics]], the bus drained on both sides of
+    * the window so stage events land in the right query. gcMs = driver-JVM
+    * stop-the-world GC time inside the window; compiles/compileMs =
+    * generated classes compiled inside the window and the time that took.
     */
-  private[graft] def once(spark: SparkSession, cpuNs: AtomicLong, sfDir: String)(
+  private[graft] def once(spark: SparkSession, sfDir: String)(
       fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Run = {
-    org.apache.spark.sql.graft.ListenerBusFlush.drain(spark.sparkContext)
-    val c0 = cpuNs.get()
+    val metrics = QueryMetrics.of(spark.sparkContext)
+    ListenerBusFlush.drain(spark.sparkContext)
+    val m0 = metrics.totals
     val (st0, tot0) = procStat()
     val g0 = gcNowMs()
     val (k0, kNs0) = compilesNow()
@@ -109,10 +99,12 @@ object Bench {
     val (k1, kNs1) = compilesNow()
     val g1 = gcNowMs()
     val (st1, tot1) = procStat()
-    org.apache.spark.sql.graft.ListenerBusFlush.drain(spark.sparkContext)
+    ListenerBusFlush.drain(spark.sparkContext)
+    val m1 = metrics.totals
     val stealPct =
       if (tot1 > tot0) 100.0 * (st1 - st0) / (tot1 - tot0) else 0.0
-    Run(wall, (cpuNs.get() - c0) / 1e9, stealPct, g1 - g0, k1 - k0, (kNs1 - kNs0) / 1000000L)
+    Run(wall, (m1.cpuNs - m0.cpuNs) / 1e9, stealPct, g1 - g0, k1 - k0,
+      (kNs1 - kNs0) / 1000000L, m1.jobs - m0.jobs, m1.stages - m0.stages)
   }
 
   private def r3(v: Double): String = "%.3f".formatLocal(java.util.Locale.ROOT, v)
@@ -138,23 +130,21 @@ object Bench {
   // ---------------------------------------------------------------------
   private def isolatedChild(names: Seq[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val (spark, cpuNs) = start(sfDir)
+    val spark = start(sfDir)
     val xmxMb = Runtime.getRuntime.maxMemory() / (1024 * 1024)
     val out = names.flatMap { name =>
       SparkEntry.benchQueries.get(name).map { fn =>
         val best =
           try {
-            once(spark, cpuNs, sfDir)(fn) // warm (untimed)
-            val a = once(spark, cpuNs, sfDir)(fn)
-            val b = once(spark, cpuNs, sfDir)(fn)
+            once(spark, sfDir)(fn) // warm (untimed)
+            val a = once(spark, sfDir)(fn)
+            val b = once(spark, sfDir)(fn)
             if (b.wall < a.wall) b else a
           } catch { case e: Throwable =>
             System.err.println(s"[bench-isolated] $name failed: ${e.getMessage}")
             failed
           }
-        "\"" + name + "\":{\"wall\":" + r3(best.wall) + ",\"cpu\":" + r3(best.cpu) +
-          ",\"steal_pct\":" + r3(best.stealPct) + ",\"gc_ms\":" + best.gcMs +
-          ",\"compiles\":" + best.compiles + ",\"compile_ms\":" + best.compileMs + "}"
+        "\"" + name + "\":{" + best.fields + "}"
       }
     }.mkString("{", ",", "}")
     spark.stop()
@@ -200,7 +190,8 @@ object Bench {
             val v = e.getValue
             e.getKey -> Run(v.path("wall").asDouble(-1.0), v.path("cpu").asDouble(-1.0),
               v.path("steal_pct").asDouble(0.0), v.path("gc_ms").asLong(0L),
-              v.path("compiles").asLong(0L), v.path("compile_ms").asLong(0L))
+              v.path("compiles").asLong(0L), v.path("compile_ms").asLong(0L),
+              v.path("jobs").asLong(0L), v.path("stages").asLong(0L))
           }.toMap
           (xmxMb, qs)
         }
@@ -224,7 +215,7 @@ object Bench {
     // times only matching queries (the driver never sets it).
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(_.split(",").toSeq)
 
-    val (spark, cpuNs) = start(sfDir)
+    val spark = start(sfDir)
     // Sketch prewarm only when a sketch query will actually be timed:
     // on a filtered probe run (e.g. the ×100 scale probes) these four
     // unmeasured passes were the dominant UNTIMED cost — minutes of
@@ -245,7 +236,7 @@ object Bench {
       if (sinceGc >= 25) { System.gc(); sinceGc = 0 } // JMH-style: bound generated-class buildup
       // A failed query must not masquerade as a (fast) timing: recorded as
       // -1 and listed under "failures", excluded from totals.
-      try once(spark, cpuNs, sfDir)(fn)
+      try once(spark, sfDir)(fn)
       catch { case e: Throwable =>
         System.err.println(s"[bench] $name failed: ${e.getMessage}"); failed }
     }
@@ -261,7 +252,7 @@ object Bench {
       val best =
         if (r1.wall < 0) r1
         else {
-          val r2 = try once(spark, cpuNs, sfDir)(fn)
+          val r2 = try once(spark, sfDir)(fn)
             catch { case _: Throwable => failed.copy(wall = Double.MaxValue) }
           if (r2.wall < r1.wall) r2 else r1
         }
@@ -341,14 +332,11 @@ object Bench {
       val extra = graft.tools.QueryStats.snapshot(k).map { case (sk, sv) =>
         ",\"" + sk + "\":" + sv
       }.mkString
-      "\"" + k + "\":{\"wall\":" + r3(r.wall) + ",\"cpu\":" + r3(r.cpu) +
-        ",\"t1\":" + r3(t1) + ",\"steal_pct\":" + r3(r.stealPct) +
-        ",\"gc_ms\":" + r.gcMs + ",\"compiles\":" + r.compiles +
-        ",\"compile_ms\":" + r.compileMs + iso + extra + "}"
+      "\"" + k + "\":{" + r.fields + ",\"t1\":" + r3(t1) + iso + extra + "}"
     }.mkString("{", ",", "}")
     val inflatedJson = inflated.toSeq.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")
     val full =
-      s"""{"metric":"total","value":${r3(wallTotal)},"cpu":${r3(cpuTotal)},"unit":"sec","n_queries":${results.size},"steal_pct":${r3(runStealPct)},$hostJson,"methodology":"min-of-2 wall per query, second pass after full suite; cpu = executorCpuTime of the min run; steal_pct = percent (0-100) of host /proc/stat jiffies stolen during the window, same unit per-query and total; gc_ms = driver-JVM STW GC ms inside the window; compiles/compile_ms = generated classes Janino compiled inside the window and the ms it took (a compiled-class cache hit is not counted); 10 slowest re-timed as isolated in a FORKED fresh JVM at isolated_xmx_mb (warm pass + min-of-2), plus every query whose wall is >2x its wall in the previous committed BENCH_FULL of the same sf and nproc (listed in retimed_inflated)","isolated_forked":${forked.isDefined},"isolated_xmx_mb":$isolatedXmxMb,"retimed_inflated":$inflatedJson,"queries":$fullQs,"failures":$failures,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${r3(wallTotal)},"cpu":${r3(cpuTotal)},"unit":"sec","n_queries":${results.size},"steal_pct":${r3(runStealPct)},$hostJson,"methodology":"min-of-2 wall per query, second pass after full suite; cpu = executorCpuTime of the min run; steal_pct = percent (0-100) of host /proc/stat jiffies stolen during the window, same unit per-query and total; gc_ms = driver-JVM STW GC ms inside the window; compiles/compile_ms = generated classes Janino compiled inside the window and the ms it took (a compiled-class cache hit is not counted); jobs/stages = Spark jobs started and stages completed inside the window; 10 slowest re-timed as isolated in a FORKED fresh JVM at isolated_xmx_mb (warm pass + min-of-2), plus every query whose wall is >2x its wall in the previous committed BENCH_FULL of the same sf and nproc (listed in retimed_inflated)","isolated_forked":${forked.isDefined},"isolated_xmx_mb":$isolatedXmxMb,"retimed_inflated":$inflatedJson,"queries":$fullQs,"failures":$failures,"sf":"$sfDir"}"""
     java.nio.file.Files.write(java.nio.file.Paths.get("BENCH_FULL.json"),
       full.getBytes(java.nio.charset.StandardCharsets.UTF_8))
 

@@ -101,7 +101,10 @@ object Engine {
   /** The one session builder in the engine: every main and the benchmark
     * agent get their session here. It loads [[GraftExtensions]], which
     * installs the graft functions and optimizer rule into this session and
-    * every `newSession()` made from it, and QueryStats' listener. `overrides`
+    * every `newSession()` made from it, and names [[QueryMetrics]] in
+    * `spark.extraListeners`, so a new SparkContext gets the one collector
+    * behind Bench's and Probe's counters, QueryLimits' memory ceilings and
+    * QueryStats' observations. `overrides`
     * apply last, so a test configuration (forced spill, AQE off) is this
     * configuration with exactly the named changes. Core SparkConf keys in
     * `overrides` take effect only when no SparkContext is running yet
@@ -151,8 +154,7 @@ object Engine {
       .config("spark.sql.autoBroadcastJoinThreshold", (32L * 1024 * 1024).toString)
       .config("spark.ui.enabled", "false")
       .config("spark.sql.extensions", classOf[GraftExtensions].getName)
-      // zero-cost in-flow counters (observe API) -> bench artifact
-      .config("spark.sql.queryExecutionListeners", classOf[graft.tools.QueryStats.Listener].getName)
+      .config("spark.extraListeners", classOf[QueryMetrics].getName)
     overrides.foreach { case (k, v) => builder.config(k, v) }
     val spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

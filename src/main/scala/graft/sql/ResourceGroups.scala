@@ -97,29 +97,20 @@ object ResourceGroups {
       resourceEstimate: Option[SelectorResourceEstimate] = None)
 
   /** Airlift Duration.valueOf text ("100ms", "5m", "1.5h") → millis. */
-  private[graft] def parseDuration(s: String): Long = {
-    val m = "^\\s*([0-9]*\\.?[0-9]+)\\s*(ns|us|ms|s|m|h|d)\\s*$".r
-      .findFirstMatchIn(s)
-      .getOrElse(throw new IllegalArgumentException(s"Invalid duration: $s"))
-    val v = m.group(1).toDouble
-    val factor = m.group(2) match {
-      case "ns" => 1e-6; case "us" => 1e-3; case "ms" => 1.0
-      case "s" => 1e3; case "m" => 60e3; case "h" => 3600e3; case "d" => 86400e3
-    }
-    math.round(v * factor)
-  }
+  private[graft] def parseDuration(s: String): Long = parseAirlift(s, "duration",
+    Map("ns" -> 1e-6, "us" -> 1e-3, "ms" -> 1.0, "s" -> 1e3, "m" -> 60e3, "h" -> 3600e3,
+      "d" -> 86400e3))
 
   /** Airlift DataSize.valueOf text ("512MB", "4GB") → bytes. */
-  private[graft] def parseDataSize(s: String): Long = {
-    val m = "^\\s*([0-9]*\\.?[0-9]+)\\s*(B|kB|MB|GB|TB|PB)\\s*$".r
-      .findFirstMatchIn(s)
-      .getOrElse(throw new IllegalArgumentException(s"Invalid data size: $s"))
-    val v = m.group(1).toDouble
-    val factor = m.group(2) match {
-      case "B" => 1L; case "kB" => 1L << 10; case "MB" => 1L << 20
-      case "GB" => 1L << 30; case "TB" => 1L << 40; case "PB" => 1L << 50
-    }
-    math.round(v * factor)
+  private[graft] def parseDataSize(s: String): Long = parseAirlift(s, "data size",
+    Seq("B", "kB", "MB", "GB", "TB", "PB").zipWithIndex.map { case (u, i) => u -> math.pow(1024, i) }.toMap)
+
+  /** A decimal number and one of `units`, scaled and rounded to a whole result unit. */
+  private def parseAirlift(s: String, what: String, units: Map[String, Double]): Long = {
+    val m = "^\\s*([0-9]*\\.?[0-9]+)\\s*([a-zA-Z]+)\\s*$".r.findFirstMatchIn(s)
+      .filter(m => units.contains(m.group(2)))
+      .getOrElse(throw new IllegalArgumentException(s"Invalid $what: $s"))
+    math.round(m.group(1).toDouble * units(m.group(2)))
   }
 
   /** Parse the X-Presto-Resource-Estimate header's k=v list

@@ -34,14 +34,12 @@ object QueryStats {
     }
   }
 
-  def clear(): Unit = stats.clear()
-
   /** Zero-cost in-flow counters via Spark's observation API: attach
     * `observe` metrics to a pipeline stage (computed DURING the normal
     * execution — no extra job, no plan change beyond a CollectMetrics
     * node) and have them land in this registry when the query finishes.
-    * The observation name encodes the target query; one listener per
-    * session routes every `qstats:`-prefixed observation here.
+    * The observation name encodes the target query; [[graft.engine.QueryMetrics]]
+    * hands each successful execution's observations to [[recordObserved]].
     */
   private val ObsPrefix = "qstats:"
 
@@ -55,27 +53,18 @@ object QueryStats {
     df.observe(ObsPrefix + query + ":" + obsSeq.incrementAndGet(), metric, more: _*)
   }
 
-  /** Routes every `qstats:`-prefixed observation into the registry.
-    * [[graft.engine.Engine.session]] names this class in
-    * `spark.sql.queryExecutionListeners`, so Spark registers one per
-    * session. */
-  class Listener extends org.apache.spark.sql.util.QueryExecutionListener {
-    override def onSuccess(funcName: String,
-        qe: org.apache.spark.sql.execution.QueryExecution, durationNs: Long): Unit = {
-      qe.observedMetrics.foreach { case (name, row) =>
-        if (name.startsWith(ObsPrefix)) {
-          val query = name.drop(ObsPrefix.length).split(":")(0)
-          row.schema.fields.zipWithIndex.foreach { case (f, i) =>
-            if (!row.isNullAt(i)) row.get(i) match {
-              case l: Long => record(query, f.name, l)
-              case i2: Int => record(query, f.name, i2.toLong)
-              case _ => ()
-            }
+  /** Record the integral fields of every `qstats:` observation. */
+  private[graft] def recordObserved(metrics: Map[String, org.apache.spark.sql.Row]): Unit =
+    metrics.foreach { case (name, row) =>
+      if (name.startsWith(ObsPrefix)) {
+        val query = name.drop(ObsPrefix.length).split(":")(0)
+        row.schema.fields.zipWithIndex.foreach { case (f, i) =>
+          if (!row.isNullAt(i)) row.get(i) match {
+            case l: Long => record(query, f.name, l)
+            case i2: Int => record(query, f.name, i2.toLong)
+            case _ => ()
           }
         }
       }
     }
-    override def onFailure(funcName: String,
-        qe: org.apache.spark.sql.execution.QueryExecution, ex: Exception): Unit = ()
-  }
 }

@@ -1252,6 +1252,16 @@ class EngineSpecs extends AnyFunSuite with BeforeAndAfterAll {
       s"split must bound candidates, got ${stats("candidate_pairs")} vs unsplit ~$clusterPairs")
   }
 
+  test("QueryStats.observed counters land in the registry when the query finishes") {
+    import org.apache.spark.sql.functions.{count, lit, sum}
+    val df = graft.tools.QueryStats.observed(spark.range(0, 1000, 1, 4).toDF("id"),
+      "spec_observed", count(lit(1)).as("rows_seen"), sum("id").as("id_sum"))
+    df.write.format("noop").mode("overwrite").save()
+    org.apache.spark.sql.graft.ListenerBusFlush.drain(spark.sparkContext)
+    val stats = graft.tools.QueryStats.snapshot("spec_observed").toMap
+    assert(stats == Map("id_sum" -> 499500L, "rows_seen" -> 1000L), s"$stats")
+  }
+
   test("embedding dedup recovers planted near-exact duplicates") {
     // Recall contract at the similarity production dedup targets: 50
     // planted pairs at cos >= ~0.999 (per-bit collision p ~ 0.99 ->

@@ -493,23 +493,26 @@ class LifecycleSpecs extends AnyFunSuite with BeforeAndAfterAll {
   test("query_max_run_time kills a runaway query with the reference's error text") {
     val server = graft.sql.StatementServer.start(spark)
     try {
-      // count (not sum): an ANSI long-sum overflow must not beat the
-      // 1 s timer to the error slot
-      val (_, b) = httpSend("POST", s"${server.baseUri}/v1/statement",
-        Some("SELECT count(xxhash64(a.id + b.id)) AS n " +
-          "FROM range(30000000) a CROSS JOIN range(30000000) b"),
-        Seq("X-Presto-Session" -> "query_max_run_time=1s"))
-      val id = json(b).get("id").asText()
-      var err = ""
-      val deadline = System.currentTimeMillis() + 60000
-      while (err.isEmpty && System.currentTimeMillis() < deadline) {
-        val node = json(httpSend("GET", s"${server.baseUri}/v1/statement/$id/0")._2)
-        if (node.has("error")) err = node.get("error").get("message").asText()
-        else Thread.sleep(200)
+      // a whole and a fractional Airlift duration
+      for ((limit, shown) <- Seq("1s" -> "1.00s", "1.5s" -> "1.50s")) {
+        // count (not sum): an ANSI long-sum overflow must not beat the
+        // timer to the error slot
+        val (_, b) = httpSend("POST", s"${server.baseUri}/v1/statement",
+          Some("SELECT count(xxhash64(a.id + b.id)) AS n " +
+            "FROM range(30000000) a CROSS JOIN range(30000000) b"),
+          Seq("X-Presto-Session" -> s"query_max_run_time=$limit"))
+        val id = json(b).get("id").asText()
+        var err = ""
+        val deadline = System.currentTimeMillis() + 60000
+        while (err.isEmpty && System.currentTimeMillis() < deadline) {
+          val node = json(httpSend("GET", s"${server.baseUri}/v1/statement/$id/0")._2)
+          if (node.has("error")) err = node.get("error").get("message").asText()
+          else Thread.sleep(200)
+        }
+        // QueryTracker.java:187
+        assert(err == s"Query exceeded maximum time limit of $shown", s"got: $err")
+        assert(logState(id) == "FAILED")
       }
-      // QueryTracker.java:187
-      assert(err == "Query exceeded maximum time limit of 1.00s", s"got: $err")
-      assert(logState(id) == "FAILED")
     } finally server.stop()
   }
 
@@ -593,6 +596,48 @@ class LifecycleSpecs extends AnyFunSuite with BeforeAndAfterAll {
         Seq("X-Presto-Session" -> s"query_max_total_memory=${ceiling}B"))
       assert(rows.length == 1000)
     } finally server.stop()
+  }
+
+  test("QueryMetrics: one collector per context; Bench's cpu is its stages' CPU, counted once") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
+    import org.apache.spark.sql.graft.ListenerBusFlush
+    import graft.engine.QueryMetrics
+    val again = graft.engine.Engine.session("local[4]", shufflePartitions = 4)
+    val sc = spark.sparkContext
+    assert(again.sparkContext eq sc)
+    assert(ListenerBusFlush.listeners[QueryMetrics](sc).size == 1)
+    val stageCpuNs = new java.util.concurrent.atomic.AtomicLong()
+    val stages = new java.util.concurrent.atomic.AtomicLong()
+    val jobs = new java.util.concurrent.atomic.AtomicLong()
+    val probe = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+      override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
+        stages.incrementAndGet()
+        stageCpuNs.addAndGet(sc.stageInfo.taskMetrics.executorCpuTime)
+      }
+    }
+    ListenerBusFlush.drain(sc)
+    sc.addSparkListener(probe)
+    val run =
+      try Bench.once(again, "")((s, _) =>
+        s.range(0, 4000000, 1, 8).selectExpr("id % 97 AS k").groupBy("k").count())
+      finally sc.removeSparkListener(probe)
+    assert(run.stages >= 2 && run.cpu > 0, s"$run")
+    assert(run.cpu == stageCpuNs.get() / 1e9, s"$run vs ${stageCpuNs.get()} ns")
+    assert((run.jobs, run.stages) == ((jobs.get(), stages.get())), s"$run")
+
+    // armed statements leave no job or stage behind in the collector
+    val server = graft.sql.StatementServer.start(spark)
+    try {
+      for (_ <- 1 to 2) {
+        val rows = httpQuery(server.baseUri,
+          "SELECT id % 10 AS g, count(*) AS n FROM range(0, 1000000, 1, 8) GROUP BY id % 10",
+          Seq("X-Presto-Session" -> "query_max_total_memory=1TB"))
+        assert(rows.length == 10)
+      }
+    } finally server.stop()
+    ListenerBusFlush.drain(sc)
+    assert(QueryMetrics.of(sc).tracked == ((0, 0)))
   }
 
   // ---- concurrent protocol clients: header/session-state isolation ----
