@@ -64,13 +64,14 @@ object Bench {
   }
 
   final case class Run(wall: Double, cpu: Double, stealPct: Double, gcMs: Long,
-      compiles: Long, compileMs: Long, jobs: Long, stages: Long) {
+      compiles: Long, compileMs: Long, jobs: Long, stages: Long, bcastReused: Long) {
     /** The JSON fields the isolated child prints and BENCH_FULL carries. */
     def fields: String = s""""wall":${r3(wall)},"cpu":${r3(cpu)},"steal_pct":${r3(stealPct)},""" +
-      s""""gc_ms":$gcMs,"compiles":$compiles,"compile_ms":$compileMs,"jobs":$jobs,"stages":$stages"""
+      s""""gc_ms":$gcMs,"compiles":$compiles,"compile_ms":$compileMs,"jobs":$jobs,"stages":$stages,""" +
+      s""""bcast_reused":$bcastReused"""
   }
 
-  private val failed = Run(-1.0, -1.0, 0.0, 0L, 0L, 0L, 0L, 0L)
+  private val failed = Run(-1.0, -1.0, 0.0, 0L, 0L, 0L, 0L, 0L, 0L)
 
   /** Generated classes compiled by Janino in this JVM so far (driver and
     * local tasks alike; a compiled-class cache hit does not count), and
@@ -79,11 +80,13 @@ object Bench {
     (org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount,
       org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator.compileTime)
 
-  /** One measured run. cpu (immune to host stalls), jobs and stages come
-    * from the context's [[QueryMetrics]], the bus drained on both sides of
-    * the window so stage events land in the right query. gcMs = driver-JVM
-    * stop-the-world GC time inside the window; compiles/compileMs =
-    * generated classes compiled inside the window and the time that took.
+  /** One measured run. cpu (immune to host stalls), jobs, stages and
+    * bcastReused (broadcasts served from the context's cache, so a warm
+    * run reads as one) come from the context's [[QueryMetrics]], the bus
+    * drained on both sides of the window so stage events land in the
+    * right query. gcMs = driver-JVM stop-the-world GC time inside the
+    * window; compiles/compileMs = generated classes compiled inside the
+    * window and the time that took.
     */
   private[graft] def once(spark: SparkSession, sfDir: String)(
       fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Run = {
@@ -104,7 +107,8 @@ object Bench {
     val stealPct =
       if (tot1 > tot0) 100.0 * (st1 - st0) / (tot1 - tot0) else 0.0
     Run(wall, (m1.cpuNs - m0.cpuNs) / 1e9, stealPct, g1 - g0, k1 - k0,
-      (kNs1 - kNs0) / 1000000L, m1.jobs - m0.jobs, m1.stages - m0.stages)
+      (kNs1 - kNs0) / 1000000L, m1.jobs - m0.jobs, m1.stages - m0.stages,
+      m1.bcastReused - m0.bcastReused)
   }
 
   private def r3(v: Double): String = "%.3f".formatLocal(java.util.Locale.ROOT, v)
@@ -191,7 +195,8 @@ object Bench {
             e.getKey -> Run(v.path("wall").asDouble(-1.0), v.path("cpu").asDouble(-1.0),
               v.path("steal_pct").asDouble(0.0), v.path("gc_ms").asLong(0L),
               v.path("compiles").asLong(0L), v.path("compile_ms").asLong(0L),
-              v.path("jobs").asLong(0L), v.path("stages").asLong(0L))
+              v.path("jobs").asLong(0L), v.path("stages").asLong(0L),
+              v.path("bcast_reused").asLong(0L))
           }.toMap
           (xmxMb, qs)
         }
@@ -336,7 +341,7 @@ object Bench {
     }.mkString("{", ",", "}")
     val inflatedJson = inflated.toSeq.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")
     val full =
-      s"""{"metric":"total","value":${r3(wallTotal)},"cpu":${r3(cpuTotal)},"unit":"sec","n_queries":${results.size},"steal_pct":${r3(runStealPct)},$hostJson,"methodology":"min-of-2 wall per query, second pass after full suite; cpu = executorCpuTime of the min run; steal_pct = percent (0-100) of host /proc/stat jiffies stolen during the window, same unit per-query and total; gc_ms = driver-JVM STW GC ms inside the window; compiles/compile_ms = generated classes Janino compiled inside the window and the ms it took (a compiled-class cache hit is not counted); jobs/stages = Spark jobs started and stages completed inside the window; 10 slowest re-timed as isolated in a FORKED fresh JVM at isolated_xmx_mb (warm pass + min-of-2), plus every query whose wall is >2x its wall in the previous committed BENCH_FULL of the same sf and nproc (listed in retimed_inflated)","isolated_forked":${forked.isDefined},"isolated_xmx_mb":$isolatedXmxMb,"retimed_inflated":$inflatedJson,"queries":$fullQs,"failures":$failures,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${r3(wallTotal)},"cpu":${r3(cpuTotal)},"unit":"sec","n_queries":${results.size},"steal_pct":${r3(runStealPct)},$hostJson,"methodology":"min-of-2 wall per query, second pass after full suite; cpu = executorCpuTime of the min run; steal_pct = percent (0-100) of host /proc/stat jiffies stolen during the window, same unit per-query and total; gc_ms = driver-JVM STW GC ms inside the window; compiles/compile_ms = generated classes Janino compiled inside the window and the ms it took (a compiled-class cache hit is not counted); jobs/stages = Spark jobs started and stages completed inside the window; bcast_reused = broadcast relations served from the context's cross-statement cache inside the window, so a min run that is a warm-cache run says so; 10 slowest re-timed as isolated in a FORKED fresh JVM at isolated_xmx_mb (warm pass + min-of-2), plus every query whose wall is >2x its wall in the previous committed BENCH_FULL of the same sf and nproc (listed in retimed_inflated)","isolated_forked":${forked.isDefined},"isolated_xmx_mb":$isolatedXmxMb,"retimed_inflated":$inflatedJson,"queries":$fullQs,"failures":$failures,"sf":"$sfDir"}"""
     java.nio.file.Files.write(java.nio.file.Paths.get("BENCH_FULL.json"),
       full.getBytes(java.nio.charset.StandardCharsets.UTF_8))
 

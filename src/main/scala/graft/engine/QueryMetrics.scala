@@ -3,10 +3,12 @@ package graft.engine
 import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.AtomicLong
 
-import org.apache.spark.SparkContext
+import org.apache.spark.{SparkConf, SparkContext}
 import org.apache.spark.scheduler._
 import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionEnd
 import org.apache.spark.sql.graft.ListenerBusFlush
+
+import graft.plans.BroadcastReuse
 
 /** The engine's one listener-bus collector: [[Engine.session]] names it in
   * `spark.extraListeners`, so each SparkContext has exactly one, found by
@@ -14,17 +16,24 @@ import org.apache.spark.sql.graft.ListenerBusFlush
   * around a measured run, enforces `QueryLimits`' per-job-group memory
   * ceilings, and routes `qstats:` observations to [[graft.tools.QueryStats]].
   * Events arrive asynchronously: drain the bus (`ListenerBusFlush.drain`)
-  * before reading the totals of a finished action.
+  * before reading the totals of a finished action. It also holds the
+  * context's cross-statement broadcast cache ([[BroadcastReuse]]), bounded
+  * by Spark's storage region under `conf` and dropped when the context
+  * stops.
   */
-final class QueryMetrics extends SparkListener {
+final class QueryMetrics(conf: SparkConf) extends SparkListener {
   import QueryMetrics._
 
   private val cpuNs = new AtomicLong()
   private val jobs = new AtomicLong()
   private val stages = new AtomicLong()
 
-  /** Executor CPU, jobs started and stages completed on this context. */
-  def totals: Totals = Totals(cpuNs.get(), jobs.get(), stages.get())
+  /** Broadcast relations built on this context, reused across statements. */
+  val broadcasts = new BroadcastReuse.Cache(BroadcastReuse.budget(conf))
+
+  /** Executor CPU, jobs started, stages completed and broadcasts served
+    * from [[broadcasts]] on this context. */
+  def totals: Totals = Totals(cpuNs.get(), jobs.get(), stages.get(), broadcasts.reused)
 
   // memory ceilings by job group; the job -> group and stage -> job maps
   // hold only jobs of a group with a ceiling, from job start to job end
@@ -109,6 +118,8 @@ final class QueryMetrics extends SparkListener {
     if (used > c.bytes) c.onExceed()
   }
 
+  override def onApplicationEnd(end: SparkListenerApplicationEnd): Unit = broadcasts.clear()
+
   override def onOtherEvent(event: SparkListenerEvent): Unit = event match {
     case end: SparkListenerSQLExecutionEnd =>
       ListenerBusFlush.succeeded(end)
@@ -119,7 +130,7 @@ final class QueryMetrics extends SparkListener {
 
 object QueryMetrics {
 
-  final case class Totals(cpuNs: Long, jobs: Long, stages: Long)
+  final case class Totals(cpuNs: Long, jobs: Long, stages: Long, bcastReused: Long)
 
   /** One job group's memory ceiling and its accounting, guarded by the
     * instance: launch time of each running task, and (launch, end, bytes)

@@ -19,7 +19,8 @@ import graft.sql.ResourceGroups.{parseDataSize, parseDuration}
   *
   * Spark mapping: every front-door statement is tagged with its query
   * id as the Spark job group, so "fail the query" = cancel the job
-  * group (interrupting running tasks) + transition the query log entry,
+  * group and its future jobs (interrupting running tasks) + transition
+  * the query log entry,
   * exactly the kill_query path. Time limits are a driver-side
   * ScheduledExecutor (O(1) per query, no polling). The memory ceiling
   * is best-effort by Spark's nature — executors own their memory and
@@ -64,8 +65,10 @@ object QueryLimits {
     // null: disarmed (query finished) between schedule and fire
     if (spark != null && errors.putIfAbsent(queryId, message) == null) {
       // same kill path as CALL system.runtime.kill_query / DELETE:
-      // interrupt every job in the query's group, FAIL the log entry
-      spark.sparkContext.cancelJobGroup(queryId)
+      // interrupt every job in the query's group and refuse any it
+      // submits later (a limit can fire before the first job), FAIL the
+      // log entry
+      spark.sparkContext.cancelJobGroupAndFutureJobs(queryId)
       SystemTables.failIfActive(spark, queryId)
     }
   }

@@ -46,7 +46,7 @@ import org.apache.spark.sql.types._
   * pages of buffered rows, not at the full result set — the driver's
   * memory for a 100 TB result drain is O(pageSize x 16). GET handlers
   * never touch Spark: they only poll the queue, so the job-group
-  * thread-local stays on the worker and DELETE's cancelJobGroup
+  * thread-local stays on the worker and DELETE's job-group cancel
   * interrupts the real execution. A GET parks on the queue holding only
   * the query's poll lock (one GET of a query at a time), never the query
   * monitor, so DELETE and the kill verbs never wait behind a parked poll.

@@ -101,14 +101,18 @@ object SystemTables {
   }
 
   /** CALL system.runtime.kill_query(id) — KillQueryProcedure.java:
-    * cancels every Spark job tagged with the query's job group (the
-    * front door tags the calling thread per statement, and Spark job
-    * groups are sticky thread-locals, so later actions on a returned
-    * lazy DataFrame from that thread carry the id). Marks the log
-    * entry FAILED like the reference's generic user-cancel error.
+    * cancels every Spark job tagged with the query's job group, and
+    * every job submitted to it later (the front door tags the calling
+    * thread per statement, and Spark job groups are sticky
+    * thread-locals, so later actions on a returned lazy DataFrame from
+    * that thread carry the id; a kill that lands before the first job
+    * must still stop it). Spark remembers the last
+    * `spark.scheduler.numCancelledJobGroupsToTrack` cancelled groups;
+    * query ids are unique. Marks the log entry FAILED like the
+    * reference's generic user-cancel error.
     */
   def killQuery(spark: SparkSession, id: String): Unit = {
-    spark.sparkContext.cancelJobGroup(id)
+    spark.sparkContext.cancelJobGroupAndFutureJobs(id)
     val l = logOf(spark)
     l.synchronized {
       val i = l.indexWhere(_.id == id)

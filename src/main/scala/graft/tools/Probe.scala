@@ -6,15 +6,17 @@ import java.nio.file.{Files, Paths}
 import graft.{Bench, SparkEntry}
 
 /** Dev probe: one warm session on the bench configuration (`Bench.start`)
-  * and Bench's own measured run (`Bench.once`: wall, executor CPU, jobs
-  * and stages from the context's `graft.engine.QueryMetrics` collector,
+  * and Bench's own measured run (`Bench.once`: wall, executor CPU, jobs,
+  * stages and broadcasts reused from the context's
+  * `graft.engine.QueryMetrics` collector,
   * host steal, driver GC, generated classes compiled), in three modes.
   *
   * Usage:
   *   sbt "runMain graft.tools.Probe time <sfDir> <n> <query...>"
   *     times each named bench query n times, back to back, and prints one
   *     line per run with BENCH_FULL's fields (wall and CPU s, host steal %,
-  *     driver GC ms, classes compiled, compile ms, jobs, stages). A
+  *     driver GC ms, classes compiled, compile ms, jobs, stages, broadcasts
+  *     served from the context's cache). A
   *     back-to-back repeat always finds its classes in the compiled-class
   *     cache, so run 2 and later say nothing about traffic that interleaves
   *     many statements: to see codegen cost under rotation, time the texts
@@ -23,6 +25,8 @@ import graft.{Bench, SparkEntry}
   *     times each `;;`-separated Spark SQL statement in the file n times.
   *   sbt "runMain graft.tools.Probe plan <sfDir> <outDir> <tag> <query...>"
   *     writes `<outDir>/<query>_<tag>.txt`, the formatted physical plan.
+  * Every mode ends with the context's broadcast cache: entries, their
+  * summed dataSize against the byte budget, and broadcasts reused.
   */
 object Probe {
   private val usage = "usage: Probe time <sfDir> <n> <query...> | " +
@@ -59,6 +63,11 @@ object Probe {
           println(s"[probe] $name -> $file (${plan.length} chars)")
         }
       case other => sys.error(s"unknown mode '$other'; $usage")
-    } finally spark.stop()
+    } finally {
+      val cache = graft.engine.QueryMetrics.of(spark.sparkContext).broadcasts
+      println(s"[probe] broadcast cache: ${cache.size} entries, ${cache.bytes} of ${cache.budget} " +
+        s"bytes, ${cache.reused} reused")
+      spark.stop()
+    }
   }
 }

@@ -598,6 +598,70 @@ class LifecycleSpecs extends AnyFunSuite with BeforeAndAfterAll {
     } finally server.stop()
   }
 
+  test("a kill or an expired limit before the first job stops every later job of the query") {
+    import org.apache.spark.scheduler.{JobSucceeded, SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+    import org.apache.spark.sql.graft.ListenerBusFlush
+    import graft.engine.QueryMetrics
+    val sc = spark.sparkContext
+    val dir = java.nio.file.Files.createTempDirectory("kill-first").toFile
+    // a files-only broadcast join: a completed build would enter the cache
+    spark.range(0, 200000).selectExpr("id % 100 AS f").write.parquet(s"$dir/fact")
+    spark.range(0, 100).selectExpr("id AS k").write.parquet(s"$dir/dim")
+    spark.read.parquet(s"$dir/fact").createOrReplaceTempView("kill_fact")
+    spark.read.parquet(s"$dir/dim").createOrReplaceTempView("kill_dim")
+    val text = "SELECT count(*) FROM kill_fact JOIN kill_dim ON f = k"
+    val groupOf = new java.util.concurrent.ConcurrentHashMap[Integer, String]()
+    val succeeded = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val probe = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        Option(js.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .foreach(g => groupOf.put(js.jobId, g))
+      override def onJobEnd(je: SparkListenerJobEnd): Unit =
+        if (je.jobResult == JobSucceeded) Option(groupOf.get(je.jobId)).foreach(succeeded.add)
+    }
+    val cache = QueryMetrics.of(sc).broadcasts
+    /** Run `text` in job group `id` after `kill` has run; it must fail,
+      * with no job of the group completing and no broadcast cached. */
+    def killedFirst(id: String)(kill: => Unit): Unit = {
+      kill
+      val entries = cache.size
+      sc.setJobGroup(id, "killed before its first job", interruptOnCancel = true)
+      try intercept[Exception](spark.sql(text).collect())
+      finally sc.clearJobGroup()
+      ListenerBusFlush.drain(sc)
+      assert(!succeeded.contains(id), s"a job of $id completed after the kill")
+      assert(cache.size == entries, s"$id cached a broadcast")
+    }
+    sc.addSparkListener(probe)
+    try {
+      val killed = s"kill-first-${java.util.UUID.randomUUID}"
+      killedFirst(killed)(PrestoSql.sql(spark, s"CALL system.runtime.kill_query('$killed')"))
+      // created a minute ago with a 1s limit: the deadline has passed when
+      // armed, and the kill lands before the statement submits a job
+      val expired = s"expired-first-${java.util.UUID.randomUUID}"
+      var disarm: () => Unit = () => ()
+      killedFirst(expired) {
+        disarm = graft.sql.QueryLimits.arm(spark, expired, System.currentTimeMillis() - 60000,
+          Map("query_max_run_time" -> "1s", "query_max_total_memory" -> "1TB"))
+        val deadline = System.currentTimeMillis() + 30000
+        while (graft.sql.QueryLimits.errorFor(expired).isEmpty && System.currentTimeMillis() < deadline)
+          Thread.sleep(10)
+        assert(graft.sql.QueryLimits.errorFor(expired).contains(
+          "Query exceeded maximum time limit of 1.00s"))
+      }
+      disarm()
+      ListenerBusFlush.drain(sc)
+      assert(QueryMetrics.of(sc).tracked == ((0, 0)))
+      // the same text in a live group runs, builds and caches its broadcast
+      val entries = cache.size
+      assert(spark.sql(text).collect().head.getLong(0) == 200000L)
+      assert(cache.size == entries + 1)
+    } finally {
+      sc.removeSparkListener(probe)
+      org.apache.commons.io.FileUtils.deleteQuietly(dir)
+    }
+  }
+
   test("QueryMetrics: one collector per context; Bench's cpu is its stages' CPU, counted once") {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
     import org.apache.spark.sql.graft.ListenerBusFlush
